@@ -14,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   * INSERT statement per message (/root/reference/main.go:95,
   * db/db.go:259-264) — and publishes no numbers (BASELINE.md). This
   * measures the engine's replacement: micro-batched, partition-parallel,
-  * bulk-appended.
+  * bulk-appended. The JSON line carries the Spark slot count and the
+  * host steal over the drain (`Tuning.stealPct`), which bounds how far
+  * two runs' throughput can be compared.
   *
   * {{{ STREAM_BENCH_N=200000 sbt "runMain graft.examples.StreamBench" }}}
   */
@@ -22,18 +24,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("STREAM_BENCH_N", "200000").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Streaming shuffle partitions are sized to the PER-BATCH volume
-    // (the 4-shard source yields ~KB-scale micro-batches), not the box
-    // core count: AQE coalescing does not apply inside a streaming
-    // query, so a 32-way shuffle on a tiny batch pays 8x the per-task
-    // floor for no parallelism the 4 source partitions can feed.
-    // Measured at local[32], same window: 32 partitions 12.0k msgs/s,
-    // 4 partitions 18.0k. A production stream sizes this from expected
-    // rows-per-batch (Tuning.partsFor), exactly like the batch path.
-    val streamParts = sys.env.getOrElse("STREAM_BENCH_PARTITIONS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", streamParts)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -72,16 +64,19 @@ object StreamBench {
       router, Files.createTempDirectory("sb-ckpt").toString,
       rejectedDir = Some(Files.createTempDirectory("sb-rej").toString))
 
+    val jiffies0 = graft.Tuning.cpuJiffies()
     val t0 = System.nanoTime()
     q.processAllAvailable()
     val secs = (System.nanoTime() - t0) / 1e9
+    val steal = graft.Tuning.stealPct(jiffies0, graft.Tuning.cpuJiffies())
     q.stop()
 
     val routed = catalog.listTables()
       .map(t => catalog.read(t).count()).sum
     println(s"""{"metric":"ingest_throughput","messages":$n,""" +
       s""""routed_rows":$routed,"seconds":${f"$secs%.2f"},""" +
-      s""""msgs_per_sec":${(n / secs).toInt},"source_shards":$shards}""")
+      s""""msgs_per_sec":${(n / secs).toInt},"source_shards":$shards,""" +
+      s""""cpus":$cpus,"steal_pct":$steal}""")
     spark.stop()
   }
 }

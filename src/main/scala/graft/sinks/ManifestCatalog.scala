@@ -3,8 +3,10 @@ package graft.sinks
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.util.control.NonFatal
 
 import graft.registry.ColumnDef
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -439,6 +441,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   private val pendingSchemas =
     scala.collection.mutable.Map.empty[String, String]
   private var deferring = false
+
+  override def defersAppends: Boolean = true
 
   override def beginBatch(batchId: Long): Unit = synchronized {
     // pending adds from a previous FAILED batch are dropped — their
@@ -904,24 +908,24 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   }
 
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    val staging = new File(rootDir, s".staging-${java.util.UUID.randomUUID()}")
-    df.write.partitionBy("tableName")
-      .mode(SaveMode.Overwrite).parquet(staging.toString)
-    val added = Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("tableName=")).map { pdir =>
-        val table = WarehouseCatalog.unescapePartitionName(
-          pdir.getName.stripPrefix("tableName="))
-        val dest = new File(rootDir, table)
-        dest.mkdirs()
-        val moved = pdir.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map { f =>
-            if (!f.renameTo(new File(dest, f.getName)))
-              throw new java.io.IOException(s"move failed: $f")
-            f.getName
-          }.toSeq
-        table -> moved
-      }.toMap
-    rm(staging)
+    val added = withStaging(".staging-") { staging =>
+      df.write.partitionBy("tableName")
+        .mode(SaveMode.Overwrite).parquet(staging.toString)
+      Option(staging.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("tableName=")).map { pdir =>
+          val table = WarehouseCatalog.unescapePartitionName(
+            pdir.getName.stripPrefix("tableName="))
+          val dest = new File(rootDir, table)
+          dest.mkdirs()
+          val moved = pdir.listFiles().filter(_.getName.endsWith(".parquet"))
+            .map { f =>
+              if (!f.renameTo(new File(dest, f.getName)))
+                throw new java.io.IOException(s"move failed: $f")
+              f.getName
+            }.toSeq
+          table -> moved
+        }.toMap
+    }
     if (added.nonEmpty && !recordPending(added, Map.empty))
       commitVersion(None, added)
     true
@@ -1071,18 +1075,49 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   /** Write `df` to a staging dir and move the part files into the table
     * directory (invisible until a manifest commit references them). */
   private def writeParts(table: String, df: DataFrame): Seq[String] = {
-    val staging = new File(rootDir, s".rewrite-${java.util.UUID.randomUUID()}")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val dest = new File(rootDir, table)
-    dest.mkdirs()
-    val moved = Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map { f =>
-        if (!f.renameTo(new File(dest, f.getName)))
-          throw new java.io.IOException(s"move failed: $f")
-        f.getName
-      }.toSeq
-    rm(staging)
-    moved
+    withStaging(".rewrite-") { staging =>
+      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      val dest = new File(rootDir, table)
+      dest.mkdirs()
+      Option(staging.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet")).map { f =>
+          if (!f.renameTo(new File(dest, f.getName)))
+            throw new java.io.IOException(s"move failed: $f")
+          f.getName
+        }.toSeq
+    }
+  }
+
+  /** Run `write` against a fresh root-level staging directory
+    * (`<prefix><uuid>`, one of [[ManifestCatalog.StagingPrefixes]]) and
+    * remove the directory afterwards, also when the write fails. A failed
+    * Spark job returns while its other tasks are still being killed, and
+    * a task being killed can still create directories under its output
+    * path; so after a failure the removal first waits, for at most
+    * [[ManifestCatalog.StagingSettleMs]], until the write's jobs have ended
+    * and none of their tasks runs. A write that failed before any job
+    * ran (or whose job the status tracker has not seen yet) is not waited
+    * for; what a late task re-creates is left to [[vacuum]]. */
+  private def withStaging[T](prefix: String)(write: File => T): T = {
+    val staging = new File(rootDir, s"$prefix${java.util.UUID.randomUUID()}")
+    val tag = staging.getName
+    val sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try write(staging)
+    catch { case NonFatal(e) => awaitTasksEnded(tag); throw e }
+    finally { sc.removeJobTag(tag); rm(staging) }
+  }
+
+  private def awaitTasksEnded(tag: String): Unit = {
+    val st = spark.sparkContext.statusTracker
+    def settled: Boolean = {
+      val jobs = st.getJobIdsForTag(tag).toSeq.flatMap(st.getJobInfo(_))
+      jobs.forall(_.status != JobExecutionStatus.RUNNING) &&
+        jobs.flatMap(_.stageIds).flatMap(st.getStageInfo(_))
+          .forall(_.numActiveTasks == 0)
+    }
+    val deadline = System.currentTimeMillis() + ManifestCatalog.StagingSettleMs
+    while (!settled && System.currentTimeMillis() < deadline) Thread.sleep(10)
   }
 
   /** ONLINE compaction: snapshot the table's file list, rewrite exactly
@@ -1119,8 +1154,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   }
 
   /** Remove data files no manifest version can reach (compacted-away or
-    * orphaned by a crashed append), delta versions already folded into
-    * the latest checkpoint, and superseded checkpoints.
+    * orphaned by a crashed append), staging directories of writers that
+    * died mid-write, delta versions already folded into the latest
+    * checkpoint, and superseded checkpoints.
     *
     * `retentionMs` protects IN-FLIGHT writers: [[writeParts]] moves part
     * files into the table directory under their final names BEFORE the
@@ -1149,11 +1185,17 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       checkpointFiles().dropRight(1)
         .foreach { f => if (f.delete()) removed += 1 }
     }
+    // staging directories a killed process left behind (a failing write
+    // removes its own); an in-flight one keeps touching its files, so only
+    // trees whose newest entry is older than the window go
+    val dirs = Option(rootDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory)
+    dirs.filter(d => ManifestCatalog.StagingPrefixes
+        .exists(d.getName.startsWith) && newestMtime(d) <= cutoff)
+      .foreach { d => rm(d); removed += 1 }
     // scan every table directory on disk, not just committed tables — a
     // crashed first-append leaves orphans under a table no manifest knows
-    Option(rootDir.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && !d.getName.startsWith("_") &&
-        !d.getName.startsWith("."))
+    dirs.filter(d => !d.getName.startsWith("_") && !d.getName.startsWith("."))
       .foreach { dir =>
         val liveSet = live.getOrElse(dir.getName, Nil).toSet
         Option(dir.listFiles()).getOrElse(Array.empty)
@@ -1165,6 +1207,10 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   }
 
   def fileCount(table: String): Int = snapshot().getOrElse(table, Nil).size
+
+  private def newestMtime(f: File): Long =
+    (f.lastModified() +: Option(f.listFiles()).getOrElse(Array.empty[File])
+      .toSeq.map(newestMtime)).max
 
   private def rm(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -1191,4 +1237,15 @@ object ManifestCatalog {
     * single write job the default tolerates; deployments with longer
     * rewrites (a multi-hour compaction) should pass a larger window. */
   val DefaultVacuumRetentionMs: Long = 20L * 60 * 1000
+
+  /** Name prefixes of the root-level write staging directories
+    * (`appendRouted`, and `writeParts` under compaction and row-level
+    * rewrites) that [[ManifestCatalog.vacuum]] reclaims once stale. */
+  private[sinks] val StagingPrefixes: Seq[String] =
+    Seq(".staging-", ".rewrite-")
+
+  /** Longest wait, after a failed write, for its tasks to end before its
+    * staging directory is removed. What a task still re-creates after it
+    * is left to [[ManifestCatalog.vacuum]]. */
+  val StagingSettleMs: Long = 10L * 1000
 }

@@ -43,6 +43,12 @@ trait TableCatalog {
     * no-op — appends are visible immediately (at-least-once on the exact
     * crash boundary, as WarehouseCatalog documents). */
   def beginBatch(batchId: Long): Unit = ()
+  /** True when appends made after [[beginBatch]] stay invisible until
+    * [[commitBatch]]. Only then may a batch's side output run beside its
+    * appends: where appends land at once, a failed side output after
+    * them would leave rows that the batch's replay appends again.
+    * Default: false. */
+  def defersAppends: Boolean = false
 }
 
 object TableCatalog {
@@ -91,21 +97,22 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
     val staging = new java.io.File(rootDir,
       s".staging-${java.util.UUID.randomUUID()}")
-    df.write.partitionBy("tableName")
-      .mode(SaveMode.Overwrite).parquet(staging.toString)
-    Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("tableName=")).foreach { pdir =>
-        val table = unescapePartitionName(
-          pdir.getName.stripPrefix("tableName="))
-        val dest = new java.io.File(rootDir, table)
-        dest.mkdirs()
-        pdir.listFiles().filter(_.getName.endsWith(".parquet"))
-          .foreach { f =>
-            if (!f.renameTo(new java.io.File(dest, f.getName)))
-              throw new java.io.IOException(s"move failed: $f")
-          }
-      }
-    rm(staging)
+    try {
+      df.write.partitionBy("tableName")
+        .mode(SaveMode.Overwrite).parquet(staging.toString)
+      Option(staging.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("tableName=")).foreach { pdir =>
+          val table = unescapePartitionName(
+            pdir.getName.stripPrefix("tableName="))
+          val dest = new java.io.File(rootDir, table)
+          dest.mkdirs()
+          pdir.listFiles().filter(_.getName.endsWith(".parquet"))
+            .foreach { f =>
+              if (!f.renameTo(new java.io.File(dest, f.getName)))
+                throw new java.io.IOException(s"move failed: $f")
+            }
+        }
+    } finally rm(staging)
     true
   }
 

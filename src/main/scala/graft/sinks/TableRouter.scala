@@ -1,8 +1,10 @@
 package graft.sinks
 
 import graft.registry.{ColumnDef, SchemaRegistry}
+import java.util.concurrent.{Callable, ExecutionException, Future}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Per-batch routing outcome (observability; the reference logs and dies
   * instead — /root/reference/main.go:21-31). `alreadyCommitted` = this
@@ -26,8 +28,9 @@ final case class RouteStats(
   *   - then W5 bulk append of the typed per-table slice.
   *
   * The only driver-side collect is the per-batch `(tableName, value_type)`
-  * histogram — cardinality = number of distinct sensors, thousands at most,
-  * never data-sized. Row data itself moves executor-side only.
+  * histogram ([[TableRouter.countBatch]]) — cardinality = number of
+  * distinct sensors, thousands at most, never data-sized. Row data itself
+  * moves executor-side only.
   *
   * Routed table schema is the reference's golden shape
   * `[client String, device String, value <inferred>]`
@@ -52,13 +55,13 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
       }
     }
 
-  /** Was this streaming batch already fully appended by a previous run?
-    * Lets the pipeline order its side outputs around the commit point. */
+  /** Was this streaming batch already fully appended by a previous run? */
   def isCommitted(batchId: Long): Boolean =
     batchId >= 0 && catalog.batchCommitted(batchId)
 
-  // shared bounded pool for append jobs — routeBatch runs per micro-batch
-  // and must not churn a fresh thread pool on the hot path
+  // shared bounded pool for a batch's writes (appends and side outputs) —
+  // routeBatch runs per micro-batch and must not churn a fresh thread
+  // pool on the hot path
   private lazy val appendPool =
     java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, appendParallelism),
@@ -85,30 +88,52 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     name != null && validName.pattern.matcher(name).matches()
 
   /** Route one micro-batch of parsed records (output of
-    * [[graft.ingest.Ingest.records]]).
+    * [[graft.ingest.Ingest.records]]), counting its histogram with
+    * [[TableRouter.countBatch]] first.
     *
     * With `batchId >= 0` (streaming), replayed batches the catalog has
     * already committed are skipped — effectively-once appends across
     * query restarts for catalogs that record commits. */
-  def routeBatch(batch: DataFrame, batchId: Long = -1L): RouteStats = {
+  def routeBatch(batch: DataFrame, batchId: Long = -1L): RouteStats =
+    routeBatch(batch, batchId, TableRouter.countBatch(batch).hist, None)
+
+  /** [[routeBatch]] with the caller's histogram of `batch` and an
+    * optional side-output write (the pipeline's rejected rows).
+    *
+    * The typed appends and the schema-reject sink run concurrently on the
+    * append pool, and all of them finish before `commitBatch`; any
+    * failure skips the commit and is rethrown. `sideWrite` joins them
+    * when the catalog holds appends back until the commit
+    * ([[TableCatalog.defersAppends]]); otherwise it runs first, on its
+    * own, so a failed one writes no routed rows. Either way the side
+    * output is at-least-once (a replay of the uncommitted batch writes it
+    * again) and a failed side output costs the routed rows nothing on
+    * replay.
+    *
+    * `batch` is read once per write and is not cached here: pass a
+    * persisted frame when it is costly to recompute. */
+  def routeBatch(batch: DataFrame, batchId: Long,
+      histogram: => TableRouter.Histogram,
+      sideWrite: Option[() => Unit]): RouteStats = {
     if (batchId >= 0 && catalog.batchCommitted(batchId))
       return RouteStats(Map.empty, Map.empty, alreadyCommitted = true)
+    val hist = histogram
+    val sideBeside = batchId >= 0 && catalog.defersAppends
+    if (!sideBeside) sideWrite.foreach(_())
     // transactional catalogs defer append visibility until the single
     // commitBatch below — rows + batch id become visible atomically
     if (batchId >= 0) catalog.beginBatch(batchId)
-    val recs = batch.persist()
-    try {
-      // (tableName, value_type) -> count; tiny, driver-side by design.
-      val hist = recs.groupBy("tableName", "value_type").count()
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2))
-
+    val writes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    def submit(body: => Unit): Unit = writes += appendPool.submit(
+      new Callable[Unit] { def call(): Unit = body })
+    val stats = try {
+      // needs no routing decision, so it starts before the DDL below
+      if (sideBeside) sideWrite.foreach(w => submit(w()))
       val appended = scala.collection.mutable.Map.empty[String, Long]
       val rejected = scala.collection.mutable.Map.empty[String, Long]
       val badNames = scala.collection.mutable.Map.empty[String, Long]
       val appendTasks = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, String, Long)] // (table, vt, valueCol, n)
+        .empty[(String, String, String)] // (table, vt, valueCol)
 
       // Phase 1 (serial, driver): name policy + DDL + schema decisions —
       // cheap, order-sensitive (first sight fixes the schema).
@@ -134,7 +159,8 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
               case None =>
                 val valueCol =
                   if (tableType == "String") "value_s" else "value_d"
-                appendTasks += ((table, vt, valueCol, n))
+                appendTasks += ((table, vt, valueCol))
+                appended(table) = appended.getOrElse(table, 0L) + n
               case Some(_) =>
                 rejected(table) = rejected.getOrElse(table, 0L) + n
             }
@@ -144,40 +170,27 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
       // Phase 2: appends. Fast path — ONE dynamic-partitioned write job
       // per value type (validated tasks always have vt == table type, so
       // there are at most 2 groups), covering every table in the slice.
-      // Catalogs without a routed write (JDBC) fall back to bounded-
-      // parallel per-table jobs.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val byType = appendTasks.toSeq.groupBy(t => (t._2, t._3)).toSeq
-        .sortBy(_._1)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(appendPool)
-      locally {
-        val futures = byType.map { case ((vt, valueCol), tasks) =>
-          Future {
+      // Catalogs without a routed write (JDBC) fall back to per-table
+      // jobs, serial within the value type's pool thread.
+      appendTasks.toSeq.groupBy(t => (t._2, t._3)).toSeq.sortBy(_._1)
+        .foreach { case ((vt, valueCol), tasks) =>
+          submit {
             val tables = tasks.map(_._1)
-            val routedDf = recs
+            val routedDf = batch
               .filter(col("value_type") === vt &&
                 col("tableName").isInCollection(tables))
               .select(col("tableName"), col("client"), col("device"),
                 col(valueCol).as("value"))
-            val handled = catalog.appendRouted(routedDf, tables)
-            if (!handled) tasks.foreach { case (table, _, _, _) =>
-              catalog.append(table,
-                recs.filter(col("tableName") === table &&
-                    col("value_type") === vt)
-                  .select(col("client"), col("device"),
-                    col(valueCol).as("value")))
-            }
-            appended.synchronized {
-              tasks.foreach { case (table, _, _, n) =>
-                appended(table) = appended.getOrElse(table, 0L) + n
-              }
+            if (!catalog.appendRouted(routedDf, tables)) tables.foreach {
+              table =>
+                catalog.append(table,
+                  batch.filter(col("tableName") === table &&
+                      col("value_type") === vt)
+                    .select(col("client"), col("device"),
+                      col(valueCol).as("value")))
             }
           }
         }
-        Await.result(Future.sequence(futures), Duration.Inf)
-      }
 
       // schema-mismatched and name-invalid slices go to the configured
       // side output — "rejected" must mean visible, not counted away
@@ -192,12 +205,66 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
           val nameCond = badNames.keys.toSeq.sorted
             .map(t => col("tableName") === t)
           (mismatchCond ++ nameCond).reduceOption(_ || _)
-            .foreach(cond => sink(recs.filter(cond)))
+            .foreach(cond => submit(sink(batch.filter(cond))))
         }
+      RouteStats(appended.toMap, rejected.toMap, badNames.toMap)
+    } catch { case NonFatal(e) =>
+      // writes already submitted end before the batch fails; their
+      // failures ride along on the routing error
+      try awaitAll(writes.toSeq)
+      catch { case NonFatal(w) => e.addSuppressed(w) }
+      throw e
+    }
+    awaitAll(writes.toSeq)
 
-      if (batchId >= 0) catalog.commitBatch(batchId)
-      RouteStats(appended.synchronized(appended.toMap), rejected.toMap,
-        badNames.toMap)
-    } finally { recs.unpersist(); () }
+    if (batchId >= 0) catalog.commitBatch(batchId)
+    stats
+  }
+
+  /** Wait for every write; rethrow the first failure, the rest attached
+    * as suppressed. */
+  private def awaitAll(writes: Seq[Future[Unit]]): Unit = {
+    val failures = writes.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { e =>
+      failures.tail.foreach(e.addSuppressed); throw e
+    }
+  }
+}
+
+object TableRouter {
+  /** `(tableName, value_type, rows)`, sorted: one batch's routing input. */
+  type Histogram = Seq[(String, String, Long)]
+
+  /** One batch's row counts: rows with `valid` = false, and the
+    * histogram of the rest. */
+  final case class BatchCounts(invalid: Long, hist: Histogram)
+
+  /** Count `df` by `(valid, tableName, value_type)` in ONE Spark job with
+    * no shuffle: each partition folds its rows into a map holding at most
+    * one entry per (table, value type), and the driver merges the maps —
+    * thousands of entries at most, never data-sized. A frame without a
+    * `valid` column (the output of [[graft.ingest.Ingest.records]]) counts
+    * every row as valid. */
+  def countBatch(df: DataFrame): BatchCounts = {
+    val valid = if (df.columns.contains("valid")) col("valid") else lit(true)
+    val perPartition = df.select(valid, col("tableName"), col("value_type"))
+      .rdd.mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap
+          .empty[(Boolean, String, String), Long]
+        rows.foreach { r =>
+          val k = if (r.getBoolean(0)) (true, r.getString(1), r.getString(2))
+            else (false, null, null)
+          m(k) = m.getOrElse(k, 0L) + 1
+        }
+        m.iterator
+      }.collect()
+    val merged = perPartition.groupMapReduce(_._1)(_._2)(_ + _)
+    BatchCounts(
+      merged.getOrElse((false, null, null), 0L),
+      merged.toSeq.collect { case ((true, t, vt), n) => (t, vt, n) }
+        .sortBy(t => (t._1, t._2)))
   }
 }

@@ -46,8 +46,6 @@ object IngestPipeline {
       .load()
   }
 
-  /** Wire parse + route + rejected sink onto any (topic, payload[, ...])
-    * streaming frame and start it. */
   /** Thrown in strict-compat mode when a batch contains a bad message —
     * reproducing the reference's die-on-first-poison semantics
     * (main.go:21-31) for bug-for-bug comparisons. */
@@ -68,6 +66,8 @@ object IngestPipeline {
       maxResident: Int = Int.MaxValue,
       onUpdate: IncrementalClusters.Clusters => Unit = _ => ())
 
+  /** Wire parse + route + rejected sink onto any (topic, payload[, ...])
+    * streaming frame and start it. */
   def start(
       source: DataFrame,
       router: TableRouter,
@@ -88,36 +88,39 @@ object IngestPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The MQTT source is one ordered feed → one input partition;
-        // scatter before the parse so the chain runs on all cores
-        // (order is irrelevant once rows are routed by tableName).
-        // Parse ONCE and persist — records, rejected, and the strict
-        // check all derive from the parsed frame without re-running the
-        // regex/JSON chain per consumer.
-        val parsed = Ingest.parse(batch.select("topic", "payload")
-            .repartition(batch.sparkSession.sparkContext.defaultParallelism))
-          .persist()
+        // Coalesce, never shuffle: write tasks (and so files per routed
+        // table) never outnumber the task slots, and the input decides
+        // the width — a one-connector feed stays one partition, a sharded
+        // backlog folds down to the slot count. Parse ONCE and persist;
+        // ONE shuffle-free count over the parse (TableRouter.countBatch)
+        // then decides whether a rejected write happens, gates the strict
+        // probe and is the router's histogram.
+        val slots = batch.sparkSession.sparkContext.defaultParallelism
+        val parsed = Ingest.parse(
+          batch.select("topic", "payload").coalesce(slots)).persist()
         try {
+          val counts = TableRouter.countBatch(parsed)
           val rej = Ingest.rejectedOfParsed(parsed)
-          if (strictPoisonStop) {
+          if (strictPoisonStop && counts.invalid > 0) {
             // strict-compat: reference halts on the first bad message
-            val bad = rej.limit(1).collect()
-            if (bad.nonEmpty)
-              throw new PoisonMessageException(
-                s"poison message on topic '${bad.head.getAs[String]("topic")}'" +
-                  s": ${bad.head.getAs[String]("reason")}")
+            val bad = rej.limit(1).collect().head
+            throw new PoisonMessageException(
+              s"poison message on topic '${bad.getAs[String]("topic")}'" +
+                s": ${bad.getAs[String]("reason")}")
           }
-          // Side output BEFORE the data commit: if it ran after, a crash
-          // between commitBatch and the rejected write would lose those
-          // rows forever (the replay guard would skip them). This order
-          // gives the audit trail at-least-once (duplicates possible on
-          // replay of an uncommitted batch) and the data path
-          // effectively-once — the right asymmetry for an audit log.
-          if (!router.isCommitted(batchId)) rejectedDir.foreach { dir =>
-            if (!rej.isEmpty)
-              rej.write.mode("append").parquet(dir)
-          }
-          router.routeBatch(Ingest.recordsOfParsed(parsed), batchId)
+          // Side output BEFORE the data commit: the router runs it first,
+          // or beside the appends on a catalog that holds them back until
+          // the commit, and commits only once both succeeded. If it ran
+          // after, a crash between commitBatch and the rejected write
+          // would lose those rows forever (the replay guard would skip
+          // them). This order gives the audit trail at-least-once
+          // (duplicates possible on replay of an uncommitted batch) and
+          // the data path effectively-once — the right asymmetry for an
+          // audit log.
+          val rejectedWrite = rejectedDir.filter(_ => counts.invalid > 0)
+            .map(dir => () => rej.write.mode("append").parquet(dir))
+          router.routeBatch(Ingest.recordsOfParsed(parsed), batchId,
+            counts.hist, rejectedWrite)
           // standing cluster fold AFTER the data commit: a crash in
           // between replays the batch — the router skips (isCommitted)
           // and the fold runs (its own lastBatch guard), so neither

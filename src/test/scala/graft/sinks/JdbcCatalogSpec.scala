@@ -88,6 +88,42 @@ class JdbcCatalogSpec extends AnyFunSuite {
     assert(!registry2.contains(JdbcCatalog.BatchTable))
   }
 
+  test("a failed side write appends no rows; the restart appends them once") {
+    // JDBC appends are visible at once, so the side output (the
+    // pipeline's rejected rows) must succeed before any append starts
+    val (catalog, url) = freshDb()
+    val batch = batchOf(
+      ("/c/d/out/sensors/side", """{"value":1.0}"""),
+      ("/c/d/out/sensors/side", """{"value":2.0}"""))
+    val hist = TableRouter.countBatch(batch).hist
+    def rows(): Int = if (!catalog.listTables().contains("side")) 0 else {
+      val c = DriverManager.getConnection(url)
+      try {
+        val rs = c.createStatement()
+          .executeQuery("""SELECT COUNT(*) FROM "side"""")
+        rs.next(); rs.getInt(1)
+      } finally c.close()
+    }
+    val router1 = new TableRouter(new SchemaRegistry, catalog)
+    val e = intercept[java.io.IOException](router1.routeBatch(batch, 7L,
+      hist, Some(() => throw new java.io.IOException("disk full"))))
+    assert(e.getMessage == "disk full")
+    assert(!catalog.batchCommitted(7L))
+    assert(rows() == 0, "routed rows written before the side output")
+
+    // restart: fresh registry from the catalog, the side output works now
+    val registry2 = new SchemaRegistry
+    val router2 = new TableRouter(registry2, catalog)
+    router2.bootstrap()
+    var sideRuns = 0
+    val stats = router2.routeBatch(batch, 7L, hist, Some(() => sideRuns += 1))
+    assert(stats.appended == Map("side" -> 2L) && sideRuns == 1)
+    assert(catalog.batchCommitted(7L))
+    val replay = router2.routeBatch(batch, 7L, hist, Some(() => sideRuns += 1))
+    assert(replay.alreadyCommitted && sideRuns == 1)
+    assert(rows() == 2, "routed rows not exactly once")
+  }
+
   test("second batch appends without re-DDL; mismatch rejected") {
     val (catalog, url) = freshDb()
     val router = new TableRouter(new SchemaRegistry, catalog)

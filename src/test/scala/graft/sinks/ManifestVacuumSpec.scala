@@ -65,4 +65,54 @@ class ManifestVacuumSpec extends AnyFunSuite {
     assert(cat.vacuum(retentionMs = 0L) == 1)
     assert(!staged.exists())
   }
+
+  private def stagingDirs(root: String): Seq[String] =
+    Option(new File(root).listFiles()).getOrElse(Array.empty[File]).toSeq
+      .map(_.getName).filter(n =>
+        ManifestCatalog.StagingPrefixes.exists(n.startsWith))
+
+  test("a failed write leaves no staging directory behind") {
+    val root = freshRoot()
+    val cat = new ManifestCatalog(spark, root)
+    val boom = org.apache.spark.sql.functions.udf { (k: Long) =>
+      if (k == 2L) throw new IllegalStateException("boom"); k
+    }
+    // four tasks, one fails: the others are killed while the job fails
+    val bad = spark.range(0, 4, 1, 4).select(boom($"id").as("k"))
+    (1 to 5).foreach { _ =>
+      // routed append (.staging-*) and a plain append (.rewrite-*)
+      intercept[Exception](cat.appendRouted(
+        bad.select($"k", org.apache.spark.sql.functions.lit("t")
+          .as("tableName")), Seq("t")))
+      intercept[Exception](cat.append("t", bad))
+      assert(stagingDirs(root).isEmpty, s"leaked: ${stagingDirs(root)}")
+    }
+    assert(cat.listTables().isEmpty)
+  }
+
+  test("vacuum reclaims a stale staging directory, never a fresh one") {
+    val root = freshRoot()
+    val cat = new ManifestCatalog(spark, root)
+    def staging(name: String): File = {
+      val d = new File(root, s"$name/tableName=t")
+      d.mkdirs()
+      Files.write(new File(d, "part-0.parquet").toPath, Array[Byte](1))
+      new File(root, name)
+    }
+    val stale = staging(".staging-dead")
+    val staleRewrite = staging(".rewrite-dead")
+    val fresh = staging(".staging-live")
+    val old = System.currentTimeMillis() -
+      ManifestCatalog.DefaultVacuumRetentionMs - 60_000
+    Seq(stale, staleRewrite).foreach { d =>
+      def age(f: File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(age)
+        assert(f.setLastModified(old))
+      }
+      age(d)
+    }
+    assert(cat.vacuum() == 2)
+    assert(!stale.exists() && !staleRewrite.exists())
+    assert(fresh.exists(), "vacuum removed an in-flight writer's staging")
+  }
 }

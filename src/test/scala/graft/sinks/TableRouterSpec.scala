@@ -157,4 +157,23 @@ class TableRouterSpec extends AnyFunSuite {
     assert(stats.appended == Map("pres" -> 1L))
     assert(catalog.read("pres").count() == 2)
   }
+
+  test("a routing error is rethrown with a failed side write suppressed") {
+    val ddlFails = new TableCatalog {
+      def listTables(): Seq[String] = Nil
+      def describe(table: String): Seq[graft.registry.ColumnDef] = Nil
+      def createTable(table: String,
+          cols: Seq[graft.registry.ColumnDef]): Unit =
+        throw new IllegalStateException("ddl")
+      def append(table: String, df: org.apache.spark.sql.DataFrame): Unit = ()
+      override def defersAppends: Boolean = true
+    }
+    val router = new TableRouter(new SchemaRegistry, ddlFails)
+    val batch = batchOf(("/c/d/out/sensors/new", """{"value":1.0}"""))
+    val e = intercept[IllegalStateException](router.routeBatch(batch, 3L,
+      TableRouter.countBatch(batch).hist,
+      Some(() => throw new java.io.IOException("side"))))
+    assert(e.getMessage == "ddl")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("side"))
+  }
 }

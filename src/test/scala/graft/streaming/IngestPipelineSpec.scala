@@ -155,6 +155,54 @@ class IngestPipelineSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  test("a failed rejected write fails the batch before its commit") {
+    // the rejected write runs beside the routed appends; the batch must
+    // still commit only after it succeeded (crash point: side output)
+    val cid = s"rejfail-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val wh = Files.createTempDirectory("wh").toString
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    val rejDir = new java.io.File(Files.createTempDirectory("rej").toFile,
+      "rejected")
+    Files.write(rejDir.toPath, Array[Byte](1)) // a file, not a directory
+    def newQuery(router: TableRouter) = IngestPipeline.start(
+      IngestPipeline.mqttStream(spark, cid, Seq("#")), router, ckpt,
+      rejectedDir = Some(rejDir.toString))
+
+    val catalog1 = TableCatalog.default(spark, wh)
+    val router1 = new TableRouter(new SchemaRegistry, catalog1)
+    val q1 = newQuery(router1)
+    InMemoryBroker.publish("/c/d/out/sensors/w", """{"value":1.0}""")
+    InMemoryBroker.publish("/c/d/out/sensors/w", """{"value":2.0}""")
+    InMemoryBroker.publish("/c/d/out/sensors/w", """{"k":3}""")
+    InMemoryBroker.publish("bad-topic", """{"value":4.0}""")
+    try {
+      val failed = try { q1.processAllAvailable(); false }
+      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException =>
+        true }
+      assert(failed, "a failed rejected write must fail the query")
+      assert(q1.exception.isDefined)
+      assert(!router1.isCommitted(0L))
+      assert(catalog1.listTables().isEmpty, "routed rows became visible")
+    } finally if (q1.isActive) q1.stop()
+
+    // fix the side output and restart from the checkpoint
+    assert(rejDir.delete())
+    val catalog2 = TableCatalog.default(spark, wh)
+    val q2 = newQuery(new TableRouter(new SchemaRegistry, catalog2))
+    try {
+      q2.processAllAvailable()
+      val vals = catalog2.read("w").collect()
+        .map(_.getAs[Double]("value")).sorted.toSeq
+      assert(vals == Seq(1.0, 2.0), s"warehouse rows not exactly once: $vals")
+      val reasons = spark.read.parquet(rejDir.toString)
+        .select("reason").collect().map(_.getString(0)).toSet
+      assert(reasons == Set("invalid_topic", "missing_value"),
+        s"rejected rows not at least once: $reasons")
+    } finally q2.stop()
+  }
+
   test("committed batch replay is skipped (idempotent routeBatch)") {
     val wh = Files.createTempDirectory("wh").toString
     val catalog = TableCatalog.default(spark, wh)
