@@ -20,6 +20,7 @@ object WarehouseDemo {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master("local[4]")
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

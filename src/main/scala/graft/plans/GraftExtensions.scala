@@ -18,8 +18,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * every reference-derived operator maps onto Catalyst's existing plans
   * (SURVEY.md §4.1, §7.3), so the optimizer surface the engine adds is
   * exactly these expressions.
+  *
+  * Constructing it also installs the engine's in-process `file:`
+  * filesystem ([[graft.io.LocalFileSystem.install]]). Only the
+  * programmatic route does so early enough: `new GraftExtensions` runs
+  * before `getOrCreate`, so before the JVM caches its first `file:`
+  * filesystem. The `spark.sql.extensions` route builds the class inside
+  * `getOrCreate`, after the `SparkContext` exists; a session built that
+  * way should call `install()` itself before the builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  graft.io.LocalFileSystem.install()
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft.functions." + name, null, name, usage, "")

@@ -142,13 +142,14 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     }.toMap
   }
 
-  private def parse(n: Long, s: String): Version = {
-    val bid = """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
+  private def deltaBatchId(s: String): Option[Long] =
+    """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
       .map(_.group(1).toLong).filter(_ >= 0)
-    Version(n, bid, filesSection(s, "add"), filesSection(s, "replace"),
-      filesSection(s, "removed"), strsSection(s, "schemas"),
-      strsSection(s, "stats"))
-  }
+
+  private def parse(n: Long, s: String): Version =
+    Version(n, deltaBatchId(s), filesSection(s, "add"),
+      filesSection(s, "replace"), filesSection(s, "removed"),
+      strsSection(s, "schemas"), strsSection(s, "stats"))
 
   private def renderCheckpoint(c: Checkpoint): String = {
     val tables = c.tables.toSeq.sortBy(_._1).map { case (t, fs) =>
@@ -159,31 +160,39 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       s""""schemas":${strs(c.schemas)},"stats":${strs(c.stats)}}"""
   }
 
-  private def parseCheckpoint(n: Long, s: String): Checkpoint = {
-    val bids = """"batchIds":\[([^\]]*)\]""".r.findFirstMatchIn(s)
+  private def checkpointBatchIds(s: String): Seq[Long] =
+    """"batchIds":\[([^\]]*)\]""".r.findFirstMatchIn(s)
       .map(_.group(1)).getOrElse("").split(",").toSeq
       .filter(_.nonEmpty).map(_.trim.toLong)
+
+  private def parseCheckpoint(n: Long, s: String): Checkpoint =
     // "tables" must not greedily swallow the later "schemas" section —
     // filesSection's non-greedy regex stops at the first `}`, which is
     // the end of the tables map because file lists contain no braces
-    Checkpoint(n, filesSection(s, "tables"), bids,
+    Checkpoint(n, filesSection(s, "tables"), checkpointBatchIds(s),
       strsSection(s, "schemas"), strsSection(s, "stats"))
-  }
+
+  private def read(f: File): String =
+    new String(Files.readAllBytes(f.toPath), UTF_8)
+
+  /** (version, body) of the newest checkpoint file. */
+  private def latestCheckpointText(): Option[(Long, String)] =
+    checkpointFiles().lastOption.map { f =>
+      f.getName.stripPrefix("c").stripSuffix(".json").toLong -> read(f)
+    }
 
   private def latestCheckpoint(): Option[Checkpoint] =
-    checkpointFiles().lastOption.map { f =>
-      parseCheckpoint(
-        f.getName.stripPrefix("c").stripSuffix(".json").toLong,
-        new String(Files.readAllBytes(f.toPath), UTF_8))
-    }
+    latestCheckpointText().map { case (n, s) => parseCheckpoint(n, s) }
 
-  /** Delta versions strictly after `after` (all of them for -1). */
-  private def readDeltas(after: Long): Seq[Version] = versionFiles()
+  /** (version, body) of the delta files strictly after `after`. */
+  private def deltaTexts(after: Long): Seq[(Long, String)] = versionFiles()
     .map(f => f.getName.stripPrefix("v").stripSuffix(".json").toLong -> f)
     .filter(_._1 > after)
-    .map { case (n, f) =>
-      parse(n, new String(Files.readAllBytes(f.toPath), UTF_8))
-    }
+    .map { case (n, f) => n -> read(f) }
+
+  /** Delta versions strictly after `after` (all of them for -1). */
+  private def readDeltas(after: Long): Seq[Version] =
+    deltaTexts(after).map { case (n, s) => parse(n, s) }
 
   private def foldInto(base: Snap, deltas: Seq[Version]): Snap =
     deltas.foldLeft(base) { (acc, v) =>
@@ -425,7 +434,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
         StandardCopyOption.ATOMIC_MOVE)
       ()
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[manifest] checkpoint at v$n failed " +
           s"(non-fatal, fold continues from deltas): $e")
     }
@@ -931,11 +940,13 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     true
   }
 
+  /** Runs every batch, so it reads only the batch-id sections: the
+    * checkpoint's file lists, schemas and stats grow with the table. */
   override def batchCommitted(batchId: Long): Boolean = {
-    val ckpt = latestCheckpoint()
-    ckpt.exists(_.batchIds.contains(batchId)) ||
-      readDeltas(ckpt.map(_.n).getOrElse(-1L))
-        .exists(_.batchId.contains(batchId))
+    val ckpt = latestCheckpointText()
+    ckpt.exists(c => checkpointBatchIds(c._2).contains(batchId)) ||
+      deltaTexts(ckpt.map(_._1).getOrElse(-1L))
+        .exists(d => deltaBatchId(d._2).contains(batchId))
   }
 
   /** Publish the open batch (rows staged since [[beginBatch]]) together

@@ -240,6 +240,7 @@ object IngestDaemon {
 
     val spark = SparkSession.builder()
       .appName("graft-mqtt-ingest")
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "32")
       .getOrCreate()
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
   * per-suite sessions would dominate test time). */
 object TestSpark {
   lazy val spark: SparkSession = {
+    // every spec writes through the engine's file: filesystem
+    graft.io.LocalFileSystem.install()
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

@@ -145,6 +145,7 @@ object IngestJobGraphSpec {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[2]")
       .appName("ingest-job-graph")
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
