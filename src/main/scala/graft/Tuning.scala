@@ -14,8 +14,8 @@ import org.apache.spark.storage.StorageLevel
   * partition-file with the bypass-merge writer; forcing the sort-based
   * writer via spark.shuffle.sort.bypassMergeThreshold=0 cut a
   * kcore-round-shaped stage from ~15.5 s to ~2.4 s of task time at 64
-  * tasks, and right-sizing to 4 partitions cut it to ~0.5 s — the
-  * MicroProbe numbers). At 100 TB the same rule yields thousands of
+  * tasks, and right-sizing to 4 partitions cut it to ~0.5 s, measured
+  * in r12). At 100 TB the same rule yields thousands of
   * partitions: this is data-proportional sizing, not a bench special.
   */
 object Tuning {
@@ -132,9 +132,7 @@ object Tuning {
       // shuffles already explicitly sized via partsFor of a measured
       // count (measured: q153's 4-ring BFS ran 39 jobs under AQE vs 16
       // without)
-      (if (!java.lang.Boolean.parseBoolean(
-        System.getProperty("graft.superstep.aqe", "false")))
-        Seq("spark.sql.adaptive.enabled" -> "false") else Nil) ++
+      Seq("spark.sql.adaptive.enabled" -> "false") ++
       // no auto-broadcast inside the loop BY DEFAULT: each broadcast
       // build is its own driver-side collect JOB (per round, per
       // side), and where the loop's big side is a persisted
@@ -150,9 +148,8 @@ object Tuning {
       // materialized checkpoint (LogicalRDD sizes are real, not
       // guesses), so Spark's own 10 MB threshold makes the safe call
       // at every scale — broadcast at test scale, shuffle at 100 TB.
-      (if (!allowBroadcast && java.lang.Boolean.parseBoolean(
-        System.getProperty("graft.superstep.noBroadcast", "true")))
-        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1") else Nil)
+      (if (allowBroadcast) Nil
+       else Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     withConfs(spark, confs: _*)(body)
   }
 

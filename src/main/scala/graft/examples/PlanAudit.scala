@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for representative queries, plus
   * automated checks of the plan properties that matter at 100 TB:
@@ -24,14 +23,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // extension-path sanity: the native functions must resolve from pure
@@ -893,13 +885,7 @@ object PlanAudit {
     // the audited plans warm the per-session artifact caches (coEdges,
     // prGraph, BPE, ground truth, LSH) — release like Bench/Verify do,
     // honoring the caches' standalone-caller contract
-    try {
-      graft.queries.Dedup.releaseCandidateIndex(spark)
-      graft.queries.Graph.releaseCoEdges(spark)
-      graft.queries.TextAnalysis.releaseBpe(spark)
-      graft.queries.Similarity.releaseGroundTruth(spark)
-      graft.Resources.releaseAll()
-    } catch { case _: Throwable => () }
+    graft.GraftSession.release(spark)
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

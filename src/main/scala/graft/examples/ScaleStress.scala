@@ -3,7 +3,7 @@ package graft.examples
 import graft.Tables
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-linearity probe: runs the two core workloads (decimal aggregation
   * à la q01, MinHash-LSH candidate generation à la q31) at 1× and 10× the
@@ -38,19 +38,7 @@ object ScaleStress {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 32 like every other probe main (Bench/JobProbe/SuperstepProbe):
-    // the committed SCALE artifacts have always been 32-thread runs —
-    // a 4-thread run makes every CPU-bound 10× leg read ~4-8× slower
-    // and flags linear probes as superlinear (r14 lesson: two clean
-    // 4-cpu runs flagged bloom/triangle; the same code+data at 32
-    // cpus produced empty flag lists)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     VectorFunctions.register(spark)
     val jiffies0 = graft.Tuning.cpuJiffies()
@@ -1305,7 +1293,7 @@ object ScaleStress {
       case e: Throwable =>
         System.err.println(s"scale out write failed ($out): $e — JSON is on stdout")
     }
-    graft.Resources.releaseAll()
+    graft.GraftSession.release(spark)
     spark.stop()
   }
 }

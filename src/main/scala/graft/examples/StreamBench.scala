@@ -5,7 +5,6 @@ import graft.sinks.{TableCatalog, TableRouter}
 import graft.sources.mqtt.InMemoryBroker
 import graft.streaming.IngestPipeline
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** Ingest-path throughput: N pre-published MQTT messages through
   * source → parse → route → warehouse, one JSON line out.
@@ -23,12 +22,8 @@ import org.apache.spark.sql.SparkSession
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("STREAM_BENCH_N", "200000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.GraftSession.cpus
+    val spark = graft.GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val cid = "streambench"

@@ -6,13 +6,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Standard `SparkSessionExtensions` integration: makes the engine's
-  * native expressions first-class SQL functions in any session built with
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)           // programmatic
-  *   // or .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * native expressions first-class SQL functions in any session built by
+  * [[graft.GraftSession]], which adds `.withExtensions(new GraftExtensions)`
+  * (or one configured with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`).
   *
   * No custom Rule[LogicalPlan]/SparkStrategy is injected — deliberately:
   * every reference-derived operator maps onto Catalyst's existing plans

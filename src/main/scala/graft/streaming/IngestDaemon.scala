@@ -238,9 +238,8 @@ object IngestDaemon {
     require(cfg.consulHost.nonEmpty, "-consulHost is required (main.go:44)")
     require(cfg.dbHost.nonEmpty, "-DBHost is required (main.go:45)")
 
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .appName("graft-mqtt-ingest")
-      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "32")
       .getOrCreate()
 

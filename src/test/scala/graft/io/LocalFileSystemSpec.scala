@@ -84,7 +84,7 @@ class LocalFileSystemSpec extends AnyFunSuite {
       "engine classes") {
     // a fresh JVM, so nothing has cached a file: filesystem before
     val java = new File(System.getProperty("java.home"), "bin/java")
-    val cmd = Seq(java.toString, "-Xmx512m", "-Dspark.ui.enabled=false") ++
+    val cmd = Seq(java.toString, "-Xmx512m") ++
       org.apache.spark.launcher.JavaModuleOptions
         .defaultModuleOptionArray().toSeq ++
       Seq("-cp", System.getProperty("java.class.path"),
@@ -224,14 +224,10 @@ object LocalFileSystemSpec {
         s.getLen, s.isDirectory))
     } catch { case e: java.io.IOException => Left(e.getClass.getName) }
 
-  /** Child JVM: build a session only through GraftExtensions and report
+  /** Child JVM: build a session only through GraftSession and report
     * the classes it resolves for file: after writing through them. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[1]")
-      .appName("local-fs-spec")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(1).appName("local-fs-spec").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val out = Files.createTempDirectory("lfs-child").resolve("t").toString

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import graft.TestSpark
+import graft.{GraftSession, TestSpark}
+import graft.obs.QueryMetrics
 import graft.registry.SchemaRegistry
 import graft.sinks.{ManifestCatalog, TableRouter}
 import graft.sources.mqtt.{InMemoryBroker, MqttSource}
 import java.io.File
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,7 +35,7 @@ class IngestJobGraphSpec extends AnyFunSuite {
   test("4-connector batch at local[2]: files per table <= 2 slots") {
     // a session of its own needs a JVM of its own
     val java = new File(System.getProperty("java.home"), "bin/java")
-    val cmd = Seq(java.toString, "-Xmx1g", "-Dspark.ui.enabled=false") ++
+    val cmd = Seq(java.toString, "-Xmx1g") ++
       org.apache.spark.launcher.JavaModuleOptions
         .defaultModuleOptionArray().toSeq ++
       Seq("-cp", System.getProperty("java.class.path"),
@@ -90,17 +90,6 @@ object IngestJobGraphSpec {
   def expectedValid(n: Int): Long =
     (0 until n).count(i => i % 11 != 9 && i % 11 != 10).toLong
 
-  /** Jobs started, and the shuffle map stages in their graphs (every
-    * stage of a job but its result stage, skipped ones included). */
-  private final class Counter extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var shuffleMapStages = 0
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      jobs += 1
-      shuffleMapStages += e.stageInfos.size - 1
-    }
-  }
-
   /** Publish [[Messages]] mixed messages, then run them through
     * `IngestPipeline.start` with `shards` connector sessions (one input
     * partition each) and count what the batch cost. */
@@ -115,26 +104,24 @@ object IngestJobGraphSpec {
     val wh = Files.createTempDirectory("graph-wh").toString
     val rej = Files.createTempDirectory("graph-rej").toString
     val catalog = new ManifestCatalog(spark, wh)
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerDrain(sc)
-    val counter = new Counter
-    sc.addSparkListener(counter)
+    val metrics = QueryMetrics.install(spark.sparkContext)
+    metrics.reset()
     val q = IngestPipeline.start(source,
       new TableRouter(new SchemaRegistry, catalog),
       Files.createTempDirectory("graph-ckpt").toString,
       rejectedDir = Some(rej))
-    try {
+    val counts = try {
       q.processAllAvailable()
-      org.apache.spark.ListenerDrain(sc)
+      metrics.snapshot()
     } finally {
       q.stop()
-      sc.removeSparkListener(counter)
+      metrics.close()
     }
     val tables = catalog.listTables()
     Result(
       batches = q.recentProgress.count(_.numInputRows > 0),
-      jobs = counter.jobs,
-      shuffleMapStages = counter.shuffleMapStages,
+      jobs = counts.jobs.toInt,
+      shuffleMapStages = counts.shuffleMapStages.toInt,
       tables = tables.size,
       maxFilesPerTable = tables.map(catalog.fileCount).maxOption.getOrElse(0),
       routedRows = tables.map(t => catalog.read(t).count()).sum,
@@ -143,12 +130,7 @@ object IngestJobGraphSpec {
 
   /** The 4-connector run, in a `local[2]` session of its own. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .appName("ingest-job-graph")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local(2).appName("ingest-job-graph").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try println(runOneBatch(spark, shards = 4).line)
     finally spark.stop()
