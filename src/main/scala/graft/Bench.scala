@@ -13,37 +13,35 @@ object Bench {
   /** The deploy-time artifact builds the bench warms, in order — ONE
     * definition shared with every driver that warms them (the benchmark
     * harness too), so no driver can silently drift from the bench's
-    * actual warmup set when a round adds an artifact. */
-  val warmupSteps: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "layout" -> ((s, d) => Tables.ensureSplitLayout(s, d)),
-    "tables" -> ((s, d) => Tables.All.foreach { t =>
-      try { Tables.table(s, d, t).count(); () }
-      catch { case NonFatal(_) => () }
-    }),
-    "ivf" -> ((s, d) => { graft.queries.Similarity.ensureIvfIndex(s, d); () }),
-    "det" -> ((s, d) => { graft.queries.Similarity.ensureDetIndex(s, d); () }),
-    "pq" -> ((s, d) => { graft.queries.Similarity.ensurePqIndex(s, d); () }),
-    "lsh" -> ((s, d) => { graft.queries.Dedup.ensureCandidateIndex(s, d); () }),
-    "shingle" -> ((s, d) => { graft.queries.Dedup.ensureShingleIndex(s, d); () }),
-    "labels" -> ((s, d) => { graft.queries.Dedup.ensureClusterLabels(s, d); () }),
-    "bm25" -> ((s, d) => { graft.queries.TextAnalysis.ensureBm25(s, d); () }),
-    "lmScores" -> ((s, d) => { graft.queries.TextAnalysis.ensureLmScores(s, d); () }),
-    "probe" -> ((s, d) => { graft.queries.Training.ensureProbeModel(s, d); () }),
-    "spans" -> ((s, d) => { graft.queries.Dedup.ensureSpanIndex(s, d); () }),
-    "coEdges" -> ((s, d) => { graft.queries.Graph.ensureCoEdges(s, d); () }),
-    "prGraph" -> ((s, d) => { graft.queries.Graph.ensurePrGraph(s, d); () }),
-    "walkAdj" -> ((s, d) => { graft.queries.Graph.ensureWalkAdj(s, d); () }),
-    "hitsEdges" -> ((s, d) => { graft.queries.Graph.ensureHitsEdges(s, d); () }),
-    "bpe" -> ((s, d) => { graft.queries.TextAnalysis.ensureBpe(s, d); () }),
-    "groundTruth" -> ((s, d) => { graft.queries.Similarity.ensureGroundTruth(s, d); () }),
-    "cow" -> ((s, d) => { graft.queries.Warehouse.ensureMerged(s, d); () }),
-    "stats" -> ((s, d) => { graft.queries.Warehouse.ensureStatsTable(s, d); () }),
-    "zorder" -> ((s, d) => { graft.queries.Warehouse.ensureZorderTable(s, d); () }),
-    "bloom" -> ((s, d) => { graft.queries.Warehouse.ensureBloomTable(s, d); () }),
-    "dpp" -> ((s, d) => { graft.queries.Layout.ensureDpp(s, d); () }),
-    "bucket" -> ((s, d) => { graft.queries.Layout.ensureBucketed(s, d); () }),
-    "coverTok" -> ((s, d) => { graft.queries.Mixing.ensureCoverTok(s, d); () }),
-    "ivmBase" -> ((s, d) => { graft.queries.Warehouse.ensureIvmBase(s, d); () }))
+    * actual warmup set when a round adds an artifact. In-memory
+    * artifacts are listed as themselves; on-disk builders (which keep
+    * their own marker-file idempotence) as named steps. */
+  private[graft] val warmup: Seq[Artifact.Step] = {
+    import graft.queries._
+    Seq(
+      Artifact.step("layout")(Tables.ensureSplitLayout),
+      Artifact.step("tables")((s, d) => Tables.All.foreach { t =>
+        try Tables.table(s, d, t).count()
+        catch { case NonFatal(_) => () }
+      }),
+      Artifact.step("ivf")(Similarity.ensureIvfIndex),
+      Artifact.step("det")(Similarity.ensureDetIndex),
+      Artifact.step("pq")(Similarity.ensurePqIndex),
+      Dedup.candidates, Dedup.orderedShingles, Dedup.clusterLabels,
+      TextAnalysis.bm25PerDoc, TextAnalysis.lmScores, Training.trainedModel,
+      Dedup.spanFrame, Graph.coEdges, Graph.prGraph, Graph.walkAdj,
+      Graph.hitsEdges, TextAnalysis.trainedBpe, Similarity.exactTop5,
+      Artifact.step("cow")(Warehouse.ensureMerged),
+      Artifact.step("stats")(Warehouse.ensureStatsTable),
+      Artifact.step("zorder")(Warehouse.ensureZorderTable),
+      Artifact.step("bloom")(Warehouse.ensureBloomTable),
+      Artifact.step("dpp")(Layout.ensureDpp),
+      Artifact.step("bucket")(Layout.ensureBucketed),
+      Mixing.coverTok, Warehouse.ivmBase)
+  }
+
+  val warmupSteps: Seq[(String, (SparkSession, String) => Unit)] =
+    warmup.map(a => a.name -> a.warm _)
 
   /** Spark's fixed PER-QUERY floor in the caller's session: three
     * trivial plans — a 5-row scan, a 25-row aggregate, a broadcast join
@@ -89,11 +87,15 @@ object Bench {
     // A failed step is named in `warmup_failed` on both lines: the
     // queries that depend on its artifact then time a fallback path.
     val warmup = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val warmupJobs =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Long, Double)]
+    val warmupJobs = scala.collection.mutable.LinkedHashMap
+      .empty[String, (Long, Double, Long)]
     val warmupFailed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // block-manager bytes (memory + disk) of every cached RDD
+    def storedBytes(): Long = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.memSize + i.diskSize).sum
     def warm(name: String)(body: => Unit): Unit = {
       metrics.reset()
+      val b0 = storedBytes()
       val t0 = System.nanoTime()
       try body
       catch { case NonFatal(e) =>
@@ -102,7 +104,7 @@ object Bench {
       }
       warmup(name) = (System.nanoTime() - t0) / 1e9
       val m = metrics.snapshot()
-      warmupJobs(name) = (m.jobs, m.taskMs / 1e3)
+      warmupJobs(name) = (m.jobs, m.taskMs / 1e3, storedBytes() - b0)
     }
     warmupSteps.foreach { case (name, step) =>
       warm(name)(step(spark, sfDir))
@@ -265,10 +267,11 @@ object Bench {
       .mkString("{", ",", "}")
     def warmupJson = warmup.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    // per step: [jobs, task seconds] — separates floor-bound builds (many
-    // tiny jobs) from compute-bound ones (task time ≈ wall × cores)
-    def warmupJobsJson = warmupJobs.map { case (k, (j, ts)) =>
-      "\"" + k + "\":[" + j + "," + r3(ts) + "]"
+    // per step: [jobs, task seconds, bytes pinned] — separates
+    // floor-bound builds (many tiny jobs) from compute-bound ones (task
+    // time ≈ wall × cores); bytes is the step's change in cached storage
+    def warmupJobsJson = warmupJobs.map { case (k, (j, ts, b)) =>
+      "\"" + k + "\":[" + j + "," + r3(ts) + "," + b + "]"
     }.mkString("{", ",", "}")
     def warmupFailedJson =
       warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")

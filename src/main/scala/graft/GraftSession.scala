@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import scala.util.control.NonFatal
 
 /** The engine's session policy: the mains, the ingest daemon and the
   * test session are all built here, so they all run the same conf.
@@ -55,19 +54,10 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", slots.toString)
       .config("spark.ui.enabled", "false")
 
-  /** Releases every session-scoped artifact the queries pin (candidate
-    * index, co-edges, BPE, ground truth, then the shared memos), so no
-    * persisted frame outlives a run. Each release is attempted; a
-    * non-fatal failure is reported and the rest still run. */
-  def release(spark: SparkSession): Unit =
-    Seq[(String, () => Unit)](
-      "candidateIndex" -> (() => graft.queries.Dedup.releaseCandidateIndex(spark)),
-      "coEdges" -> (() => graft.queries.Graph.releaseCoEdges(spark)),
-      "bpe" -> (() => graft.queries.TextAnalysis.releaseBpe(spark)),
-      "groundTruth" -> (() => graft.queries.Similarity.releaseGroundTruth(spark)),
-      "resources" -> (() => Resources.releaseAll())
-    ).foreach { case (name, r) =>
-      try r()
-      catch { case NonFatal(e) => System.err.println(s"release $name failed: $e") }
-    }
+  /** Releases everything the queries pinned: every [[Artifact]] (its
+    * memo entries and frames) and every frame handed to
+    * [[Resources.retain]]. Call it before `stop()`, so no persisted frame
+    * outlives a run. `spark` is the session being wound down; the release
+    * covers every session, as [[Resources.releaseAll]] does. */
+  def release(spark: SparkSession): Unit = Resources.releaseAll()
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated parquet fixture tables
   * (/root/repo/TESTDATA.md). All queries take a `sfDir` so the same code
@@ -33,7 +34,7 @@ object Tables {
   // entries never outlive their session (r11 ADVICE/VERDICT: the memo
   // previously had NO invalidation and pinned dead sessions for the JVM
   // lifetime): (1) Resources.releaseAll() clears the whole memo, same
-  // lifecycle as labelsCache/kmvSkCache/hourlySkCache — every session
+  // lifecycle as the graft.Artifact memos — every session
   // owner in the repo (Bench/Verify/PlanAudit/ScaleStress/specs) calls
   // it before stop; (2) an application-end listener registered at a
   // session's FIRST insert evicts that session when its context stops
@@ -192,7 +193,7 @@ object Tables {
       val kids = f.listFiles()
       if (kids != null) kids.foreach(deleteQuietly)
       f.delete(); ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   /** Drop every memoized scan for `spark` — the application-end

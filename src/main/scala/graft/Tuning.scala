@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Size-aware partitioning for persisted artifact frames (graph edge
   * sets, prepared adjacencies, index frames).
@@ -33,7 +34,7 @@ object Tuning {
       val dir = java.nio.file.Files.createTempDirectory("graft-idx-")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         try deleteRecursively(dir.toFile)
-        catch { case _: Throwable => () }))
+        catch { case NonFatal(_) => () }))
       dir.toString
     })
 
@@ -250,7 +251,7 @@ object Tuning {
         .getOrElse("").trim.split("\\s+").drop(1).map(_.toLong)
       (f.sum, if (f.length > 7) f(7) else 0L)
     } finally src.close()
-  } catch { case _: Throwable => (0L, 0L) }
+  } catch { case NonFatal(_) => (0L, 0L) }
 
   /** Percent of guest CPU capacity stolen by the host between two
     * [[cpuJiffies]] readings (2 decimals; 0 when unmeasurable). */

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,7 +24,7 @@ object Verify {
       val p = java.nio.file.Paths.get("/proc/sys/vm/max_map_count")
       if (java.nio.file.Files.readString(p).trim.toLong < 2097152L)
         java.nio.file.Files.writeString(p, "2097152")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

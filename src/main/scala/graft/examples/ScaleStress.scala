@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.Tables
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -40,7 +39,6 @@ object ScaleStress {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    VectorFunctions.register(spark)
     val jiffies0 = graft.Tuning.cpuJiffies()
 
     def aggRun(li: DataFrame): Long =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -313,37 +312,5 @@ object KmNearest {
     if (bestNull) row.setNullAt(0) else row.setDouble(0, bestD)
     if (bestCellNull) row.setNullAt(1) else row.setInt(1, bestCell)
     row
-  }
-}
-
-/** Session-level registration so the expressions are usable from
-  * `expr("cosine_sim(a, b)")` / SQL. Idempotent. */
-object VectorFunctions {
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != n) throw new IllegalArgumentException(
-        s"$name expects $n argument(s), got ${exprs.length}")
-      build(exprs)
-    }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      arity("cosine_sim", 2)(e => CosineSim(e(0), e(1))), "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      arity("dot_product", 2)(e => DotProduct(e(0), e(1))), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      arity("minhash_sig", 1)(e => MinHashSig(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("simhash_sig",
-      arity("simhash_sig", 1)(e => SimHash(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("simhash_wide",
-      arity("simhash_wide", 1)(e => SimHashWide(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm",
-      arity("vec_norm", 1)(e => VecNorm(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("km_nearest",
-      arity("km_nearest", 2)(e => KmNearest(e(0), e(1))), "built-in")
-    reg.createOrReplaceTempFunction("z_value",
-      arity("z_value", 2)(e => ZValue(e(0), e(1))), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.expressions.Window
@@ -152,7 +151,6 @@ object IvfIndex {
     * materializes driver-side with no job). */
   private def nearestCells(centroids: DataFrame, probes: DataFrame,
       nProbe: Int): DataFrame = {
-    VectorFunctions.register(probes.sparkSession)
     probes
       .crossJoin(broadcast(centroids))
       .withColumn("c_score", expr("cosine_sim(probe_emb, centroid)"))
@@ -268,7 +266,6 @@ object IvfIndex {
   private[operators] def trainCentroids(embeddings: DataFrame, nCells: Int,
       iters: Int): DataFrame = {
     val spark = embeddings.sparkSession
-    VectorFunctions.register(spark)
     val q = quantize(embeddings)
     // orderBy+limit → TakeOrderedAndProject: per-partition top-nCells
     // then a driver merge of nCells rows — the full corpus is never
@@ -354,7 +351,6 @@ object IvfIndex {
   /** Scan the (already cell-restricted) corpus against the probe cells. */
   private def score(corpus: DataFrame, probeCells: DataFrame, k: Int)
       : DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     probeCells
       .join(corpus, Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))

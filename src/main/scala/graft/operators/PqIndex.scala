@@ -66,7 +66,6 @@ object PqIndex {
     * codebooks are broadcast 1-row struct arrays and every argmin is a
     * per-row fold ([[IvfIndex.argminCell]]). */
   def encode(embeddings: DataFrame, cb: Codebooks): DataFrame = {
-    graft.functions.VectorFunctions.register(embeddings.sparkSession)
     var df = IvfIndex.quantize(embeddings)
       .crossJoin(broadcast(IvfIndex.centroidArray(cb.coarse, "cs_co")))
     cb.subs.zipWithIndex.foreach { case (c, i) =>

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,7 +25,6 @@ object ZOrderLayout {
     * columns into `nFiles` output partitions (→ files when written). */
   def layout(df: DataFrame, c1: String, c2: String,
       nFiles: Int): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     df.withColumn("_z",
         expr(s"z_value(cast($c1 as bigint), cast($c2 as bigint))"))
       .repartitionByRange(nFiles, col("_z"))

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.functions.{CosineSim, DotProduct, MinHashSig, SimHash, VecNorm}
+import graft.functions.{CosineSim, DotProduct, KmNearest, MinHashSig, SimHash,
+  SimHashWide, VecNorm, ZValue}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -27,34 +28,44 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   graft.io.LocalFileSystem.install()
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions." + name, null, name, usage, "")
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, arity, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions." + name, null, name, usage, ""),
+        (exprs: Seq[Expression]) => {
+          if (exprs.length != arity) throw new IllegalArgumentException(
+            s"$name expects $arity argument(s), got ${exprs.length}")
+          build(exprs)
+        }))
+    }
+}
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two float vectors"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(tokens) - 16-hash MinHash signature over 3-token shingles"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head)))
-    e.injectFunction((FunctionIdentifier("simhash_sig"),
-      info("simhash_sig", "simhash_sig(tokens) - 16-bit SimHash over distinct tokens"),
-      (exprs: Seq[Expression]) => SimHash(exprs.head)))
-    e.injectFunction((FunctionIdentifier("vec_norm"),
-      info("vec_norm", "vec_norm(a) - L2 norm of a float vector"),
-      (exprs: Seq[Expression]) => VecNorm(exprs.head)))
-    e.injectFunction((FunctionIdentifier("simhash_wide"),
-      info("simhash_wide",
-        "simhash_wide(tokens) - 60-bit SimHash over distinct 3-token shingles"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.SimHashWide(exprs.head)))
-    e.injectFunction((FunctionIdentifier("z_value"),
-      info("z_value",
-        "z_value(a, b) - 21+21-bit Morton (z-order) interleave of two non-negative longs"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ZValue(exprs(0), exprs(1))))
-  }
+object GraftExtensions {
+  /** Every SQL function the engine adds: (name, arity, usage, builder). */
+  private val functions
+      : Seq[(String, Int, String, Seq[Expression] => Expression)] =
+    Seq(
+      ("cosine_sim", 2,
+        "cosine_sim(a, b) - cosine similarity of two float vectors",
+        e => CosineSim(e(0), e(1))),
+      ("dot_product", 2,
+        "dot_product(a, b) - dot product of two float vectors",
+        e => DotProduct(e(0), e(1))),
+      ("minhash_sig", 1,
+        "minhash_sig(tokens) - 16-hash MinHash signature over 3-token shingles",
+        e => MinHashSig(e.head)),
+      ("simhash_sig", 1,
+        "simhash_sig(tokens) - 16-bit SimHash over distinct tokens",
+        e => SimHash(e.head)),
+      ("simhash_wide", 1,
+        "simhash_wide(tokens) - 60-bit SimHash over distinct 3-token shingles",
+        e => SimHashWide(e.head)),
+      ("vec_norm", 1, "vec_norm(a) - L2 norm of a float vector",
+        e => VecNorm(e.head)),
+      ("km_nearest", 2,
+        "km_nearest(qv, cs) - (dist, cell) of the centroid in cs nearest to qv",
+        e => KmNearest(e(0), e(1))),
+      ("z_value", 2,
+        "z_value(a, b) - 21+21-bit Morton (z-order) interleave of two non-negative longs",
+        e => ZValue(e(0), e(1))))
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over `documents` (north-star surface, SURVEY.md
@@ -106,7 +106,6 @@ object Dedup {
     * path can pin it as a shared artifact ([[sigFrame]]). */
   private def sigsOf(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("mh", expr("minhash_sig(toks)"))
@@ -137,23 +136,15 @@ object Dedup {
     * banding config / estimation pass reads the stored sketches (16
     * longs/doc — sketch-sized at any scale). q196 re-bands it per
     * config, [[banded]] derives the standard-config bands from it, so
-    * neither re-tokenizes the corpus. Memoized per (session, corpus);
-    * released via Resources.releaseAll. */
-  private val sigFrameCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-  private val sigFrameHook = new java.util.concurrent.atomic.AtomicBoolean
-  private[queries] def sigFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    if (sigFrameHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => sigFrameCache.clear())
-    // plain localCheckpoint, NOT compactCheckpoint: every consumer
-    // fans the 16-long rows out (band explode ×4 configs, zip_with
-    // match counts), so collapsing the frame to partsFor(nDocs)
-    // partitions serializes that work — measured q196 1.7 → 1.9 s
-    // under the compacted form vs 1.0 s at scan parallelism
-    sigFrameCache.getOrElseUpdate(s"${graft.Resources.sessionKey(s)}:$d",
-      graft.Resources.retain(
-        sigsOf(Tables.documents(s, d)).localCheckpoint(true)))
+    * neither re-tokenizes the corpus. */
+  private[queries] val sigFrame = Artifact.frame("sigFrame", eager = true) {
+    (s, d) =>
+      // plain localCheckpoint, NOT compactCheckpoint: every consumer
+      // fans the 16-long rows out (band explode ×4 configs, zip_with
+      // match counts), so collapsing the frame to partsFor(nDocs)
+      // partitions serializes that work — measured q196 1.7 → 1.9 s
+      // under the compacted form vs 1.0 s at scan parallelism
+      sigsOf(Tables.documents(s, d)).localCheckpoint(true)
   }
 
   /** Distinct-shingle sets for an arbitrary (doc_id, text) frame — the
@@ -166,7 +157,7 @@ object Dedup {
       .select(col("doc_id"), col("shset"))
 
   private def banded(s: org.apache.spark.sql.SparkSession, d: String) =
-    bandsFromSigs(sigFrame(s, d))
+    bandsFromSigs(sigFrame.get(s, d))
 
   /** LSH candidate pairs (doc1 < doc2). Single-pass: group each bucket,
     * emit intra-bucket pairs — the expensive signature pipeline runs once
@@ -191,20 +182,13 @@ object Dedup {
     * index): q31 emits it, q33/q37 verify against it, q64 derives the
     * keep decision from it. Build it once per (session, corpus) and
     * persist — four queries over one corpus must not run the signature
-    * pipeline four times. [[ensureCandidateIndex]] is the warmup/setup
-    * entry point (bench calls it; first query otherwise pays the build). */
-  private val candCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[queries] def candidates(s: org.apache.spark.sql.SparkSession, d: String) =
-    candCache.getOrElseUpdate(s"${graft.Resources.sessionKey(s)}:$d",
+    * pipeline four times. Bench warms it; otherwise the first query
+    * pays the build. */
+  private[graft] val candidates =
+    Artifact.frame("lsh", uses = Seq(sigFrame)) { (s, d) =>
       buildCandidates(s, d).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureCandidateIndex(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    candidates(s, d).count()
-    ()
-  }
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The rarest-first ordered shingle frames are the shared artifact of
     * the EXACT-join family: q132 (Jaccard) and q150 (containment) both
@@ -212,117 +196,42 @@ object Dedup {
     * global-(df, hash)-ordered arrays with sizes) over the identical
     * hash domain. Build once per (session, corpus) and persist — the
     * candidate-index lifecycle; a corpus runs N exact joins over one
-    * ordering. Released with [[releaseCandidateIndex]]. */
-  private val shingleCache = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]
-  private[queries] def orderedShingles(
-      s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) =
-    shingleCache.getOrElseUpdate(s"${graft.Resources.sessionKey(s)}:$d", {
-      val shing = Tables.documents(s, d)
-        .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), expr(
-          s"array_distinct(transform($shinglesExpr, s -> $hash40))")
-          .as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ex = shing.select(col("doc_id"), explode(col("sh")).as("h"))
-      val dfc = ex.groupBy("h").agg(count(lit(1)).as("df"))
-      val ordered = ex.join(dfc, "h")
-        .groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("df"), col("h"))))
-          .as("o"))
-        .select(col("doc_id"), size(col("o")).as("sz"),
-          expr("transform(o, x -> x.h)").as("osh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (shing, ordered)
-    })
+    * ordering. */
+  private[graft] val orderedShingles = Artifact("shingle") { (s, d) =>
+    val shing = Tables.documents(s, d)
+      .withColumn("toks", split(col("text"), " "))
+      .filter(size(col("toks")) >= 3)
+      .select(col("doc_id"), expr(
+        s"array_distinct(transform($shinglesExpr, s -> $hash40))")
+        .as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ex = shing.select(col("doc_id"), explode(col("sh")).as("h"))
+    val dfc = ex.groupBy("h").agg(count(lit(1)).as("df"))
+    val ordered = ex.join(dfc, "h")
+      .groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("h"))))
+        .as("o"))
+      .select(col("doc_id"), size(col("o")).as("sz"),
+        expr("transform(o, x -> x.h)").as("osh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (shing, ordered)
+  } { case (shing, ordered) => Seq(shing, ordered) }
 
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureShingleIndex(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val (shing, ordered) = orderedShingles(s, d)
-    shing.count()
-    ordered.count()
-    ()
-  }
-
-  /** Release every cached candidate index built on `s` (all corpora).
-    * Call when the session's dedup work is over — Verify/Bench do, so no
-    * persisted frame outlives a run; long-lived sessions call it between
-    * corpus generations. */
   /** Shared CLUSTER-LABEL artifact: the min-label CC fixpoint over the
     * verified-pair graph is what q65 reports, q117 sizes, q159 merges
     * on, and q161 splits by — a production dedup job materializes the
-    * clustering ONCE and every downstream consumer reads it. Memoized
-    * per (session, corpus); the frame itself is the operator's
-    * Resources-retained localCheckpoint, so the memo registers a
-    * [[graft.Resources.onReleaseAll]] hook — releaseAll kills the
-    * checkpoint, and the hook clears the memo in the same breath so the
-    * next caller rebuilds instead of reading a dead frame. (q65b stays
-    * OUTSIDE the cache on purpose: it exists to exercise the
-    * alternating-star algorithm, not to reuse this fixpoint.) */
-  // ConcurrentHashMap, not TrieMap: computeIfAbsent evaluates the build
-  // at most once per absent key under the bin lock, so two concurrent
-  // first callers can't both run the CC fixpoint and strand the loser's
-  // retained checkpoint (TrieMap.getOrElseUpdate may evaluate twice and
-  // discard one result).
-  private val labelsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]
-  private val labelsHook = new java.util.concurrent.atomic.AtomicBoolean
-  private[queries] def clusterLabels(
-      s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    if (labelsHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => labelsCache.clear())
-    labelsCache.computeIfAbsent(s"${graft.Resources.sessionKey(s)}:$d", _ => {
+    * clustering ONCE and every downstream consumer reads it. The frame
+    * is the operator's localCheckpoint. (q65b stays OUTSIDE the memo on
+    * purpose: it exists to exercise the alternating-star algorithm, not
+    * to reuse this fixpoint.) */
+  private[graft] val clusterLabels =
+    Artifact.frame("labels", uses = Seq(pairStats)) { (s, d) =>
       val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
       val edges = verifiedPairs(s, d)
         .select(col("doc1").as("src"), col("doc2").as("dst"))
       graft.operators.ConnectedComponents.labels(nodes, edges)
         .select(col("id").as("doc_id"), col("component").as("cluster"))
-    })
-  }
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureClusterLabels(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
-    clusterLabels(s, d).count()
-    ()
-  }
-
-  def releaseCandidateIndex(s: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${graft.Resources.sessionKey(s)}:"
-    // the label memo points at Resources-owned checkpoints; dropping the
-    // keys here is enough (the storage is released by releaseAll, and
-    // the onReleaseAll hook clears any entries for OTHER sessions too)
-    labelsCache.keySet.removeIf(_.startsWith(prefix))
-    candCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      candCache.remove(k).foreach { df =>
-        try df.unpersist()
-        catch { case _: Throwable => () }
-      }
     }
-    // the ordered-shingle index shares the release point: both are
-    // Dedup's per-(session, corpus) persisted artifacts
-    shingleCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      shingleCache.remove(k).foreach { case (shing, ordered) =>
-        try { shing.unpersist(); ordered.unpersist() }
-        catch { case _: Throwable => () }
-      }
-    }
-    // the signature frame is the candidate index's substrate (banded
-    // derives from it) — releasing the index releases it too, or a
-    // rebuild-then-release cycle leaks the checkpoint (HygieneSpec)
-    sigFrameCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      sigFrameCache.remove(k).foreach { df =>
-        try df.unpersist()
-        catch { case _: Throwable => () }
-        graft.Resources.releaseCheckpoint(df)
-      }
-    }
-  }
 
   /** Intra-bucket pair emission shared by the MinHash (q31) and SimHash
     * (q80) LSH paths: group each (band, bkey) bucket, emit sorted
@@ -416,7 +325,7 @@ object Dedup {
   // ------------------------------------------------------------- q31
   // MinHash + LSH near-dup candidate pairs.
   private val q31 = QueryDef.of(
-    (s, d) => candidates(s, d).orderBy(col("doc1"), col("doc2")),
+    (s, d) => candidates.get(s, d).orderBy(col("doc1"), col("doc2")),
     s"""$sqlShingled,
        |$sqlMinhash
        |SELECT doc1, doc2 FROM cand
@@ -429,7 +338,6 @@ object Dedup {
   // ExpressionsSpec). Pure per-row map — embarrassingly parallel.
   private val q32 = QueryDef.of(
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"), expr("simhash_sig(toks)").as("simhash"))
@@ -456,7 +364,7 @@ object Dedup {
       // reads the pinned verify artifact (see [[pairStats]]); the
       // jaccard double is the same inter/uni division the inline form
       // computed — identical integers, identical IEEE result
-      pairStats(s, d)
+      pairStats.get(s, d)
         .withColumn("jaccard",
           col("inter").cast("double") / col("uni"))
         .filter(col("inter") * 2 >= col("uni"))
@@ -485,7 +393,6 @@ object Dedup {
   // (group × partition).
   private val q35 = QueryDef.of(
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val mhUnion = udaf(graft.functions.MinHashUnionAgg)
       val sigs = Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
@@ -547,7 +454,7 @@ object Dedup {
       val b = texts.withColumnsRenamed(Map("doc_id" -> "doc2", "text" -> "t2"))
       // Levenshtein is O(len²) per pair — cap at a 500-char prefix (the
       // standard bounded-cost practice; near-dups diverge early anyway)
-      candidates(s, d).join(a, "doc1").join(b, "doc2")
+      candidates.get(s, d).join(a, "doc1").join(b, "doc2")
         .withColumn("p1", substring(col("t1"), 1, 500))
         .withColumn("p2", substring(col("t2"), 1, 500))
         .select(col("doc1"), col("doc2"),
@@ -595,15 +502,9 @@ object Dedup {
     * sized, id+two-long rows). Exact integer (inter, uni) make every
     * downstream threshold exact: inter/uni ≥ t/100 ⟺ inter·100 ≥ uni·t
     * (q170's documented equivalence, incl. the IEEE-exact t = 50). */
-  private val pairStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]
-  private val pairStatsHook = new java.util.concurrent.atomic.AtomicBoolean
-  private[queries] def pairStats(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    if (pairStatsHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => pairStatsCache.clear())
-    pairStatsCache.computeIfAbsent(s"${graft.Resources.sessionKey(s)}:$d", _ => {
-      val cand = candidates(s, d)
+  private[queries] lazy val pairStats = Artifact.frame("pairStats",
+      eager = true, uses = Seq(candidates)) { (s, d) =>
+      val cand = candidates.get(s, d)
       val ep = cand.select(col("doc1").as("doc_id"))
         .union(cand.select(col("doc2").as("doc_id"))).distinct()
       val sets = Tables.documents(s, d)
@@ -613,14 +514,13 @@ object Dedup {
         .select(col("doc_id"), col("shset"))
       val a = sets.withColumnsRenamed(Map("doc_id" -> "doc1", "shset" -> "sa"))
       val b = sets.withColumnsRenamed(Map("doc_id" -> "doc2", "shset" -> "sb"))
-      graft.Resources.retain(graft.Tuning.compactCheckpoint(
+      graft.Tuning.compactCheckpoint(
         cand.join(a, "doc1").join(b, "doc2")
           .select(col("doc1"), col("doc2"),
             size(array_intersect(col("sa"), col("sb"))).cast("long")
               .as("inter"),
             size(array_union(col("sa"), col("sb"))).cast("long")
-              .as("uni"))))
-    })
+              .as("uni")))
   }
 
   /** Verified near-dup pairs: LSH candidates whose exact shingle Jaccard
@@ -628,7 +528,7 @@ object Dedup {
     * the pinned [[pairStats]]; inter·2 ≥ uni is the exact-integer form
     * of jaccard ≥ 0.5 (equivalence documented at pairStats). */
   private def verifiedPairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    pairStats(s, d)
+    pairStats.get(s, d)
       .filter(col("inter") * 2 >= col("uni"))
       .select(col("doc1"), col("doc2"))
 
@@ -711,7 +611,7 @@ object Dedup {
        |ORDER BY doc_id""".stripMargin.replaceFirst("^WITH ", "WITH RECURSIVE ")
 
   private val q65 = QueryDef.of(
-    (s, d) => clusterLabels(s, d).orderBy(col("doc_id")),
+    (s, d) => clusterLabels.get(s, d).orderBy(col("doc_id")),
     clustersSql)
 
   // ------------------------------------------------------------- q65b
@@ -748,7 +648,7 @@ object Dedup {
   // shuffle carries (cluster, lang, source, len), never text.
   private val q159 = QueryDef.of(
     (s, d) => {
-      val labels = clusterLabels(s, d)
+      val labels = clusterLabels.get(s, d)
       val mem = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"),
           length(col("text")).cast("long").as("len"))
@@ -809,7 +709,6 @@ object Dedup {
   // text. At 100 TB widen to a 64-bit sketch via 4×16-bit tables —
   // one constant in the expression.
   private def simSigs(s: org.apache.spark.sql.SparkSession, d: String) = {
-    graft.functions.VectorFunctions.register(s)
     Tables.documents(s, d)
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), expr("simhash_wide(toks)").as("sig"))
@@ -895,39 +794,25 @@ object Dedup {
     * the md5-span explode per query. Bench warms it as a setup
     * artifact and the DuckDB pair gets the same amortization via the
     * span_frame prelude table (equality-checked overrides). */
-  private val spanCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-  private val spanHook = new java.util.concurrent.atomic.AtomicBoolean
-  private[queries] def spanFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    if (spanHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => spanCache.clear())
-    spanCache.getOrElseUpdate(s"${graft.Resources.sessionKey(s)}:$d",
-      graft.Resources.retain(
-        Tables.documents(s, d)
-          .select(col("doc_id"),
-            expr("filter(split(text, ' '), t -> t <> '')").as("tk"))
-          .select(col("doc_id"), explode(expr(
-            """CASE WHEN size(tk) >= 8 THEN
-              |  transform(sequence(0, size(tk) - 8),
-              |    i -> struct(i AS p,
-              |      substring(md5(concat_ws(' ', slice(tk, i + 1, 8))), 1, 16)
-              |        AS h))
-              |ELSE array() END""".stripMargin)).as("sp"))
-          .select(col("doc_id"), col("sp.p").as("p"), col("sp.h").as("h"))
-          .localCheckpoint(true)))
-  }
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureSpanIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
-    spanFrame(s, d)
-    ()
+  private[graft] val spanFrame = Artifact.frame("spans", eager = true) {
+    (s, d) =>
+      Tables.documents(s, d)
+        .select(col("doc_id"),
+          expr("filter(split(text, ' '), t -> t <> '')").as("tk"))
+        .select(col("doc_id"), explode(expr(
+          """CASE WHEN size(tk) >= 8 THEN
+            |  transform(sequence(0, size(tk) - 8),
+            |    i -> struct(i AS p,
+            |      substring(md5(concat_ws(' ', slice(tk, i + 1, 8))), 1, 16)
+            |        AS h))
+            |ELSE array() END""".stripMargin)).as("sp"))
+        .select(col("doc_id"), col("sp.p").as("p"), col("sp.h").as("h"))
+        .localCheckpoint(true)
   }
 
   private val q112 = QueryDef.of(
     (s, d) => {
-      val spans = spanFrame(s, d).select(col("doc_id"), col("h"))
+      val spans = spanFrame.get(s, d).select(col("doc_id"), col("h"))
       val dups = spans.groupBy(col("h"))
         .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
         .filter(col("lo") =!= col("hi"))
@@ -998,7 +883,7 @@ object Dedup {
       // slot retention (one generation — see Resources.retainSlot)
       graft.Resources.retainSlot(
         s"q163:${graft.Resources.sessionKey(s)}:$d", toks)
-      val spans = spanFrame(s, d)
+      val spans = spanFrame.get(s, d)
       val marks = spans.groupBy(col("h"))
         .agg(count(lit(1)).as("cnt"),
           min(struct(col("doc_id"), col("p"))).as("first"))
@@ -1116,7 +1001,7 @@ object Dedup {
       // first-occurrence leg reads the shared span index (min(doc_id)
       // over raw spans ≡ over distinct spans); the per-doc distinct
       // count keeps its cheap map-side branch
-      val novel = spanFrame(s, d)
+      val novel = spanFrame.get(s, d)
         .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_novel"))
       perDoc.join(novel, Seq("doc_id"), "left")
@@ -1183,7 +1068,7 @@ object Dedup {
     (s, d) => {
       // the shared pinned verify artifact (see [[pairStats]]) IS the
       // one-pass (inter, uni) frame this query used to pin privately
-      val pj = pairStats(s, d)
+      val pj = pairStats.get(s, d)
         .filter(col("inter") * 100 >= col("uni") * 50)
       // all three thresholds' pair counts in ONE narrow job over the
       // pinned stats (was one count job per threshold)
@@ -1246,7 +1131,7 @@ object Dedup {
           : org.apache.spark.sql.DataFrame = {
         val labels =
           if (t == 50)
-            clusterLabels(s, d)
+            clusterLabels.get(s, d)
               .select(col("doc_id").as("id"), col("cluster").as("component"))
           else {
             // CC over edge ENDPOINTS only, not the whole corpus: every
@@ -1397,7 +1282,7 @@ object Dedup {
       // the surviving train docs are id-keyed semi-joins against the
       // pinned (doc_id, h) rows. Identical hashes by construction
       // (spanFrame computes the same expression).
-      val sp = spanFrame(s, d).select(col("doc_id"), col("h").as("sp"))
+      val sp = spanFrame.get(s, d).select(col("doc_id"), col("h").as("sp"))
       val evalSpans = sp
         .join(base.filter(col("h") >= 8).select(col("doc_id")),
           Seq("doc_id"), "left_semi")
@@ -1495,7 +1380,7 @@ object Dedup {
   // labels; everything heavy is the shared q65 machinery.
   private val q117 = QueryDef.of(
     (s, d) => {
-      clusterLabels(s, d)
+      clusterLabels.get(s, d)
         .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))
@@ -1533,7 +1418,7 @@ object Dedup {
   // against q33's verified near-dup pairs and replays the aggregate.
   private val q161 = QueryDef.of(
     (s, d) => {
-      val assigned = clusterLabels(s, d).withColumn("b", expr(
+      val assigned = clusterLabels.get(s, d).withColumn("b", expr(
           """cast(conv(substring(md5(cast(cluster as string)), 1, 4),
             |  16, 10) as bigint) % 10""".stripMargin))
         .withColumn("split",
@@ -1581,7 +1466,7 @@ object Dedup {
   // closure (shared clustersCtes) + the same md5 split.
   private val q191 = QueryDef.of(
     (s, d) => {
-      val sp = clusterLabels(s, d).withColumn("h", expr(
+      val sp = clusterLabels.get(s, d).withColumn("h", expr(
         """cast(conv(substring(md5(cast(doc_id as string)), 1, 8),
           |  16, 10) as bigint) % 10""".stripMargin))
       val train = sp.filter(col("h") < 8)
@@ -1699,7 +1584,7 @@ object Dedup {
       val exactKeep = base.groupBy(col("th"))
         .agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"), lit(1L).as("is_exact"))
-      val nearKeep = clusterLabels(s, d)
+      val nearKeep = clusterLabels.get(s, d)
         .filter(col("doc_id") === col("cluster"))
         .select(col("doc_id"), lit(1L).as("is_near"))
       base
@@ -1776,10 +1661,9 @@ object Dedup {
   private val q196 = QueryDef.of(
     (s, d) => {
       import s.implicits._
-      graft.functions.VectorFunctions.register(s)
       // the shared pinned signature artifact — built once per
       // (session, corpus), re-banded per config below
-      val sigs = sigFrame(s, d)
+      val sigs = sigFrame.get(s, d)
       // ONE banding pass for all four configs: band ids carry a
       // config offset (cfg b's bands live at [100·b, 100·b + b)), so a
       // single (band, bkey) group-and-pair shuffle serves every config
@@ -1979,7 +1863,7 @@ object Dedup {
     (s, d) => {
       // shared per-(session, corpus) artifact — one shingle ordering
       // serves the whole exact-join family (q150 consumes the same)
-      val (shing, ordered) = orderedShingles(s, d)
+      val (shing, ordered) = orderedShingles.get(s, d)
       val pfx = ordered.select(col("doc_id"), col("sz"),
         posexplode(expr("slice(osh, 1, sz div 2 + 1)"))
           .as(Seq("p0", "h")))
@@ -2071,7 +1955,7 @@ object Dedup {
     (s, d) => {
       // shared per-(session, corpus) artifact — one shingle ordering
       // serves the whole exact-join family (q132 builds the same)
-      val (shing, ordered) = orderedShingles(s, d)
+      val (shing, ordered) = orderedShingles.get(s, d)
       val pfx = ordered.select(col("doc_id"), col("sz"),
         posexplode(expr("slice(osh, 1, sz - (4 * sz + 4) div 5 + 1)"))
           .as(Seq("p0", "h")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -774,21 +774,13 @@ object EventAnalytics {
   /** Per-hour KMV sketch artifact — the checkpoint-pinned hours-row
     * frame every trailing-window merge reads. Memoized per (session,
     * corpus) so the gated (q186) and production sketch-only (q186b)
-    * entry points share ONE event scan per session (the clusterLabels
-    * memo discipline). */
-  private val hourlySkCache = new java.util.concurrent.ConcurrentHashMap[
-    String, DataFrame]
-  private val hourlySkHook = new java.util.concurrent.atomic.AtomicBoolean
-  private def hourlyUserSketches(s: SparkSession, d: String): DataFrame = {
-    if (hourlySkHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => hourlySkCache.clear())
-    hourlySkCache.computeIfAbsent(s"${graft.Resources.sessionKey(s)}:$d", _ => {
+    * entry points share ONE event scan per session. */
+  private val hourlyUserSketches =
+    Artifact.frame("hourlySketches", eager = true) { (s, d) =>
       val kmv = udaf(graft.functions.KmvAgg)
-      graft.Resources.retain(
-        hourUserHashes(s, d).groupBy(col("hr"))
-          .agg(kmv(col("h")).as("sk")).localCheckpoint())
-    })
-  }
+      hourUserHashes(s, d).groupBy(col("hr"))
+        .agg(kmv(col("h")).as("sk")).localCheckpoint()
+    }
 
   /** Trailing 6-hour window merges over the pinned hourly sketch frame
     * — work ∝ hours × window, never rows × windows. */
@@ -806,7 +798,7 @@ object EventAnalytics {
 
   private val q186 = QueryDef.of(
     (s, d) => {
-      val hourly = hourlyUserSketches(s, d)
+      val hourly = hourlyUserSketches.get(s, d)
       val merged = slidingDistinctEstimates(hourly)
       // exact gate leg by EXPLODE, not range join: hour hr contributes
       // to windows w ∈ [hr, hr+5] ⟺ window w covers hours [w-5, w], so
@@ -878,7 +870,7 @@ object EventAnalytics {
   // build, which the session shares with q186 via the memo; same
   // estimates bit-for-bit.
   private val q186b = QueryDef.of(
-    (s, d) => slidingDistinctEstimates(hourlyUserSketches(s, d))
+    (s, d) => slidingDistinctEstimates(hourlyUserSketches.get(s, d))
       .select(col("w").as("w_hr"), col("est_distinct"))
       .orderBy(col("w_hr")),
     """WITH e AS (

@@ -247,7 +247,6 @@ object Extras {
     (s, d) => {
       graft.Tables.All.foreach(t =>
         graft.Tables.table(s, d, t).createOrReplaceTempView(t))
-      graft.functions.VectorFunctions.register(s)
       s.sql("""
         SELECT e.label, COUNT(*) AS n,
           CAST(SUM(CASE WHEN cosine_sim(e.embedding, p.embedding) >= 0.3

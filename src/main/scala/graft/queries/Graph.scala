@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.functions._
 
 /** Graph-analytic queries over the transaction graph (customers ↔
@@ -20,75 +20,49 @@ object Graph {
     * on orderkey + pair distinct — dominates both queries' cost. Build
     * once per (session, corpus) and persist, the candidate-index /
     * IVF-index lifecycle: a production pipeline builds the graph once
-    * and runs N analytics over it. */
-  // Keyed on the session REFERENCE (SparkSession doesn't override
-  // equals, so tuple equality is identity) — unlike identityHashCode
-  // this can't collide across GC'd sessions. Standalone callers (any
-  // entry point that isn't Bench/Verify) must call [[releaseCoEdges]]
-  // when done with a session, or the persisted blocks live as long as
-  // the session does.
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
-  private def coEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    edgeCache.getOrElseUpdate((s, d), {
-      // raw loads: the pair build is join-first (self-join on order),
-      // so the only movement should be the orderkey shuffle
-      val li = Tables.raw(s, d, "lineitem")
-        .filter(col("l_quantity") >= 35)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      // cache PARTITIONED ON x (not distinct's (x,y) hash): both
-      // consumers' first wide op keys on x — q131's degree/orientation
-      // join, q134's x semi-join — so the cached partitioning is
-      // reusable and the edge list is never re-shuffled on read
-      // (measured: first post-warmup triangle run 5.0s → 2.3s).
-      // Partition COUNT is size-matched (graft.Tuning): a 124k-row edge
-      // set on 32 near-empty partitions made every superstep scan pay
-      // 32 map-task fixed costs — r12's biggest graph-family lever.
-      graft.Tuning.compactPersist(
-        li.select(col("ok"), col("pk").as("x"))
-          .join(li.select(col("ok").as("ok2"), col("pk").as("y")),
-            col("ok") === col("ok2") && col("x") < col("y"))
-          .select(col("x"), col("y")).distinct()
-          .repartition(col("x")),
-        Seq(col("x")))
-    })
-
-  // Bidirectional (symmetrized) co-purchase edge list, persisted
-  // PARTITIONED ON src. The superstep families key every per-round
-  // join on src (q153's frontier expand, q154's label gather) — but a
-  // plain per-query union of the two coEdges orientations has NO
-  // single output partitioning, so each round was re-shuffling the
-  // full 2|E| edge list while only the frontier was supposed to move.
-  // One extra persisted copy (built once from the already-persisted
-  // coEdges blocks) makes "only the frontier moves" true: the edge
-  // list never re-shuffles inside a superstep again. At 100 TB this
-  // is the difference between rounds × |E| and rounds × |frontier|
-  // of shuffle traffic — the GraphX edge-partitioning argument.
-  private val biEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
-  private def biEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    biEdgeCache.getOrElseUpdate((s, d), {
-      val e = coEdges(s, d)
-      graft.Tuning.compactPersist(
-        e.select(col("x").as("src"), col("y").as("dst"))
-          .union(e.select(col("y").as("src"), col("x").as("dst")))
-          .repartition(col("src")),
-        Seq(col("src")))
-    })
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureCoEdges(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    coEdges(s, d).count()
-    biEdges(s, d).count()
-    ()
-  }
+    * and runs N analytics over it.
+    *
+    * The value is (edges, bidirectional edges). The second is the
+    * symmetrized list, persisted PARTITIONED ON src. The superstep
+    * families key every per-round join on src (q153's frontier expand,
+    * q154's label gather) — but a plain per-query union of the two
+    * orientations has NO single output partitioning, so each round was
+    * re-shuffling the full 2|E| edge list while only the frontier was
+    * supposed to move. One extra persisted copy (built from the
+    * already-persisted edge blocks) makes "only the frontier moves"
+    * true: the edge list never re-shuffles inside a superstep again. At
+    * 100 TB this is the difference between rounds × |E| and rounds ×
+    * |frontier| of shuffle traffic — the GraphX edge-partitioning
+    * argument. */
+  private[graft] val coEdges = Artifact("coEdges") { (s, d) =>
+    // raw loads: the pair build is join-first (self-join on order),
+    // so the only movement should be the orderkey shuffle
+    val li = Tables.raw(s, d, "lineitem")
+      .filter(col("l_quantity") >= 35)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+    // cache PARTITIONED ON x (not distinct's (x,y) hash): both
+    // consumers' first wide op keys on x — q131's degree/orientation
+    // join, q134's x semi-join — so the cached partitioning is
+    // reusable and the edge list is never re-shuffled on read
+    // (measured: first post-warmup triangle run 5.0s → 2.3s).
+    // Partition COUNT is size-matched (graft.Tuning): a 124k-row edge
+    // set on 32 near-empty partitions made every superstep scan pay
+    // 32 map-task fixed costs — r12's biggest graph-family lever.
+    val e = graft.Tuning.compactPersist(
+      li.select(col("ok"), col("pk").as("x"))
+        .join(li.select(col("ok").as("ok2"), col("pk").as("y")),
+          col("ok") === col("ok2") && col("x") < col("y"))
+        .select(col("x"), col("y")).distinct()
+        .repartition(col("x")),
+      Seq(col("x")))
+    val bi = graft.Tuning.compactPersist(
+      e.select(col("x").as("src"), col("y").as("dst"))
+        .union(e.select(col("y").as("src"), col("x").as("dst")))
+        .repartition(col("src")),
+      Seq(col("src")))
+    (e, bi)
+  } { case (e, bi) => Seq(e, bi) }
 
   /** q86's customer↔supplier authority graph, [[graft.operators
     * .PageRank.prepare]]d (degree-annotated edges pre-partitioned on
@@ -96,59 +70,38 @@ object Graph {
     * graph build — orders⋈lineitem, pair distinct, bidirection — was
     * ~half of every q86 run's steady-state cost, and like the IVF/LSH
     * indexes it is a corpus artifact, not query work. */
-  private val prCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-
-  private def prGraph(s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) =
-    prCache.getOrElseUpdate((s, d), {
-      // raw (no parallelism-floor scatter): the edge build is
-      // join-first, so the tables' only movement should be the join's
-      // own key shuffle. Nodes are INTEGER-keyed internally
-      // (custkey*2 / suppkey*2+1 — disjoint by parity) and mapped back
-      // to the presentation labels only on the final 16k-row frame:
-      // the edge distinct and every per-iteration join then hash/
-      // compare 8-byte longs instead of short strings (measured ~2× on
-      // the edge build, the query's dominant phase). Ranks are
-      // invariant under any key bijection, so the oracle replays the
-      // string-labelled graph unchanged.
-      val edges = Tables.raw(s, d, "orders")
-        .join(Tables.raw(s, d, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).cast("long").as("src"),
-          (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        .distinct()
-      val bidir = edges.union(
-        edges.select(col("dst").as("src"), col("src").as("dst")))
-      graft.operators.PageRank.prepare(bidir)
-    })
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensurePrGraph(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val (e2, nodes) = prGraph(s, d)
-    e2.count()
-    nodes.count()
-    ()
-  }
+  private[graft] val prGraph = Artifact("prGraph") { (s, d) =>
+    // raw (no parallelism-floor scatter): the edge build is
+    // join-first, so the tables' only movement should be the join's
+    // own key shuffle. Nodes are INTEGER-keyed internally
+    // (custkey*2 / suppkey*2+1 — disjoint by parity) and mapped back
+    // to the presentation labels only on the final 16k-row frame:
+    // the edge distinct and every per-iteration join then hash/
+    // compare 8-byte longs instead of short strings (measured ~2× on
+    // the edge build, the query's dominant phase). Ranks are
+    // invariant under any key bijection, so the oracle replays the
+    // string-labelled graph unchanged.
+    val edges = Tables.raw(s, d, "orders")
+      .join(Tables.raw(s, d, "lineitem"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).cast("long").as("src"),
+        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
+      .distinct()
+    val bidir = edges.union(
+      edges.select(col("dst").as("src"), col("src").as("dst")))
+    graft.operators.PageRank.prepare(bidir)
+  } { case (e2, nodes) => Seq(e2, nodes) }
 
   /** q147's dst-ranked, degree-annotated adjacency over [[coEdges]] —
     * a per-(session, corpus) graph artifact like [[prGraph]]: each of
     * the walk's supersteps (and the step-union readout) joins this
     * frame, so an uncached build re-runs the ranking window once PER
     * CONSUMER (measured ~5× per q147 run). Persisted pre-partitioned
-    * on src — every step join keys on it. Released by
-    * [[releaseCoEdges]]. */
-  private val walkAdjCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
-  private[queries] def walkAdj(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    walkAdjCache.getOrElseUpdate((s, d), {
+    * on src — every step join keys on it. */
+  private[graft] val walkAdj =
+    Artifact.frame("walkAdj", uses = Seq(coEdges)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val e = coEdges(s, d)
+      val e = coEdges.get(s, d)._1
       val both = e.select(col("x").as("src"), col("y").as("dst"))
         .union(e.select(col("y").as("src"), col("x").as("dst")))
       graft.Tuning.compactPersist(
@@ -159,50 +112,7 @@ object Graph {
             Window.partitionBy(col("src"))))
           .repartition(col("src")),
         Seq(col("src")))
-    })
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureWalkAdj(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    walkAdj(s, d).count()
-    ()
-  }
-
-  /** Release every cached edge frame built on `s` (all corpora). */
-  def releaseCoEdges(s: org.apache.spark.sql.SparkSession): Unit = {
-    edgeCache.keys.filter(_._1 eq s).foreach { k =>
-      edgeCache.remove(k).foreach { df =>
-        try df.unpersist()
-        catch { case _: Throwable => () }
-      }
     }
-    biEdgeCache.keys.filter(_._1 eq s).foreach { k =>
-      biEdgeCache.remove(k).foreach { df =>
-        try df.unpersist()
-        catch { case _: Throwable => () }
-      }
-    }
-    walkAdjCache.keys.filter(_._1 eq s).foreach { k =>
-      walkAdjCache.remove(k).foreach { df =>
-        try df.unpersist()
-        catch { case _: Throwable => () }
-      }
-    }
-    hitsEdgeCache.keys.filter(_._1 eq s).foreach { k =>
-      hitsEdgeCache.remove(k).foreach { case (bySrc, byDst) =>
-        try { bySrc.unpersist(); byDst.unpersist() }
-        catch { case _: Throwable => () }
-      }
-    }
-    // the PageRank graph cache holds Resources-retained frames (so the
-    // blocks are already released by releaseAll); dropping the entries
-    // here keeps the map from pinning dead sessions' plans
-    prCache.keys.filter(_._1 eq s).foreach { k =>
-      prCache.remove(k).foreach { case (e2, nodes) =>
-        try { e2.unpersist(); nodes.unpersist() }
-        catch { case _: Throwable => () }
-      }
-    }
-  }
 
   // ------------------------------------------------------------- q86
   // Fixed-point PageRank ([[graft.operators.PageRank]]): all-integer
@@ -231,7 +141,7 @@ object Graph {
       // bidir ⇒ in-degree = out-degree ≥ 1 for every node, so the
       // teleport-only left-join re-attach is skipped (one join/shuffle
       // less per superstep; the oracle's LEFT JOIN is then vacuous).
-      val (e2, nodes) = prGraph(s, d)
+      val (e2, nodes) = prGraph.get(s, d)
       graft.operators.PageRank.runPrepared(e2, nodes, PrIters,
         everyNodeHasInEdge = true)
         .select(expr(
@@ -449,8 +359,8 @@ object Graph {
   // just size) and the still-unreached count at the horizon.
   //
   // Scale shape per superstep: one frontier⋈edges equi-join (the
-  // persisted src-partitioned biEdges artifact — only the frontier
-  // moves; a per-query union of the two coEdges orientations has no
+  // persisted src-partitioned bidirectional [[coEdges]] copy — only the
+  // frontier moves; a per-query union of the two coEdges orientations has no
   // output partitioning and re-shuffled the full 2|E| list per ring)
   // and
   // one anti-join against settled (node-keyed). Each ring is EAGERLY
@@ -470,7 +380,7 @@ object Graph {
     (s, d) => {
       // shared src-partitioned bidirectional artifact: the per-ring
       // expand join keys on src, so only the frontier ever shuffles
-      val both = biEdges(s, d)
+      val both = coEdges.get(s, d)._2
       val nodes = both.select(col("src").as("node")).distinct()
       // the BFS seed (global min node id) is ONE value — collect it
       // once and seed from a literal one-row frame: left as a lazy
@@ -584,7 +494,7 @@ object Graph {
   private val LpaRounds = 3
   private val q154 = QueryDef.of(
     (s, d) => {
-      val both = biEdges(s, d)
+      val both = coEdges.get(s, d)._2
       val nodes = both.select(col("src").as("node")).distinct()
       var labels = nodes.select(col("node"), col("node").as("lbl"))
       // gather on the PARTITIONED side: the edge list is symmetric, so
@@ -610,10 +520,10 @@ object Graph {
       // non-AQE job; the returned frame is the tiny checkpointed result.
       // allowBroadcast: unlike the frontier loops (q153), LPA's moving
       // frame is the |V|-sized label set whose join side is the WARMED
-      // persisted biEdges artifact — real stats, and Spark's 10 MB
-      // threshold makes the scale call (broadcast the labels at test
-      // scale, co-partitioned shuffle at 100 TB where |V| outgrows the
-      // threshold); forcing the shuffle here bought SMJ sorts of the
+      // persisted bidirectional coEdges copy — real stats, and Spark's
+      // 10 MB threshold makes the scale call (broadcast the labels at
+      // test scale, co-partitioned shuffle at 100 TB where |V| outgrows
+      // the threshold); forcing the shuffle here bought SMJ sorts of the
       // full edge list every round instead.
       graft.Tuning.withSuperstepConf(s, both.rdd.getNumPartitions,
         allowBroadcast = true) {
@@ -681,41 +591,26 @@ object Graph {
   // The dst twin is built from the already-persisted src copy (one
   // shuffle at warmup) — the GraphX both-orientations trade: O(|E|)
   // extra memory for zero edge movement inside the iteration.
-  private val hitsEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-  private def hitsEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) =
-    hitsEdgeCache.getOrElseUpdate((s, d), {
-      val bySrc = graft.Tuning.compactPersist(
-        Tables.raw(s, d, "orders")
-          .join(Tables.raw(s, d, "lineitem"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").cast("long").as("src"),
-            col("l_suppkey").cast("long").as("dst"))
-          .distinct()
-          .repartition(col("src")),
-        Seq(col("src")))
-      val byDst = graft.Tuning.compactPersist(
-        bySrc.repartition(col("dst")), Seq(col("dst")))
-      (bySrc, byDst)
-    })
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureHitsEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
-    val (bySrc, byDst) = hitsEdges(s, d)
-    bySrc.count()
-    byDst.count()
-    ()
-  }
+  private[graft] val hitsEdges = Artifact("hitsEdges") { (s, d) =>
+    val bySrc = graft.Tuning.compactPersist(
+      Tables.raw(s, d, "orders")
+        .join(Tables.raw(s, d, "lineitem"),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").cast("long").as("src"),
+          col("l_suppkey").cast("long").as("dst"))
+        .distinct()
+        .repartition(col("src")),
+      Seq(col("src")))
+    val byDst = graft.Tuning.compactPersist(
+      bySrc.repartition(col("dst")), Seq(col("dst")))
+    (bySrc, byDst)
+  } { case (bySrc, byDst) => Seq(bySrc, byDst) }
 
   private val q155 = QueryDef.of(
     (s, d) => {
       // shared per-(session, corpus) directed edge artifact — one copy
       // per join key so neither half-round ever moves the edge list
-      val (e, eDst) = hitsEdges(s, d)
+      val (e, eDst) = hitsEdges.get(s, d)
       var hub = e.select(col("src")).distinct()
         .select(col("src"), lit(1000000L).as("h"))
       var auth: org.apache.spark.sql.DataFrame = null
@@ -849,7 +744,7 @@ object Graph {
 
   private val q131 = QueryDef.of(
     (s, d) => {
-      val und = coEdges(s, d)
+      val und = coEdges.get(s, d)._1
       graft.operators.TriangleCount.run(und)
         .join(Tables.raw(s, d, "part"), col("node") === col("p_partkey"))
         .groupBy(col("p_brand").as("brand"))
@@ -880,7 +775,7 @@ object Graph {
   // top hubs the q85 salting way first).
   private val q171 = QueryDef.of(
     (s, d) => {
-      val und = coEdges(s, d)
+      val und = coEdges.get(s, d)._1
       val deg = und.select(col("x").as("node"))
         .union(und.select(col("y").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -934,7 +829,7 @@ object Graph {
   }
   private val q134 = QueryDef.of(
     (s, d) => {
-      var e = coEdges(s, d)
+      var e = coEdges.get(s, d)._1
       // The up-front count (a cheap cached-scan job) does double duty:
       // it sizes the loop's shuffles to the measured edge count
       // (graft.Tuning — the peel frames only SHRINK from here), and it
@@ -1028,7 +923,7 @@ object Graph {
   private val q147 = QueryDef.of(
     (s, d) => {
       // shared per-(session, corpus) ranked adjacency (see [[walkAdj]])
-      val adj = walkAdj(s, d)
+      val adj = walkAdj.get(s, d)
       val starts = adj.select(col("src")).distinct()
         .filter(col("src") % 25 === 0)
         .select(col("src").as("walk_id"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** Data-layout operators — the table-maintenance side of the engine
@@ -32,7 +31,6 @@ object Layout {
 
   private val q94 = QueryDef.of(
     (s, d) => {
-      VectorFunctions.register(s)
       val z = Tables.raw(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"),
           expr("z_value(cast(l_orderkey as bigint), cast(l_partkey as bigint))")

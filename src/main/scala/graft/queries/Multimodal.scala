@@ -52,6 +52,7 @@ object Multimodal {
       else
         try Option(javax.imageio.ImageIO.read(
           new java.io.ByteArrayInputStream(blob)))
+        // untrusted bytes: a crafted image may throw anything, fatal too
         catch { case _: Throwable => None }
     }
 

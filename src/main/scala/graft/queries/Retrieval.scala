@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,7 +36,6 @@ object Retrieval {
   // ------------------------------------------------------------- q89
   private val q89 = QueryDef.of(
     (s, d) => {
-      VectorFunctions.register(s)
       // the joined corpus is referenced by probes, the term pipeline,
       // the doc count AND the dense scan — pin it or the join+norm
       // recompute per reference (the iterative-chain trap, NOTES);
@@ -234,7 +232,6 @@ object Retrieval {
   private val q125 = QueryDef.of(
     (s, d) => {
       import s.implicits._
-      VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val probes = emb
         .filter(col("vec_id").isin(MmrProbes.map(Int.box): _*))
@@ -415,7 +412,7 @@ object Retrieval {
   private def stage1(s: SparkSession, d: String): DataFrame = {
     val w20 = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    TextAnalysis.bm25PerDoc(s, d)
+    TextAnalysis.bm25PerDoc.get(s, d)
       .withColumn("stage1_rank", row_number().over(w20))
       .filter(col("stage1_rank") <= Stage1K)
       .select(col("query_id"), col("doc_id"), col("stage1_rank"))

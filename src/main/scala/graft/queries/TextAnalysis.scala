@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -875,19 +875,10 @@ object TextAnalysis {
     * fuses it, q142 reranks from it, q162 evaluates it — four queries
     * over one corpus must not run the (doc, term) aggregate family
     * four times. Plain persist over parquet-rooted lineage (no
-    * checkpoint), released via [[releaseBpe]] — TextAnalysis's
-    * per-session artifact release point. */
-  private val bm25Cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private[queries] def bm25PerDoc(s: SparkSession, d: String): DataFrame =
-    bm25Cache.getOrElseUpdate(s"${graft.Resources.sessionKey(s)}:$d",
-      buildBm25PerDoc(s, d).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureBm25(s: SparkSession, d: String): Unit = {
-    bm25PerDoc(s, d).count()
-    ()
+    * checkpoint). */
+  private[graft] val bm25PerDoc = Artifact.frame("bm25") { (s, d) =>
+    buildBm25PerDoc(s, d).persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   private def buildBm25PerDoc(
@@ -965,7 +956,7 @@ object TextAnalysis {
     (s, d) => {
       val w10 = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("doc_id"))
-      bm25PerDoc(s, d).withColumn("rank", row_number().over(w10))
+      bm25PerDoc.get(s, d).withColumn("rank", row_number().over(w10))
         .filter(col("rank") <= 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
           col("score"), col("n_hit"))
@@ -1006,7 +997,7 @@ object TextAnalysis {
       import s.implicits._
       val w10 = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("doc_id"))
-      val topk = bm25PerDoc(s, d)
+      val topk = bm25PerDoc.get(s, d)
         .withColumn("rank", row_number().over(w10))
         .filter(col("rank") <= 10)
       val nq = BmQueries.toDF("query_id", "qtext")
@@ -1418,54 +1409,20 @@ object TextAnalysis {
     * like the IVF/LSH/graph artifacts the merge table is built once
     * per corpus and the queries only replay the cheap encode join.
     * The final symbolized frame is persisted (it IS the encoder
-    * table); blocks go back via [[releaseBpe]]/Resources.releaseAll. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String),
-      (Seq[graft.operators.BpeTrainer.Merge], org.apache.spark.sql.DataFrame)]
-
-  private def trainedBpe(s: org.apache.spark.sql.SparkSession, d: String,
-      split: String): (Seq[graft.operators.BpeTrainer.Merge],
-        org.apache.spark.sql.DataFrame) =
-    bpeCache.getOrElseUpdate((s, d, split), {
-      // the filter derives from the cache key, so key↔corpus can't drift
-      val docFilter = split match {
-        case "all"     => lit(true)
-        case "train80" => col("doc_id") % 10 < 8
-        case other => throw new IllegalArgumentException(
-          s"unknown BPE split '$other'")
-      }
-      val (m, fin0) = graft.operators.BpeTrainer.train(
-        bpeWords(s, d, docFilter), BpeSteps)
-      val fin = fin0.persist()
-      graft.Resources.retain(fin)
-      (m, fin)
-    })
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureBpe(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    trainedBpe(s, d, "all")._2.count()
-    trainedBpe(s, d, "train80")._2.count()
-    ()
-  }
-
-  /** Release every cached BPE artifact built on `s` (all corpora). */
-  def releaseBpe(s: org.apache.spark.sql.SparkSession): Unit = {
-    bpeCache.keys.filter(_._1 eq s).foreach { k =>
-      bpeCache.remove(k).foreach { case (_, fin) =>
-        try fin.unpersist()
-        catch { case _: Throwable => () }
-      }
+    * table). */
+  private[graft] val trainedBpe = Artifact.variants("bpe",
+      Seq("all", "train80")) { (s, d, split) =>
+    // the filter derives from the cache key, so key↔corpus can't drift
+    val docFilter = split match {
+      case "all"     => lit(true)
+      case "train80" => col("doc_id") % 10 < 8
+      case other => throw new IllegalArgumentException(
+        s"unknown BPE split '$other'")
     }
-    // the BM25 score table shares the release point: both are
-    // TextAnalysis's per-(session, corpus) persisted artifacts
-    val prefix = s"${graft.Resources.sessionKey(s)}:"
-    bm25Cache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      bm25Cache.remove(k).foreach { df =>
-        try df.unpersist()
-        catch { case _: Throwable => () }
-      }
-    }
-  }
+    val (m, fin) = graft.operators.BpeTrainer.train(
+      bpeWords(s, d, docFilter), BpeSteps)
+    (m, fin.persist())
+  } { case (_, fin) => Seq(fin) }
 
   /** Training CTE chain shared by q88 (vocab), q100 (encode) and q118
     * (eval): w0 distinct words → s0 char symbolization → s1..sN merge
@@ -1488,7 +1445,7 @@ object TextAnalysis {
   private val q88 = QueryDef.of(
     (s, d) => {
       import s.implicits._
-      val (merges, fin) = trainedBpe(s, d, "all")
+      val (merges, fin) = trainedBpe.get(s, d, "all")
       val mergeRows = merges
         .map(m => ("merge", m.step, s"${m.p1}~${m.p2}", m.weight))
         .toDF("kind", "step", "token", "weight")
@@ -1530,7 +1487,7 @@ object TextAnalysis {
   // char / post-BPE token counts (all integers — order-proof).
   private val q100 = QueryDef.of(
     (s, d) => {
-      val (_, fin) = trainedBpe(s, d, "all")
+      val (_, fin) = trainedBpe.get(s, d, "all")
       val encoder = fin.select(col("word"),
         expr("cast(size(filter(split(s, '  '), x -> x != '')) as bigint)")
           .as("w_tokens"))
@@ -1649,14 +1606,6 @@ object TextAnalysis {
   /** Per-doc bigram-LM quality scores (the q92 training+scoring chain),
     * shared with the q143 curriculum binning: doc_id, n_tokens,
     * n_bigrams, lm_score_micro. */
-  private def lmScores(s: SparkSession, d: String): DataFrame = {
-    if (lmScoresHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => lmScoresCache.clear())
-    lmScoresCache.getOrElseUpdate(
-      s"${graft.Resources.sessionKey(s)}:$d",
-      graft.Resources.retain(lmScoresBuild(s, d).localCheckpoint(true)))
-  }
-
   /** The per-doc quality-score table is a SHARED, pinned artifact
     * (candidates/pairStats lifecycle): a CCNet-shaped curation run
     * scores every shard once and stores the result; the median gate
@@ -1665,14 +1614,8 @@ object TextAnalysis {
     * setup artifact and the DuckDB pair gets the same amortization via
     * [[oraclePrelude]]'s pre-built table (r14 VERDICT #3 lifecycle-twin
     * discipline). */
-  private val lmScoresCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  private val lmScoresHook = new java.util.concurrent.atomic.AtomicBoolean
-
-  /** Offline build entry point (idempotent per session+corpus). */
-  def ensureLmScores(s: SparkSession, d: String): Unit = {
-    lmScores(s, d).count()
-    ()
+  private[graft] val lmScores = Artifact.frame("lmScores") { (s, d) =>
+    lmScoresBuild(s, d).localCheckpoint(true)
   }
 
   private def lmScoresBuild(s: SparkSession, d: String): DataFrame = {
@@ -1766,7 +1709,7 @@ object TextAnalysis {
 
   private val q92 = QueryDef.of(
     (s, d) => {
-      val perDoc = lmScores(s, d).drop("n_tokens")
+      val perDoc = lmScores.get(s, d).drop("n_tokens")
       val acc = Relational.gkAccuracy(
         Tables.documents(s, d).count()).toInt
       val floor = perDoc.agg(
@@ -1802,7 +1745,7 @@ object TextAnalysis {
   // (strict `<` against identical cut literals).
   private val q143 = QueryDef.of(
     (s, d) => {
-      val perDoc = lmScores(s, d)
+      val perDoc = lmScores.get(s, d)
       val acc = Relational.gkAccuracy(
         Tables.documents(s, d).count()).toInt
       val cuts = perDoc.agg(
@@ -2167,24 +2110,13 @@ object TextAnalysis {
   /** Per-source KMV sketch artifact — the checkpoint-pinned |S|-row
     * frame all KMV set algebra runs on. Memoized per (session, corpus)
     * so the gated (q175) and production sketch-only (q175b) entry
-    * points share ONE corpus scan per session (the clusterLabels memo
-    * discipline: ConcurrentHashMap.computeIfAbsent builds at most once;
-    * the onReleaseAll hook clears the memo when releaseAll kills the
-    * checkpoint). */
-  private val kmvSkCache = new java.util.concurrent.ConcurrentHashMap[
-    String, DataFrame]
-  private val kmvSkHook = new java.util.concurrent.atomic.AtomicBoolean
-  private[queries] def sourceKmvSketches(
-      s: SparkSession, d: String): DataFrame = {
-    if (kmvSkHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => kmvSkCache.clear())
-    kmvSkCache.computeIfAbsent(s"${graft.Resources.sessionKey(s)}:$d", _ => {
+    * points share ONE corpus scan per session. */
+  private[queries] val sourceKmvSketches =
+    Artifact.frame("kmvSketches", eager = true) { (s, d) =>
       val kmv = udaf(graft.functions.KmvAgg)
-      graft.Resources.retain(
-        sourceTokenHashes(s, d).groupBy(col("source"))
-          .agg(kmv(col("h")).as("sk")).localCheckpoint())
-    })
-  }
+      sourceTokenHashes(s, d).groupBy(col("source"))
+        .agg(kmv(col("h")).as("sk")).localCheckpoint()
+    }
 
   /** All-pairs KMV overlap algebra over the pinned sketch frame: union
     * by merged k-min, intersection by inclusion–exclusion — |S|² pairs
@@ -2239,7 +2171,7 @@ object TextAnalysis {
 
   private val q175 = QueryDef.of(
     (s, d) => {
-      val pairs = kmvOverlapPairs(sourceKmvSketches(s, d))
+      val pairs = kmvOverlapPairs(sourceKmvSketches.get(s, d))
       val dw = sourceTokenHashes(s, d)
         .select(col("source"), col("w")).distinct()
       val ex = dw.select(col("source").as("source_a"), col("w"))
@@ -2276,7 +2208,7 @@ object TextAnalysis {
   // q175 via the memo). Same estimates bit-for-bit; the oracle replays
   // the same CTE prefix (r10 VERDICT #3).
   private val q175b = QueryDef.of(
-    (s, d) => kmvOverlapPairs(sourceKmvSketches(s, d))
+    (s, d) => kmvOverlapPairs(sourceKmvSketches.get(s, d))
       .orderBy(col("source_a"), col("source_b")),
     s"""$kmvOverlapCtes
       |SELECT source_a, source_b, est_a, est_b, est_union,
@@ -2468,7 +2400,7 @@ object TextAnalysis {
   // scale); held-out words join it key-to-key; one lang-keyed aggregate.
   private val q118 = QueryDef.of(
     (s, d) => {
-      val (_, fin) = trainedBpe(s, d, "train80")
+      val (_, fin) = trainedBpe.get(s, d, "train80")
       val encoder = fin.select(col("word"),
         expr("cast(size(filter(split(s, '  '), x -> x != '')) as bigint)")
           .as("w_tokens"))

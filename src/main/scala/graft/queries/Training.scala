@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,28 +95,14 @@ object Training {
     * setup and the DuckDB pair gets the same amortization via
     * [[oraclePrelude]]'s probe_f/probe_w temp tables (equality-checked
     * overrides, the lifecycle-twin discipline). */
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, Array[Long])]
-  private val modelHook = new java.util.concurrent.atomic.AtomicBoolean
-  private def trainedModel(s: SparkSession, d: String)
-      : (DataFrame, Array[Long]) = {
-    if (modelHook.compareAndSet(false, true))
-      graft.Resources.onReleaseAll(() => modelCache.clear())
-    modelCache.getOrElseUpdate(s"${graft.Resources.sessionKey(s)}:$d", {
-      val f = graft.Resources.retain(
-        features(s, d).localCheckpoint(true))
+  private[graft] val trainedModel = Artifact("probe", eager = true) {
+    (s, d) =>
+      val f = features(s, d).localCheckpoint(true)
       val n = f.count()
       require(n > 0, "probe training needs a non-empty documents table")
       val (_, w) = gdSteps(f, n)
       (f, w)
-    })
-  }
-
-  /** Offline train entry point (idempotent per session+corpus). */
-  def ensureProbeModel(s: SparkSession, d: String): Unit = {
-    trainedModel(s, d)
-    ()
-  }
+  } { case (f, _) => Seq(f) }
 
   /** Run [[Iters]] exact-integer GD steps; one row per iteration with
     * the post-step weights and the pre-step training loss. */
@@ -223,7 +209,7 @@ object Training {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       // eval of the REGISTERED model (shared trainedModel artifact)
-      val (f, w) = trainedModel(s, d)
+      val (f, w) = trainedModel.get(s, d)
       locally {
         val scored = f.select(
           expr(s"(${(0 until Dim).map(j => s"x$j * ${w(j)}L")
@@ -339,7 +325,7 @@ object Training {
   private val q190 = QueryDef.of(
     (s, d) => {
       // eval of the REGISTERED model (shared trainedModel artifact)
-      val (f, w) = trainedModel(s, d)
+      val (f, w) = trainedModel.get(s, d)
       locally {
         val scored = f.select(
           expr(s"(${(0 until Dim).map(j => s"x$j * ${w(j)}L")
@@ -438,7 +424,7 @@ object Training {
   private val q194 = QueryDef.of(
     (s, d) => {
       // eval of the REGISTERED model (shared trainedModel artifact)
-      val (f, w) = trainedModel(s, d)
+      val (f, w) = trainedModel.get(s, d)
       locally {
         val scored = f.select(
           expr(s"(${(0 until Dim).map(j => s"x$j * ${w(j)}L")

@@ -12,16 +12,16 @@ class HygieneSpec extends AnyFunSuite {
 
   test("release paths leave no persisted RDDs behind") {
     // build the in-memory cached artifacts a run can leave behind
-    graft.queries.Dedup.ensureCandidateIndex(spark, sfDir)
-    graft.queries.Dedup.ensureShingleIndex(spark, sfDir)
-    graft.queries.Graph.ensureCoEdges(spark, sfDir)
-    graft.queries.Graph.ensureWalkAdj(spark, sfDir)
-    graft.queries.Graph.ensureHitsEdges(spark, sfDir)
-    graft.queries.Dedup.ensureClusterLabels(spark, sfDir)
-    graft.queries.Dedup.ensureSpanIndex(spark, sfDir)
-    graft.queries.TextAnalysis.ensureBm25(spark, sfDir)
-    graft.queries.TextAnalysis.ensureLmScores(spark, sfDir)
-    graft.queries.Training.ensureProbeModel(spark, sfDir)
+    graft.queries.Dedup.candidates.warm(spark, sfDir)
+    graft.queries.Dedup.orderedShingles.warm(spark, sfDir)
+    graft.queries.Graph.coEdges.warm(spark, sfDir)
+    graft.queries.Graph.walkAdj.warm(spark, sfDir)
+    graft.queries.Graph.hitsEdges.warm(spark, sfDir)
+    graft.queries.Dedup.clusterLabels.warm(spark, sfDir)
+    graft.queries.Dedup.spanFrame.warm(spark, sfDir)
+    graft.queries.TextAnalysis.bm25PerDoc.warm(spark, sfDir)
+    graft.queries.TextAnalysis.lmScores.warm(spark, sfDir)
+    graft.queries.Training.trainedModel.warm(spark, sfDir)
     val nodes = spark.range(6).toDF("id")
     val edges = spark.createDataFrame(Seq((0L, 1L), (1L, 2L), (4L, 5L)))
       .toDF("src", "dst")
@@ -30,9 +30,9 @@ class HygieneSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
       "precondition: caches exist before release")
 
-    graft.queries.Dedup.releaseCandidateIndex(spark)
-    graft.queries.Graph.releaseCoEdges(spark)
-    graft.queries.TextAnalysis.releaseBpe(spark)
+    graft.queries.Dedup.candidates.release(spark)
+    graft.queries.Graph.coEdges.release(spark)
+    graft.queries.TextAnalysis.trainedBpe.release(spark)
     Resources.releaseAll()
     // unpersist(blocking=false) unregisters synchronously; block removal
     // is async but getPersistentRDDs reflects unregistration immediately
@@ -41,31 +41,31 @@ class HygieneSpec extends AnyFunSuite {
   }
 
   test("release is idempotent and frames stay usable after release") {
-    graft.queries.Dedup.ensureCandidateIndex(spark, sfDir)
-    graft.queries.Dedup.releaseCandidateIndex(spark)
-    graft.queries.Dedup.releaseCandidateIndex(spark)
+    graft.queries.Dedup.candidates.warm(spark, sfDir)
+    graft.queries.Dedup.candidates.release(spark)
+    graft.queries.Dedup.candidates.release(spark)
     Resources.releaseAll()
     Resources.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     // a post-release query rebuilds the index transparently
-    graft.queries.Dedup.ensureCandidateIndex(spark, sfDir)
+    graft.queries.Dedup.candidates.warm(spark, sfDir)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
-    graft.queries.Dedup.releaseCandidateIndex(spark)
+    graft.queries.Dedup.candidates.release(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("cluster-label memo rebuilds after releaseAll (no dead frame)") {
-    // the memo points at a Resources-owned localCheckpoint; releaseAll
-    // kills the checkpoint AND (via the onReleaseAll hook) clears the
+    // the memo points at a localCheckpoint; releaseAll kills the
+    // checkpoint AND (via the artifact's onReleaseAll hook) clears the
     // memo — a stale entry would serve a lineage-truncated frame that
     // can never be recomputed
-    graft.queries.Dedup.ensureClusterLabels(spark, sfDir)
+    graft.queries.Dedup.clusterLabels.warm(spark, sfDir)
     Resources.releaseAll()
     val nDocs = graft.Tables.documents(spark, sfDir).count()
     val n = graft.SparkEntry.queries("q65_dedup_clusters")(spark, sfDir)
       .count()
     assert(n == nDocs, "labels must rebuild transparently after release")
-    graft.queries.Dedup.releaseCandidateIndex(spark)
+    graft.queries.Dedup.candidates.release(spark)
     Resources.releaseAll()
   }
 

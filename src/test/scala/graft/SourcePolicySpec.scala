@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** Session policy and job accounting each live in one module: no other
-  * source file builds a session or implements the accounting callbacks.
-  * The patterns are split so this file does not match them itself. */
+/** Session policy, job accounting and artifact release each live in one
+  * module: no other source file builds a session, implements the
+  * accounting callbacks or releases a query module's memo by hand. The
+  * patterns are split so this file does not match them itself. */
 class SourcePolicySpec extends AnyFunSuite {
   private val root: Path =
     Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
@@ -15,10 +16,11 @@ class SourcePolicySpec extends AnyFunSuite {
       .find(d => Files.isDirectory(d.resolve("src/main/scala")))
       .getOrElse(fail("no src/main/scala above the working directory"))
 
-  /** Source files under src/main and src/test containing `re`, relative
-    * to the project root. */
-  private def filesMatching(re: Regex): Set[String] =
-    Seq("src/main", "src/test").flatMap { d =>
+  /** Source files under `dirs` containing `re`, relative to the project
+    * root. */
+  private def filesMatching(re: Regex,
+      dirs: Seq[String] = Seq("src/main", "src/test")): Set[String] =
+    dirs.flatMap { d =>
       Files.walk(root.resolve(d)).iterator().asScala
         .filter(p => p.toString.endsWith(".scala") &&
           re.findFirstIn(Files.readString(p)).isDefined)
@@ -33,5 +35,15 @@ class SourcePolicySpec extends AnyFunSuite {
   test("only QueryMetrics implements the job-accounting listener callbacks") {
     assert(filesMatching(("on" + "(JobStart|TaskEnd|StageCompleted)").r) ==
       Set("src/main/scala/graft/obs/QueryMetrics.scala"))
+  }
+
+  test("query modules hold no release hook or release function") {
+    assert(filesMatching(("onRelease" + "All|def " + "release").r,
+      Seq("src/main/scala/graft/queries")).isEmpty)
+  }
+
+  test("only the image decoder catches fatal errors") {
+    assert(filesMatching(("case _: " + "Throwable").r, Seq("src/main")) ==
+      Set("src/main/scala/graft/queries/Multimodal.scala"))
   }
 }

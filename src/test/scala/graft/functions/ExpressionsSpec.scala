@@ -14,7 +14,6 @@ class ExpressionsSpec extends AnyFunSuite {
   private val rnd = new Random(42)
 
   test("cosine_sim matches the HOF left-fold formula bit-for-bit") {
-    VectorFunctions.register(spark)
     val vecs = Seq.fill(50)(
       (Array.fill(64)(rnd.nextFloat() * 2 - 1),
         Array.fill(64)(rnd.nextFloat() * 2 - 1)))
@@ -33,7 +32,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("cosine_sim sanity: parallel=1, antiparallel=-1, orthogonal=0") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1f, 0f), Array(2f, 0f)),
       (Array(1f, 0f), Array(-3f, 0f)),
@@ -43,7 +41,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig matches the HOF md5/conv pipeline") {
-    VectorFunctions.register(spark)
     val docs = Seq.fill(30)(
       Seq.fill(5 + rnd.nextInt(40))(s"w${rnd.nextInt(50)}").mkString(" "))
     val aList = MinHashSig.A.mkString(", ")
@@ -64,7 +61,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("simhash_sig matches the HOF md5 majority-vote pipeline") {
-    VectorFunctions.register(spark)
     val docs = Seq.fill(30)(
       Seq.fill(5 + rnd.nextInt(60))(s"w${rnd.nextInt(40)}").mkString(" "))
     val df = docs.toDF("text")
@@ -83,7 +79,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("simhash_wide matches the HOF shingle majority-vote pipeline") {
-    VectorFunctions.register(spark)
     val docs = Seq.fill(30)(
       Seq.fill(5 + rnd.nextInt(60))(s"w${rnd.nextInt(40)}").mkString(" "))
     val df = docs.toDF("text")
@@ -103,21 +98,18 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("simhash_wide yields 0 below 3 tokens and skips null slots") {
-    VectorFunctions.register(spark)
     val df = Seq("one two", "one", "").toDF("text")
       .withColumn("sig", expr("simhash_wide(split(text, ' '))"))
     assert(df.filter($"sig" =!= 0L).count() == 0)
   }
 
   test("minhash_sig yields null below 3 tokens") {
-    VectorFunctions.register(spark)
     val df = Seq("one two", "one", "").toDF("text")
       .withColumn("sig", expr("minhash_sig(split(text, ' '))"))
     assert(df.filter($"sig".isNotNull).count() == 0)
   }
 
   test("identical docs share signatures; near-identical share most bands") {
-    VectorFunctions.register(spark)
     val base = Seq.fill(100)(s"tok${rnd.nextInt(30)}").mkString(" ")
     val near = base.split(" ").updated(50, "CHANGED").mkString(" ")
     val df = Seq(base, base, near).toDF("text")

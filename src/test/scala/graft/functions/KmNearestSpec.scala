@@ -31,7 +31,6 @@ class KmNearestSpec extends AnyFunSuite {
 
   private def compare(rows: Seq[(Seq[(Int, Seq[Double])], Seq[Long])])
       : Unit = {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = rows.toDF("cs_raw", "qv")
       .withColumn("cs", expr(
@@ -83,7 +82,6 @@ class KmNearestSpec extends AnyFunSuite {
   }
 
   test("empty centroid array yields null") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Seq.empty[(Int, Seq[Double])], Seq(1L)))
       .toDF("cs_raw", "qv")

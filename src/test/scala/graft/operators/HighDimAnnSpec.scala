@@ -25,7 +25,6 @@ class HighDimAnnSpec extends AnyFunSuite {
           |    AS float))""".stripMargin))
 
   test("768-dim cosine: codegen kernel matches a local replay") {
-    graft.functions.VectorFunctions.register(spark)
     val rows = vecs(6L)
       .crossJoin(broadcast(vecs(6L)
         .select(col("vec_id").as("pid"), col("embedding").as("pe"))))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{Tables, TestSpark}
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,7 +22,6 @@ class IvfIndexSpec extends AnyFunSuite {
       .select(col("probe_id"), col("neighbor_id"), col("rank"))
       .collect().map(_.toSeq).toSet
     val brute = {
-      VectorFunctions.register(spark)
       corpus.crossJoin(broadcast(probes))
         .filter(col("vec_id") =!= col("probe_id"))
         .withColumn("score", expr("cosine_sim(probe_emb, embedding)"))

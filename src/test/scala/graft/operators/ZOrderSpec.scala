@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{VectorFunctions, ZValue}
+import graft.functions.ZValue
 import graft.{Tables, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +31,6 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("z_value is SQL-visible and codegen-evaluable") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val rows = Seq((5L, 3L), (1000000L, 999999L), (0L, 1L))
       .toDF("a", "b")

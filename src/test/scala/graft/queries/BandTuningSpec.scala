@@ -17,7 +17,6 @@ class BandTuningSpec extends AnyFunSuite {
   private val configs = Seq((2, 8), (4, 4), (8, 2), (16, 1))
 
   test("per-config stats replay locally and candidate sets nest") {
-    graft.functions.VectorFunctions.register(spark)
     val sigs: Map[Long, Seq[Long]] = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         expr("minhash_sig(split(text, ' '))").as("mh"))

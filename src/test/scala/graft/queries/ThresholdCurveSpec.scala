@@ -67,7 +67,7 @@ class ThresholdCurveSpec extends AnyFunSuite {
   }
 
   test("the t=50 row is the shared cluster-label artifact's own census") {
-    val labels = Dedup.ensureClusterLabels(spark, sfDir)
+    Dedup.clusterLabels.warm(spark, sfDir)
     val sizes = SparkEntry.queries("q65_dedup_clusters")(spark, sfDir)
       .groupBy(col("cluster")).count()
       .collect().map(_.getLong(1))

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.TestSpark
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -20,7 +19,6 @@ class StreamingDedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def banded(docs: DataFrame): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     docs.withColumn("toks", split(col("text"), " "))
       .withColumn("mh", expr("minhash_sig(toks)"))
       .filter(col("mh").isNotNull)
