@@ -496,7 +496,7 @@ object Bench {
     val pair = runOracle().orElse(runOracle())
     val line = mkLine(short = false, pair)
     val streamLine = mkLine(short = true, pair)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

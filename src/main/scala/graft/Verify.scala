@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,21 +9,6 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // DuckDB (the oracle that reads this run's parquet dumps) mmaps
-    // blocks aggressively: a ~200-oracle suite on one connection peaks
-    // at ~85k live mappings vs the kernel default vm.max_map_count of
-    // 65530 — crossing it surfaces as "Out of Memory Error: Failed to
-    // allocate block of N bytes" with the box nearly empty. That is the
-    // exact r15 failure signature (11 correctness rows + 82 paired-
-    // oracle rows lost in q20..q31-shaped windows; reproduced this
-    // round and bisected to the map count via /proc/self/maps). The
-    // raise is VM-global and best-effort (root; no-op when already
-    // sufficient or not permitted) — the standard database sysctl.
-    try {
-      val p = java.nio.file.Paths.get("/proc/sys/vm/max_map_count")
-      if (java.nio.file.Files.readString(p).trim.toLong < 2097152L)
-        java.nio.file.Files.writeString(p, "2097152")
-    } catch { case NonFatal(_) => () }
     val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

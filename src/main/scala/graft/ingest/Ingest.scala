@@ -123,16 +123,19 @@ object Ingest {
   /** rejected() over an already-[[parse]]d frame. */
   def rejectedOfParsed(parsed: DataFrame): DataFrame =
     parsed.filter(!col("valid"))
-      .withColumn("reason",
-        // coalesce: a NULL topic makes the predicate NULL; classify it
-        // as invalid_topic, not fall-through
-        when(coalesce(!topicValid(col("topic")), lit(true)),
-          lit("invalid_topic"))
-          // coalesce: contains() on a NULL payload is NULL, and a missing
-          // payload IS a missing required key (message.go:72-75 order)
-          .when(coalesce(!col("payload").contains("\"value\""), lit(true)),
-            lit("missing_value"))
-          .when(col("value_type").isNull, lit("unsupported_value_type"))
-          .otherwise(lit("null_value")))
-      .select(col("topic"), col("payload"), col("reason"))
+      .select(col("topic"), col("payload"), reason.as("reason"))
+
+  /** Why a [[parse]]d row is invalid (meaningful on rows with `valid` =
+    * false only). */
+  val reason: Column =
+    // coalesce: a NULL topic makes the predicate NULL; classify it
+    // as invalid_topic, not fall-through
+    when(coalesce(!topicValid(col("topic")), lit(true)),
+      lit("invalid_topic"))
+      // coalesce: contains() on a NULL payload is NULL, and a missing
+      // payload IS a missing required key (message.go:72-75 order)
+      .when(coalesce(!col("payload").contains("\"value\""), lit(true)),
+        lit("missing_value"))
+      .when(col("value_type").isNull, lit("unsupported_value_type"))
+      .otherwise(lit("null_value"))
 }

@@ -34,7 +34,7 @@ object Graph {
     * 100 TB this is the difference between rounds × |E| and rounds ×
     * |frontier| of shuffle traffic — the GraphX edge-partitioning
     * argument. */
-  private[graft] val coEdges = Artifact("coEdges") { (s, d) =>
+  private[graft] val coEdges = Artifact("coEdges", eager = true) { (s, d) =>
     // raw loads: the pair build is join-first (self-join on order),
     // so the only movement should be the orderkey shuffle
     val li = Tables.raw(s, d, "lineitem")
@@ -70,7 +70,7 @@ object Graph {
     * graph build — orders⋈lineitem, pair distinct, bidirection — was
     * ~half of every q86 run's steady-state cost, and like the IVF/LSH
     * indexes it is a corpus artifact, not query work. */
-  private[graft] val prGraph = Artifact("prGraph") { (s, d) =>
+  private[graft] val prGraph = Artifact("prGraph", eager = true) { (s, d) =>
     // raw (no parallelism-floor scatter): the edge build is
     // join-first, so the tables' only movement should be the join's
     // own key shuffle. Nodes are INTEGER-keyed internally
@@ -99,7 +99,7 @@ object Graph {
     * CONSUMER (measured ~5× per q147 run). Persisted pre-partitioned
     * on src — every step join keys on it. */
   private[graft] val walkAdj =
-    Artifact.frame("walkAdj", uses = Seq(coEdges)) { (s, d) =>
+    Artifact.frame("walkAdj", eager = true, uses = Seq(coEdges)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val e = coEdges.get(s, d)._1
       val both = e.select(col("x").as("src"), col("y").as("dst"))
@@ -591,7 +591,7 @@ object Graph {
   // The dst twin is built from the already-persisted src copy (one
   // shuffle at warmup) — the GraphX both-orientations trade: O(|E|)
   // extra memory for zero edge movement inside the iteration.
-  private[graft] val hitsEdges = Artifact("hitsEdges") { (s, d) =>
+  private[graft] val hitsEdges = Artifact("hitsEdges", eager = true) { (s, d) =>
     val bySrc = graft.Tuning.compactPersist(
       Tables.raw(s, d, "orders")
         .join(Tables.raw(s, d, "lineitem"),

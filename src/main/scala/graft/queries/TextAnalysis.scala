@@ -1614,7 +1614,7 @@ object TextAnalysis {
     * setup artifact and the DuckDB pair gets the same amortization via
     * [[oraclePrelude]]'s pre-built table (r14 VERDICT #3 lifecycle-twin
     * discipline). */
-  private[graft] val lmScores = Artifact.frame("lmScores") { (s, d) =>
+  private[graft] val lmScores = Artifact.frame("lmScores", eager = true) { (s, d) =>
     lmScoresBuild(s, d).localCheckpoint(true)
   }
 

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.StructType
 /** Commit-log (manifest) table format — the production answer to the two
   * crash windows [[WarehouseCatalog]] documents:
   *
-  *  1. its appendRouted moves files THEN writes the batch marker — a
-  *     crash between the last move and the marker replays the batch into
-  *     duplicates;
+  *  1. its appendRouted publishes files THEN writes the batch marker — a
+  *     crash between the last rename and the marker replays the batch
+  *     into duplicates;
   *  2. its compact swaps directories with two renames — a reader (or
   *     crash) inside the swap sees a missing table.
   *
@@ -441,17 +441,15 @@ final class ManifestCatalog(spark: SparkSession, root: String,
 
   // ------------------------------------------------- deferred batch mode
 
-  // Between beginBatch and commitBatch every append only STAGES file
-  // moves and records the adds here; commitBatch publishes them together
-  // with the batch id in one atomic rename. Guarded by `this` — the
-  // router's append pool calls appendRouted concurrently.
+  // Between beginBatch and commitBatch every append only writes its
+  // files and records the adds here; commitBatch publishes them together
+  // with the batch id in one atomic rename. Guarded by `this` — appends
+  // may run concurrently.
   private val pendingAdds =
     scala.collection.mutable.Map.empty[String, Seq[String]]
   private val pendingSchemas =
     scala.collection.mutable.Map.empty[String, String]
   private var deferring = false
-
-  override def defersAppends: Boolean = true
 
   override def beginBatch(batchId: Long): Unit = synchronized {
     // pending adds from a previous FAILED batch are dropped — their
@@ -916,25 +914,13 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       commitVersion(batchId, added, schemas = schemas)
   }
 
+  /** ONE write job for every routed table: each task writes its part
+    * file per table straight into the table directory, under a name no
+    * other write uses ([[PartWriter]]). The files are invisible until the
+    * manifest commit lists them; a failed write leaves unlisted files that
+    * [[vacuum]] reclaims. */
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    val added = withStaging(".staging-") { staging =>
-      df.write.partitionBy("tableName")
-        .mode(SaveMode.Overwrite).parquet(staging.toString)
-      Option(staging.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("tableName=")).map { pdir =>
-          val table = WarehouseCatalog.unescapePartitionName(
-            pdir.getName.stripPrefix("tableName="))
-          val dest = new File(rootDir, table)
-          dest.mkdirs()
-          val moved = pdir.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map { f =>
-              if (!f.renameTo(new File(dest, f.getName)))
-                throw new java.io.IOException(s"move failed: $f")
-              f.getName
-            }.toSeq
-          table -> moved
-        }.toMap
-    }
+    val added = PartWriter.writeRouted(df, root, hidden = false)
     if (added.nonEmpty && !recordPending(added, Map.empty))
       commitVersion(None, added)
     true
@@ -1169,8 +1155,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * died mid-write, delta versions already folded into the latest
     * checkpoint, and superseded checkpoints.
     *
-    * `retentionMs` protects IN-FLIGHT writers: [[writeParts]] moves part
-    * files into the table directory under their final names BEFORE the
+    * `retentionMs` protects IN-FLIGHT writers: [[writeParts]] and
+    * [[appendRouted]] put part files into the table directory under
+    * their final names BEFORE the
     * manifest commit references them, so to a concurrent vacuum an
     * about-to-be-committed part is indistinguishable from a crashed
     * append's orphan. Files younger than the retention window (mtime-
@@ -1250,8 +1237,9 @@ object ManifestCatalog {
   val DefaultVacuumRetentionMs: Long = 20L * 60 * 1000
 
   /** Name prefixes of the root-level write staging directories
-    * (`appendRouted`, and `writeParts` under compaction and row-level
-    * rewrites) that [[ManifestCatalog.vacuum]] reclaims once stale. */
+    * (`writeParts` under appends, compaction and row-level rewrites; and
+    * `appendRouted` before it wrote into table directories) that
+    * [[ManifestCatalog.vacuum]] reclaims once stale. */
   private[sinks] val StagingPrefixes: Seq[String] =
     Seq(".staging-", ".rewrite-")
 

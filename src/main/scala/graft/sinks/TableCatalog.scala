@@ -24,10 +24,13 @@ trait TableCatalog {
   /** W5 — bulk append one micro-batch's rows for one table. */
   def append(table: String, df: DataFrame): Unit
   /** W5, many-table fast path: append a routed frame with columns
-    * (tableName, client, device, value) spanning `tables` in ONE write
-    * job. Returns false if this catalog can't (caller falls back to
-    * per-table [[append]]). At high sensor cardinality this is the
-    * difference between 2 jobs per batch and N-tables jobs per batch. */
+    * [[TableCatalog.RoutedColumns]] — `(tableName, client, device,
+    * value_type, value_d, value_s)` — spanning `tables` in ONE write job;
+    * each table gets `(client, device, value)`, `value` read from
+    * `value_d` or `value_s` by the row's value type. Returns false if
+    * this catalog can't (caller falls back to per-table [[append]]). At
+    * high sensor cardinality this is the difference between one job per
+    * batch and N-tables jobs per batch. */
   def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = false
 
   /** Exactly-once support: has this streaming batch already been fully
@@ -43,15 +46,13 @@ trait TableCatalog {
     * no-op — appends are visible immediately (at-least-once on the exact
     * crash boundary, as WarehouseCatalog documents). */
   def beginBatch(batchId: Long): Unit = ()
-  /** True when appends made after [[beginBatch]] stay invisible until
-    * [[commitBatch]]. Only then may a batch's side output run beside its
-    * appends: where appends land at once, a failed side output after
-    * them would leave rows that the batch's replay appends again.
-    * Default: false. */
-  def defersAppends: Boolean = false
 }
 
 object TableCatalog {
+  /** The columns of an [[TableCatalog.appendRouted]] frame. */
+  val RoutedColumns: Seq[String] =
+    Seq("tableName", "client", "device", "value_type", "value_d", "value_s")
+
   /** The DEFAULT pipeline catalog: the [[ManifestCatalog]] commit log.
     * It closes both crash windows the plain parquet-directory layout has
     * (batch-marker-vs-data replay, compaction swap) at the cost of one
@@ -88,31 +89,11 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
   override def append(table: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(s"$root/$table")
 
-  private def unescapePartitionName(s: String): String =
-    WarehouseCatalog.unescapePartitionName(s)
-
-  /** One dynamic-partitioned write job for ALL tables in the slice, then
-    * per-file renames from the staging dir into each table dir (parquet
-    * part-file names carry a write UUID, so moves can't collide). */
+  /** One write job for ALL tables in the slice: each task writes its
+    * part file per table straight into the table directory under a
+    * hidden name and renames it when it closes it ([[PartWriter]]). */
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    val staging = new java.io.File(rootDir,
-      s".staging-${java.util.UUID.randomUUID()}")
-    try {
-      df.write.partitionBy("tableName")
-        .mode(SaveMode.Overwrite).parquet(staging.toString)
-      Option(staging.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("tableName=")).foreach { pdir =>
-          val table = unescapePartitionName(
-            pdir.getName.stripPrefix("tableName="))
-          val dest = new java.io.File(rootDir, table)
-          dest.mkdirs()
-          pdir.listFiles().filter(_.getName.endsWith(".parquet"))
-            .foreach { f =>
-              if (!f.renameTo(new java.io.File(dest, f.getName)))
-                throw new java.io.IOException(s"move failed: $f")
-            }
-        }
-    } finally rm(staging)
+    PartWriter.writeRouted(df, root, hidden = true)
     true
   }
 
@@ -174,23 +155,6 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
     Option(new java.io.File(s"$root/$table").listFiles())
       .getOrElse(Array.empty)
       .count(f => f.getName.endsWith(".parquet"))
-}
-
-object WarehouseCatalog {
-  /** Inverse of Spark's partition-path escaping: %XX sequences only.
-    * NOT URLDecoder — that also maps '+' to space, silently splitting a
-    * table named "a+b" into a phantom directory "a b". */
-  def unescapePartitionName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 3 <= s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
 }
 
 /** SQL-text generation for a ClickHouse (JDBC) catalog. Connection handling

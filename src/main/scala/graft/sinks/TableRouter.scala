@@ -1,8 +1,11 @@
 package graft.sinks
 
+import graft.ingest.Ingest
 import graft.registry.{ColumnDef, SchemaRegistry}
 import java.util.concurrent.{Callable, ExecutionException, Future}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -27,10 +30,11 @@ final case class RouteStats(
   *     registry insert;
   *   - then W5 bulk append of the typed per-table slice.
   *
-  * The only driver-side collect is the per-batch `(tableName, value_type)`
-  * histogram ([[TableRouter.countBatch]]) — cardinality = number of
-  * distinct sensors, thousands at most, never data-sized. Row data itself
-  * moves executor-side only.
+  * The only driver-side collects are the per-batch `(tableName,
+  * value_type)` histogram ([[TableRouter.countBatch]]) and the part-file
+  * names of the routed write — cardinality = number of distinct sensors,
+  * thousands at most, never data-sized. Row data itself moves
+  * executor-side only.
   *
   * Routed table schema is the reference's golden shape
   * `[client String, device String, value <inferred>]`
@@ -59,9 +63,9 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
   def isCommitted(batchId: Long): Boolean =
     batchId >= 0 && catalog.batchCommitted(batchId)
 
-  // shared bounded pool for a batch's writes (appends and side outputs) —
-  // routeBatch runs per micro-batch and must not churn a fresh thread
-  // pool on the hot path
+  // shared bounded pool for a batch's side writes (the schema-reject
+  // sink, per-table fallback appends) — routeBatch runs per micro-batch
+  // and must not churn a fresh thread pool on the hot path
   private lazy val appendPool =
     java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, appendParallelism),
@@ -95,31 +99,26 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     * already committed are skipped — effectively-once appends across
     * query restarts for catalogs that record commits. */
   def routeBatch(batch: DataFrame, batchId: Long = -1L): RouteStats =
-    routeBatch(batch, batchId, TableRouter.countBatch(batch).hist, None)
+    routeBatch(batch, batchId, TableRouter.countBatch(batch).hist)
 
-  /** [[routeBatch]] with the caller's histogram of `batch` and an
-    * optional side-output write (the pipeline's rejected rows).
+  /** [[routeBatch]] with the caller's histogram of `batch`. `histogram`
+    * is evaluated only when the batch is not committed yet, before the
+    * catalog's [[TableCatalog.beginBatch]]: a caller can run its own
+    * per-batch work there (the pipeline counts and writes its rejected
+    * rows in the same pass), which a replay of a committed batch skips.
     *
-    * The typed appends and the schema-reject sink run concurrently on the
-    * append pool, and all of them finish before `commitBatch`; any
-    * failure skips the commit and is rethrown. `sideWrite` joins them
-    * when the catalog holds appends back until the commit
-    * ([[TableCatalog.defersAppends]]); otherwise it runs first, on its
-    * own, so a failed one writes no routed rows. Either way the side
-    * output is at-least-once (a replay of the uncommitted batch writes it
-    * again) and a failed side output costs the routed rows nothing on
-    * replay.
+    * Every table's rows go to the catalog in ONE [[TableCatalog
+    * .appendRouted]] call, beside the schema-reject sink; all writes
+    * finish before `commitBatch`, and any failure skips the commit and is
+    * rethrown.
     *
     * `batch` is read once per write and is not cached here: pass a
     * persisted frame when it is costly to recompute. */
   def routeBatch(batch: DataFrame, batchId: Long,
-      histogram: => TableRouter.Histogram,
-      sideWrite: Option[() => Unit]): RouteStats = {
+      histogram: => TableRouter.Histogram): RouteStats = {
     if (batchId >= 0 && catalog.batchCommitted(batchId))
       return RouteStats(Map.empty, Map.empty, alreadyCommitted = true)
     val hist = histogram
-    val sideBeside = batchId >= 0 && catalog.defersAppends
-    if (!sideBeside) sideWrite.foreach(_())
     // transactional catalogs defer append visibility until the single
     // commitBatch below — rows + batch id become visible atomically
     if (batchId >= 0) catalog.beginBatch(batchId)
@@ -127,8 +126,6 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     def submit(body: => Unit): Unit = writes += appendPool.submit(
       new Callable[Unit] { def call(): Unit = body })
     val stats = try {
-      // needs no routing decision, so it starts before the DDL below
-      if (sideBeside) sideWrite.foreach(w => submit(w()))
       val appended = scala.collection.mutable.Map.empty[String, Long]
       val rejected = scala.collection.mutable.Map.empty[String, Long]
       val badNames = scala.collection.mutable.Map.empty[String, Long]
@@ -167,31 +164,6 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
           }
       }
 
-      // Phase 2: appends. Fast path — ONE dynamic-partitioned write job
-      // per value type (validated tasks always have vt == table type, so
-      // there are at most 2 groups), covering every table in the slice.
-      // Catalogs without a routed write (JDBC) fall back to per-table
-      // jobs, serial within the value type's pool thread.
-      appendTasks.toSeq.groupBy(t => (t._2, t._3)).toSeq.sortBy(_._1)
-        .foreach { case ((vt, valueCol), tasks) =>
-          submit {
-            val tables = tasks.map(_._1)
-            val routedDf = batch
-              .filter(col("value_type") === vt &&
-                col("tableName").isInCollection(tables))
-              .select(col("tableName"), col("client"), col("device"),
-                col(valueCol).as("value"))
-            if (!catalog.appendRouted(routedDf, tables)) tables.foreach {
-              table =>
-                catalog.append(table,
-                  batch.filter(col("tableName") === table &&
-                      col("value_type") === vt)
-                    .select(col("client"), col("device"),
-                      col(valueCol).as("value")))
-            }
-          }
-        }
-
       // schema-mismatched and name-invalid slices go to the configured
       // side output — "rejected" must mean visible, not counted away
       if (rejected.nonEmpty || badNames.nonEmpty)
@@ -207,6 +179,28 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
           (mismatchCond ++ nameCond).reduceOption(_ || _)
             .foreach(cond => submit(sink(batch.filter(cond))))
         }
+
+      // Phase 2: appends. Fast path — ONE routed write for every table
+      // and both value types (validated tasks always have vt == table
+      // type). Catalogs without a routed write (JDBC) fall back to one
+      // append per table, on the pool.
+      if (appendTasks.nonEmpty) {
+        val cond = appendTasks.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (vt, tasks) =>
+            col("value_type") === vt &&
+              col("tableName").isInCollection(tasks.map(_._1))
+          }.reduce(_ || _)
+        val routedDf = batch.filter(cond)
+          .select(TableCatalog.RoutedColumns.map(col): _*)
+        if (!catalog.appendRouted(routedDf, appendTasks.map(_._1).toSeq))
+          appendTasks.foreach { case (table, vt, valueCol) =>
+            submit(catalog.append(table,
+              batch.filter(col("tableName") === table &&
+                  col("value_type") === vt)
+                .select(col("client"), col("device"),
+                  col(valueCol).as("value"))))
+          }
+      }
       RouteStats(appended.toMap, rejected.toMap, badNames.toMap)
     } catch { case NonFatal(e) =>
       // writes already submitted end before the batch fails; their
@@ -247,20 +241,50 @@ object TableRouter {
     * one entry per (table, value type), and the driver merges the maps —
     * thousands of entries at most, never data-sized. A frame without a
     * `valid` column (the output of [[graft.ingest.Ingest.records]]) counts
-    * every row as valid. */
-  def countBatch(df: DataFrame): BatchCounts = {
+    * every row as valid.
+    *
+    * With `rejectedDir`, `df` is a [[graft.ingest.Ingest.parse]]d frame
+    * and the same job writes its invalid rows, as
+    * [[graft.ingest.Ingest.rejectedOfParsed]] would, into that directory:
+    * at most one parquet file per task, written under a hidden name and
+    * renamed when the task closes it ([[PartWriter]]). */
+  def countBatch(df: DataFrame,
+      rejectedDir: Option[String] = None): BatchCounts = {
     val valid = if (df.columns.contains("valid")) col("valid") else lit(true)
-    val perPartition = df.select(valid, col("tableName"), col("value_type"))
-      .rdd.mapPartitions { rows =>
-        val m = scala.collection.mutable.HashMap
-          .empty[(Boolean, String, String), Long]
-        rows.foreach { r =>
-          val k = if (r.getBoolean(0)) (true, r.getString(1), r.getString(2))
-            else (false, null, null)
-          m(k) = m.getOrElse(k, 0L) + 1
-        }
-        m.iterator
+    val rejects = rejectedDir.map(dir => (dir,
+      PartWriter(df.sparkSession, Ingest.rejectedOfParsed(df).schema)))
+    val cols = Seq(valid, col("tableName"), col("value_type")) ++
+      rejects.toSeq.flatMap(_ =>
+        Seq(col("topic"), col("payload"), when(!valid, Ingest.reason)))
+    val writeId = java.util.UUID.randomUUID().toString
+    val perPartition = PartWriter.withSqlConfs(df.sparkSession) {
+      df.select(cols: _*).queryExecution.toRdd.mapPartitions { rows =>
+        PartWriter.inTask(writeId) { task =>
+          val m = scala.collection.mutable.HashMap
+            .empty[(Boolean, String, String), Long]
+          var part: PartWriter.Part = null
+          val out = new GenericInternalRow(3)
+          def str(r: InternalRow, i: Int): String =
+            if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+          rows.foreach { r =>
+            val k = if (r.getBoolean(0)) (true, str(r, 1), str(r, 2))
+              else {
+                rejects.foreach { case (dir, w) =>
+                  if (part == null) part = task.open(w, dir, hidden = true)
+                  (0 until 3).foreach { i =>
+                    if (r.isNullAt(3 + i)) out.setNullAt(i)
+                    else out.update(i, r.getUTF8String(3 + i))
+                  }
+                  part.write(out)
+                }
+                (false, null, null)
+              }
+            m(k) = m.getOrElse(k, 0L) + 1
+          }
+          m.toSeq
+        }.iterator
       }.collect()
+    }
     val merged = perPartition.groupMapReduce(_._1)(_._2)(_ + _)
     BatchCounts(
       merged.getOrElse((false, null, null), 0L),

@@ -92,35 +92,36 @@ object IngestPipeline {
         // table) never outnumber the task slots, and the input decides
         // the width — a one-connector feed stays one partition, a sharded
         // backlog folds down to the slot count. Parse ONCE and persist;
-        // ONE shuffle-free count over the parse (TableRouter.countBatch)
-        // then decides whether a rejected write happens, gates the strict
-        // probe and is the router's histogram.
+        // then two shuffle-free jobs per batch: ONE pass over the parse
+        // (TableRouter.countBatch) counts it, writes its rejected rows and
+        // gates the strict probe, and ONE routed write appends every
+        // table.
         val slots = batch.sparkSession.sparkContext.defaultParallelism
         val parsed = Ingest.parse(
           batch.select("topic", "payload").coalesce(slots)).persist()
         try {
-          val counts = TableRouter.countBatch(parsed)
-          val rej = Ingest.rejectedOfParsed(parsed)
-          if (strictPoisonStop && counts.invalid > 0) {
-            // strict-compat: reference halts on the first bad message
-            val bad = rej.limit(1).collect().head
-            throw new PoisonMessageException(
-              s"poison message on topic '${bad.getAs[String]("topic")}'" +
-                s": ${bad.getAs[String]("reason")}")
-          }
-          // Side output BEFORE the data commit: the router runs it first,
-          // or beside the appends on a catalog that holds them back until
-          // the commit, and commits only once both succeeded. If it ran
+          // The router runs the counting pass only for a batch it has not
+          // committed, and before it begins the batch: the rejected rows
+          // are written BEFORE the data commit. If they were written
           // after, a crash between commitBatch and the rejected write
           // would lose those rows forever (the replay guard would skip
           // them). This order gives the audit trail at-least-once
           // (duplicates possible on replay of an uncommitted batch) and
           // the data path effectively-once — the right asymmetry for an
-          // audit log.
-          val rejectedWrite = rejectedDir.filter(_ => counts.invalid > 0)
-            .map(dir => () => rej.write.mode("append").parquet(dir))
-          router.routeBatch(Ingest.recordsOfParsed(parsed), batchId,
-            counts.hist, rejectedWrite)
+          // audit log. Strict mode writes no rejected rows: it fails the
+          // batch on the first one.
+          router.routeBatch(Ingest.recordsOfParsed(parsed), batchId, {
+            val counts = TableRouter.countBatch(parsed,
+              rejectedDir.filter(_ => !strictPoisonStop))
+            if (strictPoisonStop && counts.invalid > 0) {
+              // strict-compat: reference halts on the first bad message
+              val bad = Ingest.rejectedOfParsed(parsed).limit(1).collect().head
+              throw new PoisonMessageException(
+                s"poison message on topic '${bad.getAs[String]("topic")}'" +
+                  s": ${bad.getAs[String]("reason")}")
+            }
+            counts.hist
+          })
           // standing cluster fold AFTER the data commit: a crash in
           // between replays the batch — the router skips (isCommitted)
           // and the fold runs (its own lastBatch guard), so neither

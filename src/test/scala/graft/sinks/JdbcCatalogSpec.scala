@@ -88,14 +88,20 @@ class JdbcCatalogSpec extends AnyFunSuite {
     assert(!registry2.contains(JdbcCatalog.BatchTable))
   }
 
-  test("a failed side write appends no rows; the restart appends them once") {
-    // JDBC appends are visible at once, so the side output (the
-    // pipeline's rejected rows) must succeed before any append starts
+  test("pipeline: a failed rejected write appends no rows; the restart " +
+      "appends them once") {
+    // JDBC appends are visible at once, so the batch's rejected rows
+    // (written by its counting pass) must succeed before any append starts
+    import graft.sources.mqtt.InMemoryBroker
+    import graft.streaming.IngestPipeline
     val (catalog, url) = freshDb()
-    val batch = batchOf(
-      ("/c/d/out/sensors/side", """{"value":1.0}"""),
-      ("/c/d/out/sensors/side", """{"value":2.0}"""))
-    val hist = TableRouter.countBatch(batch).hist
+    val cid = s"jdbc-rej-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val rejDir = new java.io.File(
+      java.nio.file.Files.createTempDirectory("rej").toFile, "rejected")
+    java.nio.file.Files.write(rejDir.toPath, Array[Byte](1)) // not a dir
     def rows(): Int = if (!catalog.listTables().contains("side")) 0 else {
       val c = DriverManager.getConnection(url)
       try {
@@ -104,24 +110,37 @@ class JdbcCatalogSpec extends AnyFunSuite {
         rs.next(); rs.getInt(1)
       } finally c.close()
     }
-    val router1 = new TableRouter(new SchemaRegistry, catalog)
-    val e = intercept[java.io.IOException](router1.routeBatch(batch, 7L,
-      hist, Some(() => throw new java.io.IOException("disk full"))))
-    assert(e.getMessage == "disk full")
-    assert(!catalog.batchCommitted(7L))
-    assert(rows() == 0, "routed rows written before the side output")
+    def newQuery() = {
+      val source = IngestPipeline.mqttStream(spark, cid, Seq("#"))
+      // restart: fresh registry from the catalog
+      val router = new TableRouter(new SchemaRegistry, catalog)
+      router.bootstrap()
+      IngestPipeline.start(source, router, ckpt,
+        rejectedDir = Some(rejDir.toString))
+    }
+    InMemoryBroker.publish("/c/d/out/sensors/side", """{"value":1.0}""")
+    InMemoryBroker.publish("/c/d/out/sensors/side", """{"value":2.0}""")
+    InMemoryBroker.publish("bad-topic", """{"value":3.0}""")
 
-    // restart: fresh registry from the catalog, the side output works now
-    val registry2 = new SchemaRegistry
-    val router2 = new TableRouter(registry2, catalog)
-    router2.bootstrap()
-    var sideRuns = 0
-    val stats = router2.routeBatch(batch, 7L, hist, Some(() => sideRuns += 1))
-    assert(stats.appended == Map("side" -> 2L) && sideRuns == 1)
-    assert(catalog.batchCommitted(7L))
-    val replay = router2.routeBatch(batch, 7L, hist, Some(() => sideRuns += 1))
-    assert(replay.alreadyCommitted && sideRuns == 1)
-    assert(rows() == 2, "routed rows not exactly once")
+    val q1 = newQuery()
+    try {
+      val failed = try { q1.processAllAvailable(); false }
+      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException =>
+        true }
+      assert(failed, "a failed rejected write must fail the query")
+      assert(!catalog.batchCommitted(0L))
+      assert(rows() == 0, "routed rows written before the rejected rows")
+    } finally if (q1.isActive) q1.stop()
+
+    // fix the rejected directory and restart from the checkpoint
+    assert(rejDir.delete())
+    val q2 = newQuery()
+    try {
+      q2.processAllAvailable()
+      assert(catalog.batchCommitted(0L))
+      assert(rows() == 2, "routed rows not exactly once")
+      assert(spark.read.parquet(rejDir.toString).count() == 1)
+    } finally q2.stop()
   }
 
   test("second batch appends without re-DDL; mismatch rejected") {

@@ -46,7 +46,10 @@ class ManifestCatalogSpec extends AnyFunSuite {
   test("appendRouted makes all routed tables visible atomically") {
     val cat = freshCatalog()
     val routed = Seq(("t1", "c1", 1.0), ("t2", "c2", 2.0), ("t1", "c3", 3.0))
-      .toDF("tableName", "client", "value")
+      .map { case (t, c, v) =>
+        (t, c, "d", "Float64", Option(v), Option.empty[String])
+      }
+      .toDF(TableCatalog.RoutedColumns: _*)
     assert(cat.appendRouted(routed, Seq("t1", "t2")))
     assert(cat.read("t1").count() == 2 && cat.read("t2").count() == 1)
   }
@@ -91,7 +94,8 @@ class ManifestCatalogSpec extends AnyFunSuite {
   test("crashed batch (no commit) leaves NOTHING visible; vacuum reclaims") {
     val cat = freshCatalog()
     cat.beginBatch(5L)
-    val routed = Seq(("t", "c", 1.0)).toDF("tableName", "client", "value")
+    val routed = Seq(("t", "c", "d", "Float64", Option(1.0),
+      Option.empty[String])).toDF(TableCatalog.RoutedColumns: _*)
     cat.appendRouted(routed, Seq("t")) // staged, not committed
     // "crash": beginBatch of the retry drops the stale pending adds
     assert(!cat.batchCommitted(5L))

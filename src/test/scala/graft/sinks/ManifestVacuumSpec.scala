@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.TestSpark
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Vacuum's retention window. [[ManifestCatalog.writeParts]] moves part
@@ -80,10 +81,12 @@ class ManifestVacuumSpec extends AnyFunSuite {
     // four tasks, one fails: the others are killed while the job fails
     val bad = spark.range(0, 4, 1, 4).select(boom($"id").as("k"))
     (1 to 5).foreach { _ =>
-      // routed append (.staging-*) and a plain append (.rewrite-*)
-      intercept[Exception](cat.appendRouted(
-        bad.select($"k", org.apache.spark.sql.functions.lit("t")
-          .as("tableName")), Seq("t")))
+      // routed append (writes in place) and a plain append (.rewrite-*)
+      intercept[Exception](cat.appendRouted(bad.select(
+        lit("t").as("tableName"), $"k".cast("string").as("client"),
+        lit("d").as("device"), lit("Float64").as("value_type"),
+        $"k".cast("double").as("value_d"),
+        lit(null).cast("string").as("value_s")), Seq("t")))
       intercept[Exception](cat.append("t", bad))
       assert(stagingDirs(root).isEmpty, s"leaked: ${stagingDirs(root)}")
     }

@@ -203,6 +203,70 @@ class IngestPipelineSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  test("a failed routing step fails the batch after its rejected write") {
+    // the counting pass writes the rejected rows before the router's
+    // DDL and appends; a failure there fails the batch before its commit
+    // (rejected rows at least once), and the restart routes it once
+    val cid = s"ddlfail-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val wh = Files.createTempDirectory("wh").toString
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    val rej = Files.createTempDirectory("rej").toString
+    val catalog = TableCatalog.default(spark, wh)
+    val ddlFails = new TableCatalog {
+      def listTables(): Seq[String] = catalog.listTables()
+      def describe(table: String): Seq[graft.registry.ColumnDef] =
+        catalog.describe(table)
+      def createTable(table: String,
+          cols: Seq[graft.registry.ColumnDef]): Unit =
+        throw new IllegalStateException("ddl")
+      def append(table: String, df: org.apache.spark.sql.DataFrame): Unit =
+        catalog.append(table, df)
+      override def appendRouted(df: org.apache.spark.sql.DataFrame,
+          tables: Seq[String]): Boolean = catalog.appendRouted(df, tables)
+      override def batchCommitted(batchId: Long): Boolean =
+        catalog.batchCommitted(batchId)
+      override def beginBatch(batchId: Long): Unit =
+        catalog.beginBatch(batchId)
+      override def commitBatch(batchId: Long): Unit =
+        catalog.commitBatch(batchId)
+    }
+    def newQuery(c: TableCatalog) = {
+      val source = IngestPipeline.mqttStream(spark, cid, Seq("#"))
+      IngestPipeline.start(source, new TableRouter(new SchemaRegistry, c),
+        ckpt, rejectedDir = Some(rej))
+    }
+    InMemoryBroker.publish("/c/d/out/sensors/x", """{"value":1.0}""")
+    InMemoryBroker.publish("/c/d/out/sensors/x", """{"value":2.0}""")
+    InMemoryBroker.publish("bad-topic", """{"value":3.0}""")
+    def reasons() = spark.read.parquet(rej).select("reason").collect()
+      .map(_.getString(0)).toSeq
+
+    val q1 = newQuery(ddlFails)
+    try {
+      val failed = try { q1.processAllAvailable(); false }
+      catch { case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.getMessage == "ddl"), s"not the DDL failure: $e")
+        true }
+      assert(failed, "a failed DDL must fail the query")
+      assert(!catalog.batchCommitted(0L))
+      assert(catalog.listTables().isEmpty, "routed rows became visible")
+      assert(reasons() == Seq("invalid_topic"), "rejected rows not written")
+    } finally if (q1.isActive) q1.stop()
+
+    val q2 = newQuery(catalog)
+    try {
+      q2.processAllAvailable()
+      val vals = catalog.read("x").collect()
+        .map(_.getAs[Double]("value")).sorted.toSeq
+      assert(vals == Seq(1.0, 2.0), s"warehouse rows not exactly once: $vals")
+      assert(reasons().toSet == Set("invalid_topic"),
+        "rejected rows not at least once")
+    } finally q2.stop()
+  }
+
   test("committed batch replay is skipped (idempotent routeBatch)") {
     val wh = Files.createTempDirectory("wh").toString
     val catalog = TableCatalog.default(spark, wh)

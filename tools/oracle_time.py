@@ -17,25 +17,21 @@ import duckdb
 # queries like the quantile/calibration oracles add 30-55k mappings
 # each before coalescing). The kernel default vm.max_map_count=65530 is
 # BELOW that peak, and hitting it surfaces as "Out of Memory Error:
-# Failed to allocate block of N bytes" with >100 GB free — the failure
-# that cost r15's driver runs 82 oracle rows and 11 correctness rows
-# (every "OOM" clustered right where the map count crossed 65530, and
-# recovered exactly when coalescing brought it back down). Raising the
-# limit is the standard database sysctl; best-effort (needs root,
-# no-op where already sufficient or not permitted).
-def _ensure_map_count(want=2097152):
+# Failed to allocate block of N bytes" with >100 GB free. The limit is
+# a host setting, so this only warns; raise it yourself
+# (sysctl vm.max_map_count=2097152) where that is allowed.
+def _warn_map_count(want=2097152):
     try:
         with open("/proc/sys/vm/max_map_count") as f:
-            if int(f.read()) >= want:
-                return
-        with open("/proc/sys/vm/max_map_count", "w") as f:
-            f.write(str(want))
-        print(f"[oracle_time] raised vm.max_map_count to {want}",
-              file=sys.stderr)
-    except Exception:
-        pass
+            cur = int(f.read())
+    except (OSError, ValueError):
+        return
+    if cur < want:
+        print(f"WARNING: vm.max_map_count is {cur}, DuckDB oracles need "
+              f"{want}; large oracles may fail with a spurious "
+              f"'Out of Memory Error'", file=sys.stderr)
 
-_ensure_map_count()
+_warn_map_count()
 
 sfdir = sys.argv[1]
 oracle_path = sys.argv[2]
