@@ -88,8 +88,7 @@ class JdbcCatalogSpec extends AnyFunSuite {
     assert(!registry2.contains(JdbcCatalog.BatchTable))
   }
 
-  test("pipeline: a failed rejected write appends no rows; the restart " +
-      "appends them once") {
+  test("a failed side write appends no rows; the restart appends them once") {
     // JDBC appends are visible at once, so the batch's rejected rows
     // (written by its counting pass) must succeed before any append starts
     import graft.sources.mqtt.InMemoryBroker
