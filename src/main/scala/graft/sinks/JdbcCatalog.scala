@@ -97,10 +97,11 @@ final class JdbcCatalog(connect: () => Connection, dialect: SqlDialect)
 
   // ---- batch-commit markers: effectively-once across foreachBatch
   // replays. The marker INSERT runs after all appends (commitBatch is
-  // called last by the router), leaving the same marker-after-data crash
-  // window WarehouseCatalog documents — ClickHouse has no cross-statement
-  // transactions, so ManifestCatalog remains the airtight default; this
-  // closes the COMMON path (clean restart replaying the last batch).
+  // called last by the router), so a crash between the last append and
+  // the marker replays the batch into duplicates — ClickHouse has no
+  // cross-statement transactions, so ManifestCatalog remains the airtight
+  // default; this closes the COMMON path (clean restart replaying the
+  // last batch).
   private def ensureBatchTable(c: Connection): Unit = {
     val st = c.createStatement()
     try st.execute(dialect.createTable(JdbcCatalog.BatchTable,

@@ -6,17 +6,17 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 
 import graft.registry.ColumnDef
-import org.apache.spark.JobExecutionStatus
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Commit-log (manifest) table format — the production answer to the two
-  * crash windows [[WarehouseCatalog]] documents:
+/** Commit-log (manifest) table format. It closes the two crash windows
+  * a plain parquet-directory layout (one directory per table, files
+  * visible once written) has:
   *
-  *  1. its appendRouted publishes files THEN writes the batch marker — a
-  *     crash between the last rename and the marker replays the batch
+  *  1. an append publishes its files THEN writes the batch marker — a
+  *     crash between the last file and the marker replays the batch
   *     into duplicates;
-  *  2. its compact swaps directories with two renames — a reader (or
+  *  2. a compaction swaps directories with two renames — a reader (or
   *     crash) inside the swap sees a missing table.
   *
   * Here data files are INVISIBLE until a manifest version commits, and a
@@ -40,6 +40,11 @@ import org.apache.spark.sql.types.StructType
   * travel reads each version under the schema recorded AT that
   * version). `appendRouted` (the dynamic router path) keeps
   * schema-inference reads.
+  *
+  * Every part file is written by [[PartWriter]] straight into its table
+  * directory under a name no other write uses, and is invisible until a
+  * commit lists it: a failed write leaves only unlisted files, which
+  * [[vacuum]] reclaims.
   *
   * **Concurrency**: commits use optimistic concurrency — the version
   * file is PUBLISHED via hard link (atomic fail-on-exists across
@@ -658,7 +663,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val stored = snapshotFull().schemas
     val (aligned, recorded) =
       evolveFor(stored.get(table).map(decodeSchema), df)
-    val moved = writeParts(table, aligned)
+    val moved = PartWriter.write(aligned, s"$root/$table")
     val perFile = perFileStatsBlocks(table, moved, aligned.schema,
       statsCols, bloomCols)
     commitVersion(None, Map(table -> moved),
@@ -907,8 +912,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val added = prepared.map { case (table, df, _) =>
       // part-file names carry the write UUID → no collisions; files are
       // INVISIBLE until the manifest commit below
-      table -> writeParts(table, df)
-    }.filter(_._2.nonEmpty).toMap
+      table -> PartWriter.write(df, s"$root/$table")
+    }.toMap
     if ((added.nonEmpty || batchId.isDefined || schemas.nonEmpty) &&
         !recordPending(added, schemas))
       commitVersion(batchId, added, schemas = schemas)
@@ -920,7 +925,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * manifest commit lists them; a failed write leaves unlisted files that
     * [[vacuum]] reclaims. */
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    val added = PartWriter.writeRouted(df, root, hidden = false)
+    val added = PartWriter.writeRouted(df, root)
     if (added.nonEmpty && !recordPending(added, Map.empty))
       commitVersion(None, added)
     true
@@ -1001,7 +1006,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       else readWithSchema(table, touched, schemaB64)
         .join(keyFrame, keys, "left_anti")
         .unionByName(src)
-    val moved = writeParts(table, rewritten)
+    val moved = PartWriter.write(rewritten, s"$root/$table")
     commitVersion(None, add = Map(table -> moved),
       removed = Map(table -> touched), readVersion = Some(readV))
   }
@@ -1026,7 +1031,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     if (touched.nonEmpty) {
       val keep = readWithSchema(table, touched, schemaB64)
         .filter(not(coalesce(predicate, lit(false))))
-      val moved = writeParts(table, keep)
+      val moved = PartWriter.write(keep, s"$root/$table")
       commitVersion(None, add = Map(table -> moved),
         removed = Map(table -> touched), readVersion = Some(readV))
     }
@@ -1069,54 +1074,6 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       .select(col("_op") +: newSide.columns.toSeq.map(col): _*)
   }
 
-  /** Write `df` to a staging dir and move the part files into the table
-    * directory (invisible until a manifest commit references them). */
-  private def writeParts(table: String, df: DataFrame): Seq[String] = {
-    withStaging(".rewrite-") { staging =>
-      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val dest = new File(rootDir, table)
-      dest.mkdirs()
-      Option(staging.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map { f =>
-          if (!f.renameTo(new File(dest, f.getName)))
-            throw new java.io.IOException(s"move failed: $f")
-          f.getName
-        }.toSeq
-    }
-  }
-
-  /** Run `write` against a fresh root-level staging directory
-    * (`<prefix><uuid>`, one of [[ManifestCatalog.StagingPrefixes]]) and
-    * remove the directory afterwards, also when the write fails. A failed
-    * Spark job returns while its other tasks are still being killed, and
-    * a task being killed can still create directories under its output
-    * path; so after a failure the removal first waits, for at most
-    * [[ManifestCatalog.StagingSettleMs]], until the write's jobs have ended
-    * and none of their tasks runs. A write that failed before any job
-    * ran (or whose job the status tracker has not seen yet) is not waited
-    * for; what a late task re-creates is left to [[vacuum]]. */
-  private def withStaging[T](prefix: String)(write: File => T): T = {
-    val staging = new File(rootDir, s"$prefix${java.util.UUID.randomUUID()}")
-    val tag = staging.getName
-    val sc = spark.sparkContext
-    sc.addJobTag(tag)
-    try write(staging)
-    catch { case NonFatal(e) => awaitTasksEnded(tag); throw e }
-    finally { sc.removeJobTag(tag); rm(staging) }
-  }
-
-  private def awaitTasksEnded(tag: String): Unit = {
-    val st = spark.sparkContext.statusTracker
-    def settled: Boolean = {
-      val jobs = st.getJobIdsForTag(tag).toSeq.flatMap(st.getJobInfo(_))
-      jobs.forall(_.status != JobExecutionStatus.RUNNING) &&
-        jobs.flatMap(_.stageIds).flatMap(st.getStageInfo(_))
-          .forall(_.numActiveTasks == 0)
-    }
-    val deadline = System.currentTimeMillis() + ManifestCatalog.StagingSettleMs
-    while (!settled && System.currentTimeMillis() < deadline) Thread.sleep(10)
-  }
-
   /** ONLINE compaction: snapshot the table's file list, rewrite exactly
     * those files, then commit ONE version that removes the consumed
     * files and adds the compacted ones. Removal is PRECISE (not a
@@ -1134,7 +1091,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(s"no such table: $table"))
     val compacted = readWithSchema(table, consumed, snap.schemas.get(table))
       .coalesce(math.max(1, targetFiles))
-    val moved = writeParts(table, compacted)
+    val moved = PartWriter.write(compacted, s"$root/$table")
     // any column that carried range stats or a bloom on a consumed file
     // keeps it through the rewrite — data skipping must survive
     // maintenance, not silently decay to "no stats, never pruned"
@@ -1150,20 +1107,19 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       readVersion = Some(readV))
   }
 
-  /** Remove data files no manifest version can reach (compacted-away or
-    * orphaned by a crashed append), staging directories of writers that
-    * died mid-write, delta versions already folded into the latest
-    * checkpoint, and superseded checkpoints.
+  /** Remove data files no manifest version can reach (compacted-away, or
+    * left by a failed or crashed write), delta versions already folded
+    * into the latest checkpoint, and superseded checkpoints.
     *
-    * `retentionMs` protects IN-FLIGHT writers: [[writeParts]] and
-    * [[appendRouted]] put part files into the table directory under
-    * their final names BEFORE the
-    * manifest commit references them, so to a concurrent vacuum an
-    * about-to-be-committed part is indistinguishable from a crashed
-    * append's orphan. Files younger than the retention window (mtime-
-    * based, the Delta tombstone-retention shape) are skipped — a
-    * maintenance vacuum can therefore run beside live writers as long
-    * as no single write job stages parts for longer than the window.
+    * `retentionMs` protects IN-FLIGHT writers: every write
+    * ([[PartWriter]]) puts part files into the table directory under
+    * their final names BEFORE the manifest commit references them, so to
+    * a concurrent vacuum an about-to-be-committed part is
+    * indistinguishable from a crashed append's orphan. Files younger
+    * than the retention window (mtime-based, the Delta
+    * tombstone-retention shape) are skipped — a maintenance vacuum can
+    * therefore run beside live writers as long as no single write job
+    * runs for longer than the window.
     * Pass 0 only when provably no writer is in flight (tests, single-
     * process teardown). The window must also exceed the longest
     * reader's snapshot age: compacted-away files a pinned reader still
@@ -1183,17 +1139,11 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       checkpointFiles().dropRight(1)
         .foreach { f => if (f.delete()) removed += 1 }
     }
-    // staging directories a killed process left behind (a failing write
-    // removes its own); an in-flight one keeps touching its files, so only
-    // trees whose newest entry is older than the window go
-    val dirs = Option(rootDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-    dirs.filter(d => ManifestCatalog.StagingPrefixes
-        .exists(d.getName.startsWith) && newestMtime(d) <= cutoff)
-      .foreach { d => rm(d); removed += 1 }
     // scan every table directory on disk, not just committed tables — a
     // crashed first-append leaves orphans under a table no manifest knows
-    dirs.filter(d => !d.getName.startsWith("_") && !d.getName.startsWith("."))
+    Option(rootDir.listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory && !d.getName.startsWith("_") &&
+        !d.getName.startsWith("."))
       .foreach { dir =>
         val liveSet = live.getOrElse(dir.getName, Nil).toSet
         Option(dir.listFiles()).getOrElse(Array.empty)
@@ -1205,15 +1155,6 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   }
 
   def fileCount(table: String): Int = snapshot().getOrElse(table, Nil).size
-
-  private def newestMtime(f: File): Long =
-    (f.lastModified() +: Option(f.listFiles()).getOrElse(Array.empty[File])
-      .toSeq.map(newestMtime)).max
-
-  private def rm(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
-  }
 }
 
 object ManifestCatalog {
@@ -1230,21 +1171,9 @@ object ManifestCatalog {
 
   /** Default [[ManifestCatalog.vacuum]] retention: uncommitted data
     * files younger than this survive, so a vacuum racing an in-flight
-    * writer cannot delete parts staged (moved into the table directory)
+    * writer cannot delete parts it has written into the table directory
     * but not yet referenced by a commit. 20 minutes bounds the longest
     * single write job the default tolerates; deployments with longer
     * rewrites (a multi-hour compaction) should pass a larger window. */
   val DefaultVacuumRetentionMs: Long = 20L * 60 * 1000
-
-  /** Name prefixes of the root-level write staging directories
-    * (`writeParts` under appends, compaction and row-level rewrites; and
-    * `appendRouted` before it wrote into table directories) that
-    * [[ManifestCatalog.vacuum]] reclaims once stale. */
-  private[sinks] val StagingPrefixes: Seq[String] =
-    Seq(".staging-", ".rewrite-")
-
-  /** Longest wait, after a failed write, for its tasks to end before its
-    * staging directory is removed. What a task still re-creates after it
-    * is left to [[ManifestCatalog.vacuum]]. */
-  val StagingSettleMs: Long = 10L * 1000
 }

@@ -11,7 +11,7 @@ import org.apache.hadoop.mapred.JobID
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext, TaskAttemptID,
   TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.{TaskContext, TaskOutput}
+import org.apache.spark.{TaskContext, TaskOutput, WriteChecks}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -24,19 +24,20 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Parquet part files written by Spark tasks themselves, with no commit
-  * protocol.
+  * protocol: the one way the sink layer lands a parquet file.
   *
   * A DataFrame write (`FileFormatWriter`) pays for Hadoop's commit
   * protocol: a `_temporary` tree, a rename per task commit and per job
-  * commit, a `_SUCCESS` marker. The ingest path needs none of it. A
-  * routed part file becomes visible through a manifest commit
-  * ([[ManifestCatalog]]) or through the one rename that ends its task
-  * ([[WarehouseCatalog]], the rejected-row directory). So each task opens
-  * its files itself, through the `OutputWriterFactory` a DataFrame write
-  * uses: `ParquetFileFormat.prepareWrite` over the session's Hadoop conf,
-  * with the session's SQL confs propagated to the tasks
-  * ([[withSqlConfs]]). Codec, footer schema and Spark's row metadata are
-  * those of `df.write.parquet`.
+  * commit, a `_SUCCESS` marker. The sinks need none of it. A part file
+  * of a [[ManifestCatalog]] table becomes visible through a manifest
+  * commit, and a rejected-row file through the one rename that ends its
+  * task. So each task opens its files itself, through the
+  * `OutputWriterFactory` a DataFrame write uses:
+  * `ParquetFileFormat.prepareWrite` over the session's Hadoop conf, with
+  * the session's SQL confs propagated to the tasks ([[withSqlConfs]]).
+  * Codec, footer schema and Spark's row metadata are those of a
+  * DataFrame parquet write. [[write]] lands any frame, [[writeRouted]]
+  * the routed ingest frame.
   *
   * A writer is built once per SparkContext and schema and broadcast once
   * ([[PartWriter.apply]]); a task opens one `TaskAttemptContext` per
@@ -185,6 +186,34 @@ object PartWriter {
     out
   }
 
+  /** Write `df` into `dir` in ONE job, one part file per task, by
+    * `FileFormatWriter`'s rules: partition 0 always writes a file, so an
+    * empty frame still leaves one that carries its schema; any other
+    * partition writes one only once it meets a row; a frame of no
+    * partitions is written as one empty partition. A schema a DataFrame
+    * write refuses is refused, the same way, before the job starts.
+    * Returns the names of the files written. */
+  def write(df: DataFrame, dir: String): Seq[String] = {
+    val spark = df.sparkSession
+    WriteChecks.parquet(df.schema,
+      spark.sessionState.conf.caseSensitiveAnalysis)
+    val w = PartWriter(spark, df.schema)
+    val writeId = UUID.randomUUID().toString
+    withSqlConfs(spark) {
+      val rdd = df.queryExecution.toRdd
+      val rows = if (rdd.getNumPartitions > 0) rdd
+        else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      rows.mapPartitionsWithIndex { (i, it) =>
+        if (i > 0 && !it.hasNext) Iterator.empty
+        else inTask(writeId) { task =>
+          val part = task.open(w, dir, hidden = false)
+          it.foreach(part.write)
+          Iterator.single(part.name)
+        }
+      }.collect().toSeq
+    }
+  }
+
   private val StringVt = UTF8String.fromString("String")
   private val Float64Vt = UTF8String.fromString("Float64")
 
@@ -194,8 +223,7 @@ object PartWriter {
     * `value` being `value_d` for Float64 rows and `value_s` for String
     * rows. A table's rows must share one value type. Returns the files
     * written per table. */
-  def writeRouted(df: DataFrame, root: String,
-      hidden: Boolean): Map[String, Seq[String]] = {
+  def writeRouted(df: DataFrame, root: String): Map[String, Seq[String]] = {
     val spark = df.sparkSession
     val s = df.schema
     val Seq(iTable, iClient, iDevice, iType, iD, iS) =
@@ -223,7 +251,7 @@ object PartWriter {
               require(isString || vt == Float64Vt,
                 s"table $table: no part file for value type $vt")
               val p = task.open(if (isString) strings else doubles,
-                s"$root/$table", hidden)
+                s"$root/$table", hidden = false)
               open(table.clone()) = (p, isString)
               (p, isString)
             })

@@ -1,8 +1,7 @@
 package graft.sinks
 
 import graft.registry.ColumnDef
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Physical destination for routed per-sensor tables — the engine's
   * abstraction over the reference's ClickHouse layer
@@ -43,8 +42,9 @@ trait TableCatalog {
   /** Transactional catalogs may DEFER visibility of appends between
     * [[beginBatch]] and [[commitBatch]] so a batch's rows and its commit
     * record land atomically (no marker-vs-data replay window). Default:
-    * no-op — appends are visible immediately (at-least-once on the exact
-    * crash boundary, as WarehouseCatalog documents). */
+    * no-op — appends are visible immediately, so a crash between the last
+    * append and [[commitBatch]] replays the batch (at-least-once on that
+    * boundary). */
   def beginBatch(batchId: Long): Unit = ()
 }
 
@@ -54,107 +54,12 @@ object TableCatalog {
     Seq("tableName", "client", "device", "value_type", "value_d", "value_s")
 
   /** The DEFAULT pipeline catalog: the [[ManifestCatalog]] commit log.
-    * It closes both crash windows the plain parquet-directory layout has
-    * (batch-marker-vs-data replay, compaction swap) at the cost of one
-    * tiny manifest rename per batch; periodic checkpointing keeps log
-    * folds O(checkpointInterval) on long streams. [[WarehouseCatalog]]
-    * remains available as an explicit opt-in for the
-    * simple-directory layout. */
+    * A batch's rows and its batch id become visible in one atomic commit,
+    * and a compaction never hides a table, at the cost of one tiny
+    * manifest rename per batch; periodic checkpointing keeps log folds
+    * O(checkpointInterval) on long streams. */
   def default(spark: SparkSession, root: String): ManifestCatalog =
     new ManifestCatalog(spark, root)
-}
-
-/** Parquet-directory catalog: one subdirectory per sensor table. Durable
-  * (unlike the reference's `engine=Memory`, /root/reference/db/db.go:233),
-  * partition-parallel, and what a lakehouse deployment would use. */
-final class WarehouseCatalog(spark: SparkSession, root: String)
-    extends TableCatalog {
-  private val rootDir = new java.io.File(root)
-  rootDir.mkdirs()
-
-  override def describe(table: String): Seq[ColumnDef] = {
-    val schema: StructType =
-      spark.read.parquet(s"$root/$table").schema
-    schema.fields.toSeq.map { f =>
-      ColumnDef(f.name, graft.ingest.TypeMapping.toClickHouse(f.dataType))
-    }
-  }
-
-  override def createTable(table: String, cols: Seq[ColumnDef]): Unit = {
-    // Parquet tables materialize on first append; DDL is a no-op beyond
-    // the registry entry the router records.
-    val _ = (table, cols)
-  }
-
-  override def append(table: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(s"$root/$table")
-
-  /** One write job for ALL tables in the slice: each task writes its
-    * part file per table straight into the table directory under a
-    * hidden name and renames it when it closes it ([[PartWriter]]). */
-  override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    PartWriter.writeRouted(df, root, hidden = true)
-    true
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
-  }
-
-  // batch-commit markers: root/_batches/<id>. Marker written after all
-  // moves; a crash between the last move and the marker replays the batch
-  // (duplicates possible in exactly that window — the standard
-  // non-transactional-store tradeoff; a table format with commit logs
-  // would close it).
-  private val batchesDir = new java.io.File(rootDir, "_batches")
-  override def batchCommitted(batchId: Long): Boolean =
-    new java.io.File(batchesDir, batchId.toString).exists()
-  override def commitBatch(batchId: Long): Unit = {
-    batchesDir.mkdirs()
-    new java.io.File(batchesDir, batchId.toString).createNewFile()
-    ()
-  }
-
-  override def listTables(): Seq[String] =
-    Option(rootDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
-      .map(_.getName).toSeq.sorted
-
-  def read(table: String): DataFrame = spark.read.parquet(s"$root/$table")
-
-  /** Streaming appends produce one file per partition per micro-batch;
-    * periodic compaction rewrites a table to `targetFiles` files.
-    *
-    * MAINTENANCE OPERATION — run while the table is quiescent (no
-    * concurrent appends or reads): the two-rename swap has a brief window
-    * where the table directory is absent, and a crash inside it leaves
-    * the data in `.old-<table>` for manual recovery (a table format with
-    * a commit log is the production answer for online compaction). */
-  def compact(table: String, targetFiles: Int = 1): Unit = {
-    val dir = new java.io.File(s"$root/$table")
-    require(dir.isDirectory, s"no such table: $table")
-    val tmp = new java.io.File(s"$root/.compact-$table")
-    val old = new java.io.File(s"$root/.old-$table")
-    spark.read.parquet(dir.toString)
-      .coalesce(math.max(1, targetFiles))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (!dir.renameTo(old))
-      throw new java.io.IOException(s"compact: cannot move $dir aside")
-    if (!tmp.renameTo(dir)) {
-      val rolledBack = old.renameTo(dir)
-      throw new java.io.IOException(s"compact: cannot activate $tmp" +
-        (if (rolledBack) " (rolled back)"
-         else s" AND ROLLBACK FAILED — data is in $old"))
-    }
-    rm(old)
-  }
-
-  def fileCount(table: String): Int =
-    Option(new java.io.File(s"$root/$table").listFiles())
-      .getOrElse(Array.empty)
-      .count(f => f.getName.endsWith(".parquet"))
 }
 
 /** SQL-text generation for a ClickHouse (JDBC) catalog. Connection handling

@@ -5,10 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** Session policy, job accounting and artifact release each live in one
-  * module: no other source file builds a session, implements the
-  * accounting callbacks or releases a query module's memo by hand. The
-  * patterns are split so this file does not match them itself. */
+/** Session policy, job accounting, artifact release and the sinks' file
+  * writes each live in one module: no other source file builds a session,
+  * implements the accounting callbacks or releases a query module's memo
+  * by hand, and no sink writes a DataFrame. The patterns are split so
+  * this file does not match them itself. */
 class SourcePolicySpec extends AnyFunSuite {
   private val root: Path =
     Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
@@ -40,6 +41,11 @@ class SourcePolicySpec extends AnyFunSuite {
   test("query modules hold no release hook or release function") {
     assert(filesMatching(("onRelease" + "All|def " + "release").r,
       Seq("src/main/scala/graft/queries")).isEmpty)
+  }
+
+  test("the sinks write parquet only through PartWriter") {
+    assert(filesMatching(("\\.write" + "\\.|Save" + "Mode").r,
+      Seq("src/main/scala/graft/sinks")).isEmpty)
   }
 
   test("only the image decoder catches fatal errors") {

@@ -10,14 +10,15 @@ import graft.ingest.Ingest
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, udf}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, lit, udf, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The ingest path's in-task parquet writes ([[PartWriter]]): the routed
-  * append and the rejected rows of the counting pass write the files a
-  * DataFrame write would, publish them only whole, and survive a session
-  * restart in one JVM. */
+/** The sinks' in-task parquet writes ([[PartWriter]]): the catalog's
+  * appends, the routed append and the rejected rows of the counting pass
+  * write the files a DataFrame write would, refuse the schemas it
+  * refuses, publish them only whole, and survive a session restart in
+  * one JVM. */
 class PartWriterSpec extends AnyFunSuite {
   import PartWriterSpec._
   private lazy val spark = TestSpark.spark
@@ -77,6 +78,83 @@ class PartWriterSpec extends AnyFunSuite {
     sameFooters(parquetFiles(rej).map(f => s"$rej/$f"), ref)
     assert(rowsOf(spark.read.parquet(rej)) == rowsOf(expected))
     assert(counts.invalid == expected.count())
+
+    // a plain append and a stats append, over required and optional
+    // columns: the footers carry the frame's nullability
+    val plain = spark.range(0, 6, 1, 2).select(col("id").as("k"),
+      when(col("id") % 2 === 0, col("id").cast("string")).as("v"))
+    assert(!plain.schema("k").nullable && plain.schema("v").nullable)
+    val ref2 = s"${tmp("pw-ref")}/plain"
+    plain.write.parquet(ref2)
+    cat.append("p", plain)
+    cat.appendWithStats("w", plain, Seq("k"))
+    Seq("p", "w").foreach { t =>
+      sameFooters(cat.snapshotAt(cat.latestVersion())(t)
+        .map(f => s"$root/$t/$f"), ref2)
+      assert(rowsOf(cat.read(t)) == rowsOf(plain))
+    }
+  }
+
+  test("an empty write leaves one file that carries the frame's schema") {
+    val root = tmp("pw-empty")
+    val cat = new ManifestCatalog(spark, root)
+    def typed(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    def onlyFile(t: String): Unit = {
+      assert(cat.fileCount(t) == 1, s"files of $t")
+      cat.vacuum(retentionMs = 0L) // what a delete consumed
+      assert(parquetFiles(s"$root/$t").size == 1, s"files in $t/")
+      assert(typed(spark.read.parquet(s"$root/$t")) ==
+        typed(cat.read(t)), s"schema of the file of $t")
+    }
+    // the first append of an empty frame of two partitions
+    val empty = spark.range(0, 4, 1, 2)
+      .select(col("id").as("k"), col("id").cast("string").as("v"))
+      .filter(col("k") < 0)
+    cat.append("e", empty)
+    assert(typed(cat.read("e")) == typed(empty) && cat.read("e").count() == 0)
+    onlyFile("e")
+    // a delete that matches every row of two files
+    cat.append("d", spark.range(1, 5, 1, 2)
+      .select(col("id").as("k"), col("id").cast("string").as("v")))
+    assert(cat.fileCount("d") == 2)
+    cat.delete("d", col("k") > 0)
+    assert(typed(cat.read("d")) == typed(empty) && cat.read("d").count() == 0)
+    onlyFile("d")
+    // an input of no partitions
+    val none = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty.schema)
+    assert(none.queryExecution.toRdd.getNumPartitions == 0)
+    cat.append("z", none)
+    assert(cat.read("z").count() == 0)
+    onlyFile("z")
+  }
+
+  test("a schema a DataFrame write refuses is refused the same way") {
+    val root = tmp("pw-refuse")
+    val cat = new ManifestCatalog(spark, root)
+    val ids = spark.range(2).select(col("id").as("k"))
+    // parquet holds a void column, but no interval and no repeated name
+    val frames = Seq(
+      "void" -> ids.select(col("k"), lit(null).as("n")),
+      "interval" -> ids.select(col("k"), expr("make_interval(1, 2)").as("i")),
+      "dup" -> ids.select(col("k"), col("k")))
+    val refused = frames.flatMap { case (t, df) =>
+      val expected = scala.util.Try(df.write.parquet(s"${tmp("pw-ref")}/$t"))
+      val got = scala.util.Try(cat.append(t, df))
+      (expected.failed.toOption, got.failed.toOption) match {
+        case (None, None) =>
+          assert(rowsOf(cat.read(t)) == rowsOf(df))
+          None
+        case (Some(e: AnalysisException), Some(g: AnalysisException)) =>
+          assert(g.getCondition == e.getCondition, g.getMessage)
+          assert(Option(new File(root, t).list()).forall(_.isEmpty),
+            s"files written for $t")
+          Some(t)
+        case other => fail(s"$t: DataFrame write and append differ: $other")
+      }
+    }
+    assert(refused == Seq("interval", "dup"))
+    assert(cat.listTables() == Seq("void"))
   }
 
   test("a failed routed task leaves no visible row; the replay commits once") {

@@ -16,7 +16,7 @@ class TableRouterSpec extends AnyFunSuite {
 
   private def freshRouter() = {
     val root = Files.createTempDirectory("graft-wh").toString
-    val catalog = new WarehouseCatalog(spark, root)
+    val catalog = new ManifestCatalog(spark, root)
     val registry = new SchemaRegistry
     (new TableRouter(registry, catalog), registry, catalog)
   }
@@ -95,7 +95,7 @@ class TableRouterSpec extends AnyFunSuite {
 
   test("schema-mismatch rows reach the configured reject sink") {
     val root = Files.createTempDirectory("graft-wh").toString
-    val catalog = new WarehouseCatalog(spark, root)
+    val catalog = new ManifestCatalog(spark, root)
     val collected = scala.collection.mutable.ArrayBuffer.empty[String]
     val router = new TableRouter(new SchemaRegistry, catalog,
       schemaRejectSink = Some(df =>
@@ -110,7 +110,7 @@ class TableRouterSpec extends AnyFunSuite {
 
   test("hostile or exotic table names rejected, never touch the catalog") {
     val root = Files.createTempDirectory("graft-wh").toString
-    val catalog = new WarehouseCatalog(spark, root)
+    val catalog = new ManifestCatalog(spark, root)
     val collected = scala.collection.mutable.ArrayBuffer.empty[String]
     val router = new TableRouter(new SchemaRegistry, catalog,
       schemaRejectSink = Some(df =>
@@ -132,7 +132,7 @@ class TableRouterSpec extends AnyFunSuite {
     // router policy rejects '+' names upstream; a direct catalog caller
     // must still get the literal name (URLDecoder would map '+'→' ')
     val root = Files.createTempDirectory("graft-wh").toString
-    val catalog = new WarehouseCatalog(spark, root)
+    val catalog = new ManifestCatalog(spark, root)
     val df = spark.createDataFrame(Seq(
       ("a+b", "c1", "d1", "Float64", Option(4.5), Option.empty[String])))
       .toDF(TableCatalog.RoutedColumns: _*)

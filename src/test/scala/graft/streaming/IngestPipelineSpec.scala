@@ -172,11 +172,13 @@ class IngestPipelineSpec extends AnyFunSuite {
 
     val catalog1 = TableCatalog.default(spark, wh)
     val router1 = new TableRouter(new SchemaRegistry, catalog1)
-    val q1 = newQuery(router1)
+    // published before the start, so batch 0 holds all four messages: a
+    // trigger between two publishes would commit a batch of valid rows
     InMemoryBroker.publish("/c/d/out/sensors/w", """{"value":1.0}""")
     InMemoryBroker.publish("/c/d/out/sensors/w", """{"value":2.0}""")
     InMemoryBroker.publish("/c/d/out/sensors/w", """{"k":3}""")
     InMemoryBroker.publish("bad-topic", """{"value":4.0}""")
+    val q1 = newQuery(router1)
     try {
       val failed = try { q1.processAllAvailable(); false }
       catch { case _: org.apache.spark.sql.streaming.StreamingQueryException =>
