@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The reference's ingest chain F1–F5 (SURVEY.md §2.1) as pure,
   * batch/streaming-agnostic `DataFrame => DataFrame` transforms over columns
@@ -70,36 +71,41 @@ object Ingest {
 
   /** F2+F3+F4 — full parse: adds tableName/client/device from the topic and
     * value_type/value_d/value_s from the payload, plus a `valid` flag.
-    * Input columns: `topic`, `payload`. */
+    * Input columns: `topic`, `payload`; any others lead the output,
+    * unchanged. */
   def parse(df: DataFrame): DataFrame = {
     val parts = split(col("topic"), "/")
     // get() (not getItem/element_at) — under ANSI mode (Spark 4 default) an
     // out-of-range index THROWS; malformed short topics must flow to the
     // rejected output instead of killing the query (the reference's
     // poison-halt is exactly the bug we're not replicating).
-    df.withColumn("tableName", element_at(parts, -1))
-      .withColumn("client", get(parts, lit(1)))
-      .withColumn("device", get(parts, lit(2)))
-      .withColumn("value_type", valueType(col("payload")))
-      .withColumn("value_raw", get_json_object(col("payload"), "$.value"))
+    val split1 = df.select(col("*"),
+      element_at(parts, -1).as("tableName"),
+      get(parts, lit(1)).as("client"),
+      get(parts, lit(2)).as("device"),
+      valueType(col("payload")).as("value_type"),
+      get_json_object(col("payload"), "$.value").as("value_raw"))
+    // every column of the first projection but value_raw, quoted: an input
+    // column's name may hold a dot
+    val kept = split1.columns.init
+      .map(c => col("`" + c.replace("`", "``") + "`"))
+    split1.select(kept.toSeq ++ Seq(
       // try_cast, not cast: the type regex can misfire on a payload whose
       // NESTED key is numeric while the top-level "value" is a string —
       // under ANSI (Spark 4 default) a plain cast would then throw and
       // kill the query, recreating the reference's poison-halt. try_cast
       // yields null and the row flows to rejected instead.
-      .withColumn("value_d",
-        when(col("value_type") === "Float64",
-          expr("try_cast(value_raw AS double)")))
-      .withColumn("value_s",
-        when(col("value_type") === "String", col("value_raw")))
+      when(col("value_type") === "Float64",
+        expr("try_cast(value_raw AS double)")).as("value_d"),
+      when(col("value_type") === "String", col("value_raw")).as("value_s"),
       // coalesce(false): a NULL topic makes topicValid NULL, and a
       // NULL `valid` would vanish from BOTH records() and rejected()
-      .withColumn("valid", coalesce(
+      coalesce(
         topicValid(col("topic")) && col("value_type").isNotNull &&
           col("value_raw").isNotNull &&
-          (col("value_type") =!= "Float64" || col("value_d").isNotNull),
-        lit(false)))
-      .drop("value_raw")
+          (col("value_type") =!= "Float64" ||
+            expr("try_cast(value_raw AS double)").isNotNull),
+        lit(false)).as("valid")): _*)
   }
 
   /** F5 — valid, fully-parsed records (the reference's `CreateRecordData`
@@ -119,6 +125,13 @@ object Ingest {
     * (message.go:131), then required-key presence (message.go:72-75), then
     * value-type support (message.go:105-118). */
   def rejected(df: DataFrame): DataFrame = rejectedOfParsed(parse(df))
+
+  /** The schema of [[rejectedOfParsed]] over a source whose `topic` and
+    * `payload` are nullable strings, as the MQTT source's are: known
+    * without analyzing a frame. */
+  val RejectedSchema: StructType = StructType(Seq(
+    StructField("topic", StringType), StructField("payload", StringType),
+    StructField("reason", StringType, nullable = false)))
 
   /** rejected() over an already-[[parse]]d frame. */
   def rejectedOfParsed(parsed: DataFrame): DataFrame =

@@ -43,7 +43,7 @@ import org.apache.spark.util.SerializableConfiguration
   * ([[PartWriter.apply]]); a task opens one `TaskAttemptContext` per
   * writer it uses ([[PartWriter.inTask]]). A file is written under its
   * final name, or (`hidden`) under that name with a leading `.`, which
-  * readers skip, and renamed when its task closes it. A task that fails
+  * readers skip, and renamed when its task ends. A task that fails
   * deletes the files it has open. Files that tasks of a failed job had
   * already closed stay behind unreferenced: [[ManifestCatalog.vacuum]]
   * reclaims them from table directories. Files go through Hadoop's raw
@@ -174,16 +174,18 @@ object PartWriter {
   }
 
   /** Run one task's writes: `body` opens and fills files through the
-    * [[Task]]; when it returns every file is closed and published, and
-    * when it (or publishing) fails the files still open are deleted. Call
-    * inside a Spark task, with a `writeId` the driver drew for the job
-    * (a random UUID): file names must not repeat across jobs or runs. */
+    * [[Task]]. When the task ends every file is closed and published, and
+    * when it (or publishing) fails the files still open are deleted — by
+    * a task completion listener, so `body` may return a lazy iterator
+    * that writes as the task's consumer reads it. Call inside a Spark
+    * task, with a `writeId` the driver drew for the job (a random UUID):
+    * file names must not repeat across jobs or runs. */
   def inTask[T](writeId: String)(body: Task => T): T = {
     val task = new Task(writeId)
-    val out = try body(task)
-      catch { case NonFatal(e) => task.abort(); throw e }
-    task.commit()
-    out
+    TaskContext.get().addTaskCompletionListener[Unit] { tc =>
+      if (tc.isFailed()) task.abort() else task.commit()
+    }
+    body(task)
   }
 
   /** Write `df` into `dir` in ONE job, one part file per task, by

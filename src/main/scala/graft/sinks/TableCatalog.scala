@@ -26,10 +26,16 @@ trait TableCatalog {
     * [[TableCatalog.RoutedColumns]] — `(tableName, client, device,
     * value_type, value_d, value_s)` — spanning `tables` in ONE write job;
     * each table gets `(client, device, value)`, `value` read from
-    * `value_d` or `value_s` by the row's value type. Returns false if
-    * this catalog can't (caller falls back to per-table [[append]]). At
-    * high sensor cardinality this is the difference between one job per
-    * batch and N-tables jobs per batch. */
+    * `value_d` or `value_s` by the row's value type. At high sensor
+    * cardinality this is the difference between one job per batch and
+    * N-tables jobs per batch.
+    *
+    * The frame is read at most once, in that one job: the router's
+    * frame is its batch pass ([[TableRouter]]), whose tasks also count
+    * the batch and write its rejected rows while the write reads them, so
+    * a steady-state batch is this one job. Returns false, without reading
+    * `df`, if this catalog can't: the router then runs the pass on its own
+    * and falls back to per-table [[append]] (JDBC). */
   def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = false
 
   /** Exactly-once support: has this streaming batch already been fully

@@ -3,10 +3,14 @@ package graft.sinks
 import graft.ingest.Ingest
 import graft.registry.{ColumnDef, SchemaRegistry}
 import java.util.concurrent.{Callable, ExecutionException, Future}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, InternalFrames}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.CollectionAccumulator
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Per-batch routing outcome (observability; the reference logs and dies
@@ -30,9 +34,16 @@ final case class RouteStats(
   *     registry insert;
   *   - then W5 bulk append of the typed per-table slice.
   *
-  * The only driver-side collects are the per-batch `(tableName,
-  * value_type)` histogram ([[TableRouter.countBatch]]) and the part-file
-  * names of the routed write — cardinality = number of distinct sensors,
+  * A batch whose tables are all registered already costs ONE Spark job:
+  * the batch pass ([[TableRouter.countBatch]]'s task body) counts the
+  * batch by `(valid, tableName, value_type)`, writes its invalid rows to
+  * the rejected directory, and hands every row whose table takes its
+  * value type to the catalog's routed write, as the frame that write
+  * reads. Rows of new tables, of mismatched types and of refused names
+  * are decided afterwards, from the counts.
+  *
+  * The only driver-side data are those counts and the part-file names
+  * of the routed write — cardinality = number of distinct sensors,
   * thousands at most, never data-sized. Row data itself moves
   * executor-side only.
   *
@@ -43,6 +54,7 @@ final case class RouteStats(
 final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     appendParallelism: Int = 4,
     schemaRejectSink: Option[DataFrame => Unit] = None) {
+  import TableRouter.tableNameOk
 
   /** W1 — seed the registry from the physical catalog at startup
     * (reference `LoadTables`, /root/reference/db/db.go:117-135).
@@ -78,47 +90,40 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     ColumnDef("device", "String"),
     ColumnDef("value", chType))
 
-  /** Table-name policy, enforced at the single choke point before any
-    * physical layer sees the name. The topic's last segment is attacker-
-    * controllable; without this, '..' traverses the warehouse root,
-    * '_'/'.' prefixes create directories invisible to bootstrap, and
-    * SQL-identifier validation deep in the JDBC dialect would THROW from
-    * foreachBatch — killing the query on the first exotic sensor name
-    * (the reference's poison-halt again). Hyphens are allowed: they are
-    * routine in MQTT sensor names and safe under quoted identifiers.
-    * Invalid names are counted + routed to the reject sink instead. */
-  private val validName = "^[A-Za-z0-9][A-Za-z0-9_-]{0,127}$".r
-  private[sinks] def tableNameOk(name: String): Boolean =
-    name != null && validName.pattern.matcher(name).matches()
-
   /** Route one micro-batch of parsed records (output of
-    * [[graft.ingest.Ingest.records]]), counting its histogram with
-    * [[TableRouter.countBatch]] first.
+    * [[graft.ingest.Ingest.records]]).
     *
     * With `batchId >= 0` (streaming), replayed batches the catalog has
     * already committed are skipped — effectively-once appends across
     * query restarts for catalogs that record commits. */
   def routeBatch(batch: DataFrame, batchId: Long = -1L): RouteStats =
-    routeBatch(batch, batchId, TableRouter.countBatch(batch).hist)
+    routeBatch(batch, batchId, None)(_ => ())
 
-  /** [[routeBatch]] with the caller's histogram of `batch`. `histogram`
-    * is evaluated only when the batch is not committed yet, before the
-    * catalog's [[TableCatalog.beginBatch]]: a caller can run its own
-    * per-batch work there (the pipeline counts and writes its rejected
-    * rows in the same pass), which a replay of a committed batch skips.
+  /** Route one micro-batch: a [[graft.ingest.Ingest.parse]]d frame, or a
+    * frame of records (no `valid` column: every row is valid). A batch
+    * the catalog has committed already is skipped whole.
     *
-    * Every table's rows go to the catalog in ONE [[TableCatalog
-    * .appendRouted]] call, beside the schema-reject sink; all writes
-    * finish before `commitBatch`, and any failure skips the commit and is
-    * rethrown.
+    * After [[TableCatalog.beginBatch]] the batch pass runs as the frame of
+    * ONE [[TableCatalog.appendRouted]] call: its tasks count the batch,
+    * write its invalid rows into `rejectedDir`, and route every valid row
+    * whose table is registered with that value type. A catalog without a
+    * routed write (JDBC) leaves that frame unread; the pass then runs on
+    * its own ([[TableRouter.countBatch]]) and every table is appended
+    * below. `check` sees the counts before any DDL: a throw fails the
+    * batch before its commit (files the pass wrote stay unlisted, for
+    * [[ManifestCatalog.vacuum]]).
     *
-    * `batch` is read once per write and is not cached here: pass a
-    * persisted frame when it is costly to recompute. */
+    * The rows the pass did not route are decided from its counts: a new
+    * table gets its DDL and one more `appendRouted` over `batch`;
+    * mismatched slices and refused names go to the schema-reject sink.
+    * All writes finish before `commitBatch`, and any failure skips the
+    * commit and is rethrown. `batch` is read again only for those rows,
+    * and is not cached here. */
   def routeBatch(batch: DataFrame, batchId: Long,
-      histogram: => TableRouter.Histogram): RouteStats = {
+      rejectedDir: Option[String])(
+      check: TableRouter.BatchCounts => Unit): RouteStats = {
     if (batchId >= 0 && catalog.batchCommitted(batchId))
       return RouteStats(Map.empty, Map.empty, alreadyCommitted = true)
-    val hist = histogram
     // transactional catalogs defer append visibility until the single
     // commitBatch below — rows + batch id become visible atomically
     if (batchId >= 0) catalog.beginBatch(batchId)
@@ -126,6 +131,21 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     def submit(body: => Unit): Unit = writes += appendPool.submit(
       new Callable[Unit] { def call(): Unit = body })
     val stats = try {
+      // the value types each registered table takes, as W3 decides them
+      val takes: Map[String, Set[String]] = registry.tableNames
+        .filter(tableNameOk).flatMap { t =>
+          registry.get(t).map(cols => t -> Set("Float64", "String")
+            .filter(vt => registry.checkValid(cols, colsFor(vt)).isEmpty))
+        }.filter(_._2.nonEmpty).toMap
+      val pass = TableRouter.pass(batch, rejectedDir, takes)
+      val routed = catalog.appendRouted(pass.frame, takes.keys.toSeq.sorted)
+      val counts = if (routed) pass.counts() else pass.run()
+      check(counts)
+      // rows of the batch, for the slices the pass left
+      lazy val records =
+        if (batch.columns.contains("valid")) Ingest.recordsOfParsed(batch)
+        else batch
+
       val appended = scala.collection.mutable.Map.empty[String, Long]
       val rejected = scala.collection.mutable.Map.empty[String, Long]
       val badNames = scala.collection.mutable.Map.empty[String, Long]
@@ -134,7 +154,7 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
 
       // Phase 1 (serial, driver): name policy + DDL + schema decisions —
       // cheap, order-sensitive (first sight fixes the schema).
-      hist.groupBy(_._1).toSeq.sortBy(_._1).foreach {
+      counts.hist.groupBy(_._1).toSeq.sortBy(_._1).foreach {
         case (table, groups) if !tableNameOk(table) =>
           badNames(table) = groups.map(_._3).sum
         case (table, groups) =>
@@ -156,7 +176,8 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
               case None =>
                 val valueCol =
                   if (tableType == "String") "value_s" else "value_d"
-                appendTasks += ((table, vt, valueCol))
+                if (!(routed && takes.get(table).exists(_(vt))))
+                  appendTasks += ((table, vt, valueCol))
                 appended(table) = appended.getOrElse(table, 0L) + n
               case Some(_) =>
                 rejected(table) = rejected.getOrElse(table, 0L) + n
@@ -168,7 +189,7 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
       // side output — "rejected" must mean visible, not counted away
       if (rejected.nonEmpty || badNames.nonEmpty)
         schemaRejectSink.foreach { sink =>
-          val mismatchCond = hist.filter { case (table, vt, _) =>
+          val mismatchCond = counts.hist.filter { case (table, vt, _) =>
             registry.get(table).exists(cols =>
               registry.checkValid(cols, colsFor(vt)).isDefined)
           }.map { case (table, vt, _) =>
@@ -177,25 +198,25 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
           val nameCond = badNames.keys.toSeq.sorted
             .map(t => col("tableName") === t)
           (mismatchCond ++ nameCond).reduceOption(_ || _)
-            .foreach(cond => submit(sink(batch.filter(cond))))
+            .foreach(cond => submit(sink(records.filter(cond))))
         }
 
-      // Phase 2: appends. Fast path — ONE routed write for every table
-      // and both value types (validated tasks always have vt == table
-      // type). Catalogs without a routed write (JDBC) fall back to one
-      // append per table, on the pool.
+      // Phase 2: the slices the pass did not write — ONE routed write for
+      // every new table and both value types (validated tasks always have
+      // vt == table type). Catalogs without a routed write (JDBC) fall
+      // back to one append per table, on the pool.
       if (appendTasks.nonEmpty) {
         val cond = appendTasks.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (vt, tasks) =>
             col("value_type") === vt &&
               col("tableName").isInCollection(tasks.map(_._1))
           }.reduce(_ || _)
-        val routedDf = batch.filter(cond)
+        val routedDf = records.filter(cond)
           .select(TableCatalog.RoutedColumns.map(col): _*)
         if (!catalog.appendRouted(routedDf, appendTasks.map(_._1).toSeq))
           appendTasks.foreach { case (table, vt, valueCol) =>
             submit(catalog.append(table,
-              batch.filter(col("tableName") === table &&
+              records.filter(col("tableName") === table &&
                   col("value_type") === vt)
                 .select(col("client"), col("device"),
                   col(valueCol).as("value"))))
@@ -236,59 +257,121 @@ object TableRouter {
     * histogram of the rest. */
   final case class BatchCounts(invalid: Long, hist: Histogram)
 
+  /** Table-name policy, enforced at the single choke point before any
+    * physical layer sees the name. The topic's last segment is attacker-
+    * controllable; without this, '..' traverses the warehouse root,
+    * '_'/'.' prefixes create directories invisible to bootstrap, and
+    * SQL-identifier validation deep in the JDBC dialect would THROW from
+    * foreachBatch — killing the query on the first exotic sensor name
+    * (the reference's poison-halt again). Hyphens are allowed: they are
+    * routine in MQTT sensor names and safe under quoted identifiers.
+    * Invalid names are counted + routed to the reject sink instead. */
+  private val validName = "^[A-Za-z0-9][A-Za-z0-9_-]{0,127}$".r
+  private[sinks] def tableNameOk(name: String): Boolean =
+    name != null && validName.pattern.matcher(name).matches()
+
+  private type Key = (Boolean, String, String)
+  private val Invalid: Key = (false, null, null)
+
+  /** One key's rows in a task, and whether its rows are routed. */
+  private final class Slot(val routed: Boolean) { var rows = 0L }
+
+  /** The batch pass over one frame, not yet run. `frame` holds the
+    * routed rows, [[TableCatalog.RoutedColumns]], and is read at most
+    * once: reading it runs the pass. */
+  private final class Pass(val frame: DataFrame, rows: RDD[InternalRow],
+      perTask: CollectionAccumulator[Map[Key, Long]]) {
+    /** Run the pass on its own, dropping the routed rows. */
+    def run(): BatchCounts = {
+      PartWriter.withSqlConfs(frame.sparkSession)(rows.foreach(_ => ()))
+      counts()
+    }
+
+    /** The counts of the one run of the pass: its tasks report through
+      * an accumulator, exact because the pass is one result stage with no
+      * shuffle (a result task's updates count once). */
+    def counts(): BatchCounts = {
+      val maps = perTask.value.asScala.toSeq
+      if (maps.size != rows.getNumPartitions)
+        throw new IllegalStateException(s"the batch pass read " +
+          s"${maps.size} task outputs for ${rows.getNumPartitions} partitions")
+      val merged = maps.flatten.groupMapReduce(_._1)(_._2)(_ + _)
+      BatchCounts(
+        merged.getOrElse(Invalid, 0L),
+        merged.toSeq.collect { case ((true, t, vt), n) => (t, vt, n) }
+          .sortBy(t => (t._1, t._2)))
+    }
+  }
+
+  /** The batch pass over `df`: each task folds its rows into a map holding
+    * at most one entry per (valid, table, value type), writes its invalid
+    * rows into `rejectedDir`, and passes on the valid rows whose table
+    * `takes` their value type under a name the policy allows. */
+  private def pass(df: DataFrame, rejectedDir: Option[String],
+      takes: Map[String, Set[String]]): Pass = {
+    val valid = if (df.columns.contains("valid")) col("valid") else lit(true)
+    val rejects = rejectedDir.map(dir =>
+      (dir, PartWriter(df.sparkSession, Ingest.RejectedSchema)))
+    // the routed columns lead, so a row of the selection is a routed row
+    val selected = df.select(TableCatalog.RoutedColumns.map(col) ++
+      Seq(valid) ++ rejects.toSeq.flatMap(_ =>
+        Seq(col("topic"), col("payload"), when(!valid, Ingest.reason))): _*)
+    val iTable = TableCatalog.RoutedColumns.indexOf("tableName")
+    val iType = TableCatalog.RoutedColumns.indexOf("value_type")
+    val iValid = TableCatalog.RoutedColumns.size
+    val perTask = df.sparkSession.sparkContext
+      .collectionAccumulator[Map[Key, Long]]
+    val writeId = java.util.UUID.randomUUID().toString
+    val rows = selected.queryExecution.toRdd.mapPartitions { rows =>
+      PartWriter.inTask(writeId) { task =>
+        val m = scala.collection.mutable.HashMap.empty[Key, Slot]
+        var part: PartWriter.Part = null
+        val out = new GenericInternalRow(3)
+        def str(r: InternalRow, i: Int): String =
+          if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+        val routed = rows.filter { r =>
+          val k =
+            if (r.getBoolean(iValid)) (true, str(r, iTable), str(r, iType))
+            else {
+              rejects.foreach { case (dir, w) =>
+                if (part == null) part = task.open(w, dir, hidden = true)
+                (0 until 3).foreach { i =>
+                  if (r.isNullAt(iValid + 1 + i)) out.setNullAt(i)
+                  else out.update(i, r.getUTF8String(iValid + 1 + i))
+                }
+                part.write(out)
+              }
+              Invalid
+            }
+          val slot = m.getOrElseUpdate(k, new Slot(k._1 &&
+            tableNameOk(k._2) && takes.get(k._2).exists(_(k._3))))
+          slot.rows += 1
+          slot.routed
+        }
+        // the counts go out once the consumer has read every row
+        routed ++ {
+          perTask.add(m.view.mapValues(_.rows).toMap); Iterator.empty
+        }
+      }
+    }
+    new Pass(InternalFrames.of(df.sparkSession, rows,
+      StructType(selected.schema.take(TableCatalog.RoutedColumns.size))),
+      rows, perTask)
+  }
+
   /** Count `df` by `(valid, tableName, value_type)` in ONE Spark job with
-    * no shuffle: each partition folds its rows into a map holding at most
-    * one entry per (table, value type), and the driver merges the maps —
-    * thousands of entries at most, never data-sized. A frame without a
-    * `valid` column (the output of [[graft.ingest.Ingest.records]]) counts
-    * every row as valid.
+    * no shuffle: the batch pass with nothing routed. Each partition folds
+    * its rows into a map holding at most one entry per (table, value
+    * type), and the driver merges the maps — thousands of entries at
+    * most, never data-sized. A frame without a `valid` column (the output
+    * of [[graft.ingest.Ingest.records]]) counts every row as valid.
     *
     * With `rejectedDir`, `df` is a [[graft.ingest.Ingest.parse]]d frame
     * and the same job writes its invalid rows, as
     * [[graft.ingest.Ingest.rejectedOfParsed]] would, into that directory:
     * at most one parquet file per task, written under a hidden name and
-    * renamed when the task closes it ([[PartWriter]]). */
+    * renamed when the task ends ([[PartWriter.inTask]]). */
   def countBatch(df: DataFrame,
-      rejectedDir: Option[String] = None): BatchCounts = {
-    val valid = if (df.columns.contains("valid")) col("valid") else lit(true)
-    val rejects = rejectedDir.map(dir => (dir,
-      PartWriter(df.sparkSession, Ingest.rejectedOfParsed(df).schema)))
-    val cols = Seq(valid, col("tableName"), col("value_type")) ++
-      rejects.toSeq.flatMap(_ =>
-        Seq(col("topic"), col("payload"), when(!valid, Ingest.reason)))
-    val writeId = java.util.UUID.randomUUID().toString
-    val perPartition = PartWriter.withSqlConfs(df.sparkSession) {
-      df.select(cols: _*).queryExecution.toRdd.mapPartitions { rows =>
-        PartWriter.inTask(writeId) { task =>
-          val m = scala.collection.mutable.HashMap
-            .empty[(Boolean, String, String), Long]
-          var part: PartWriter.Part = null
-          val out = new GenericInternalRow(3)
-          def str(r: InternalRow, i: Int): String =
-            if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-          rows.foreach { r =>
-            val k = if (r.getBoolean(0)) (true, str(r, 1), str(r, 2))
-              else {
-                rejects.foreach { case (dir, w) =>
-                  if (part == null) part = task.open(w, dir, hidden = true)
-                  (0 until 3).foreach { i =>
-                    if (r.isNullAt(3 + i)) out.setNullAt(i)
-                    else out.update(i, r.getUTF8String(3 + i))
-                  }
-                  part.write(out)
-                }
-                (false, null, null)
-              }
-            m(k) = m.getOrElse(k, 0L) + 1
-          }
-          m.toSeq
-        }.iterator
-      }.collect()
-    }
-    val merged = perPartition.groupMapReduce(_._1)(_._2)(_ + _)
-    BatchCounts(
-      merged.getOrElse((false, null, null), 0L),
-      merged.toSeq.collect { case ((true, t, vt), n) => (t, vt, n) }
-        .sortBy(t => (t._1, t._2)))
-  }
+      rejectedDir: Option[String] = None): BatchCounts =
+    pass(df, rejectedDir, Map.empty).run()
 }

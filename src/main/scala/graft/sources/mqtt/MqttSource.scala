@@ -167,22 +167,36 @@ final class MqttMicroBatchStream(connector: MqttConnector,
       case _ => MqttOffset(latest)
     }
   }
-  override def commit(end: Offset): Unit =
+  override def commit(end: Offset): Unit = {
+    synchronized { planned = None }
     // committed prefix is never re-read (the checkpoint owns replay from
     // here) — drop it so each shard's buffer stays bounded
     shardIds.zipWithIndex.foreach { case (sid, i) =>
       connector.truncate(sid, seqAt(end, i))
     }
+  }
   override def stop(): Unit = ()
+
+  // the last range planned: the planner asks once per copy of its scan
+  // node, so a batch would otherwise be fetched several times
+  private var planned: Option[((Offset, Offset), Array[InputPartition])] =
+    None
 
   /** One input partition per shard with pending messages — each an
     * ordered slice of that shard's feed, so per-topic order survives the
-    * parallel read. */
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    shardIds.zipWithIndex.flatMap { case (sid, i) =>
-      val msgs = connector.fetch(sid, seqAt(start, i), seqAt(end, i))
-      if (msgs.isEmpty) None else Some(MqttInputPartition(msgs.toArray))
-    }.toArray
+    * parallel read. A range is fetched once, until [[commit]]. */
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] = synchronized {
+    planned.collect { case ((s, e), ps) if s == start && e == end => ps }
+      .getOrElse {
+        val ps = shardIds.zipWithIndex.flatMap { case (sid, i) =>
+          val msgs = connector.fetch(sid, seqAt(start, i), seqAt(end, i))
+          if (msgs.isEmpty) None else Some(MqttInputPartition(msgs.toArray))
+        }.toArray[InputPartition]
+        planned = Some(((start, end), ps))
+        ps
+      }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {

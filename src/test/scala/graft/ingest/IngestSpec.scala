@@ -2,7 +2,8 @@ package graft.ingest
 
 import graft.TestSpark
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mirrors the reference's message-package tests
@@ -162,6 +163,26 @@ class IngestSpec extends AnyFunSuite {
       (goodTopic, """{"k":1}"""))
     assert(recordsOf(rows: _*).count() == 2)
     assert(rejectedOf(rows: _*).count() == 2)
+  }
+
+  test("parse keeps its columns, order, types and nullability") {
+    // pinned from the 8-withColumn form of parse: the projection that
+    // replaced it must not move a column or change what it may hold
+    def s(name: String, nullable: Boolean = true) =
+      StructField(name, StringType, nullable)
+    val parsed = StructType(Seq(s("tableName"), s("client"), s("device"),
+      s("value_type"), StructField("value_d", DoubleType),
+      s("value_s"), StructField("valid", BooleanType, nullable = false)))
+    val in = Seq((goodTopic, goodPayload)).toDF("topic", "payload")
+    assert(Ingest.parse(in).schema ==
+      StructType(Seq(s("topic"), s("payload")) ++ parsed))
+    // input columns lead, in their order, whatever they are
+    val wider = in.select(lit(1L).as("seq"), col("payload"), col("topic"))
+    assert(Ingest.parse(wider).schema == StructType(
+      Seq(StructField("seq", LongType, nullable = false), s("payload"),
+        s("topic")) ++ parsed))
+    assert(Ingest.rejectedOfParsed(Ingest.parse(in)).schema ==
+      StructType(Seq(s("topic"), s("payload"), s("reason", false))))
   }
 
   test("timestamp key in payload is discarded (reference drops event time)") {

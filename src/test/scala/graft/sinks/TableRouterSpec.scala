@@ -108,6 +108,30 @@ class TableRouterSpec extends AnyFunSuite {
     assert(collected.toSeq == Seq("mm"))
   }
 
+  test("a mismatched slice of an existing table reaches only the sink") {
+    val root = Files.createTempDirectory("graft-wh").toString
+    val catalog = new ManifestCatalog(spark, root)
+    val collected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val router = new TableRouter(new SchemaRegistry, catalog,
+      schemaRejectSink = Some(df =>
+        collected ++= df.select("value_s").collect().map(_.getString(0))))
+    router.routeBatch(batchOf(
+      ("/c/d/out/sensors/mm", """{"value":1.0}""")), batchId = 0L)
+    // `mm` exists: the batch pass routes its Float64 rows, and its
+    // String rows are left to the sink
+    val stats = router.routeBatch(batchOf(
+      ("/c/d/out/sensors/mm", """{"value":2.0}"""),
+      ("/c/d/out/sensors/mm", """{"value":"oops"}""")), batchId = 1L)
+    assert(stats.appended == Map("mm" -> 1L))
+    assert(stats.rejectedSchema == Map("mm" -> 1L))
+    assert(collected.toSeq == Seq("oops"))
+    assert(catalog.read("mm").collect().map(_.getAs[Double]("value"))
+      .sorted.toSeq == Seq(1.0, 2.0))
+    catalog.vacuum(retentionMs = 0L)
+    val listed = catalog.snapshotAt(catalog.latestVersion())("mm").toSet
+    assert(new java.io.File(root, "mm").list().toSet == listed)
+  }
+
   test("hostile or exotic table names rejected, never touch the catalog") {
     val root = Files.createTempDirectory("graft-wh").toString
     val catalog = new ManifestCatalog(spark, root)

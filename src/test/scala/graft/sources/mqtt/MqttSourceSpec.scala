@@ -223,4 +223,45 @@ class MqttSourceSpec extends AnyFunSuite {
       assert(topics.toSeq == Seq("/a/1/2/3/s1", "/b/1/2/3/s3"))
     } finally q.stop()
   }
+
+  test("a micro-batch fetches its range once, however often it is planned") {
+    val cid = s"once-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val fetched = new java.util.concurrent.atomic.AtomicLong
+    val counting = new MqttConnector {
+      def setSubscriptions(c: String, f: Seq[String]): Unit =
+        InMemoryBroker.setSubscriptions(c, f)
+      def isConfigured(c: String): Boolean = InMemoryBroker.isConfigured(c)
+      def fetch(c: String, from: Long,
+          until: Long): Seq[InMemoryBroker.Msg] = {
+        val out = InMemoryBroker.fetch(c, from, until)
+        calls.incrementAndGet(); fetched.addAndGet(out.size.toLong)
+        out
+      }
+      def latestSeq(c: String): Long = InMemoryBroker.latestSeq(c)
+      def truncate(c: String, upto: Long): Unit =
+        InMemoryBroker.truncate(c, upto)
+    }
+    MqttConnectors.register(s"counting-$cid", counting)
+    val topics = (1 to 5).map(i => s"/c/d/out/sensors/s$i")
+    topics.foreach(t => InMemoryBroker.publish(t, """{"value":1}"""))
+    val name = s"once${cid.replace("-", "")}"
+    val q = spark.readStream.format("mqtt")
+      .option("connector", s"counting-$cid")
+      .option("clientId", cid).option("topics", "#").load()
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation",
+        Files.createTempDirectory("ckpt").toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+      assert(spark.table(name).select("topic").collect().map(_.getString(0))
+        .sorted.toSeq == topics)
+      assert(calls.get == 1 && fetched.get == topics.size,
+        s"fetch calls ${calls.get}, messages fetched ${fetched.get}")
+    } finally q.stop()
+  }
 }

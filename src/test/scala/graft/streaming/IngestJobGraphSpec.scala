@@ -2,21 +2,23 @@ package graft.streaming
 
 import graft.{GraftSession, TestSpark}
 import graft.obs.QueryMetrics
-import graft.registry.SchemaRegistry
-import graft.sinks.{ManifestCatalog, TableRouter}
+import graft.registry.{ColumnDef, SchemaRegistry}
+import graft.sinks.{ManifestCatalog, TableCatalog, TableRouter}
 import graft.sources.mqtt.{InMemoryBroker, MqttSource}
 import java.io.File
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ingest path's per-batch job graph, counted rather than timed so
   * host load cannot make it flaky. One mixed micro-batch (valid,
-  * poison and string-valued messages) costs at most two Spark jobs —
-  * the counting pass that also writes the rejected rows, and one routed
-  * append for every table and value type — runs no shuffle, and writes
-  * at most min(input partitions, task slots) files into each routed
-  * table. */
+  * poison and string-valued messages) that creates its tables costs at
+  * most two Spark jobs — the batch pass that counts and writes the
+  * rejected rows, and one routed append for the new tables — runs no
+  * shuffle, and writes at most min(input partitions, task slots) files
+  * into each routed table. A batch into tables that exist already is
+  * ONE job: the pass is the routed write's input. */
 class IngestJobGraphSpec extends AnyFunSuite {
   import IngestJobGraphSpec._
 
@@ -53,6 +55,27 @@ class IngestJobGraphSpec extends AnyFunSuite {
     assert(r.maxFilesPerTable <= math.min(4, 2), s"files: $r")
     assert(r.routedRows == expectedValid(Messages) &&
       r.rejectedRows == Messages - expectedValid(Messages), s"rows: $r")
+  }
+
+  test("steady-state batch into existing tables: exactly 1 job") {
+    val r = runSteadyBatch(TestSpark.spark, forwardOnly = false)
+    assertSteady(r)
+  }
+
+  test("steady-state batch via a forward-only catalog: exactly 1 job") {
+    // a wrapper that forwards only TableCatalog's own methods (as a
+    // timing or auditing wrapper does) keeps the one-job path
+    val r = runSteadyBatch(TestSpark.spark, forwardOnly = true)
+    assertSteady(r)
+  }
+
+  private def assertSteady(r: Result): Unit = {
+    assert(r.batches == 1, s"expected one micro-batch, got $r")
+    assert(r.jobs == 1 && r.shuffleMapStages == 0, s"job graph: $r")
+    assert(r.tables == 10, s"routed tables: $r")
+    assert(r.routedRows == expectedValid(2 * Messages) &&
+      r.rejectedRows == 2 * Messages - expectedValid(2 * Messages),
+      s"rows: $r")
   }
 }
 
@@ -118,6 +141,58 @@ object IngestJobGraphSpec {
       q.stop()
       metrics.close()
     }
+    val tables = catalog.listTables()
+    Result(
+      batches = q.recentProgress.count(_.numInputRows > 0),
+      jobs = counts.jobs.toInt,
+      shuffleMapStages = counts.shuffleMapStages.toInt,
+      tables = tables.size,
+      maxFilesPerTable = tables.map(catalog.fileCount).maxOption.getOrElse(0),
+      routedRows = tables.map(t => catalog.read(t).count()).sum,
+      rejectedRows = spark.read.parquet(rej).count())
+  }
+
+  /** A [[TableCatalog]] that forwards only the trait's methods. */
+  final class Forwarding(inner: TableCatalog) extends TableCatalog {
+    def listTables(): Seq[String] = inner.listTables()
+    def describe(table: String): Seq[ColumnDef] = inner.describe(table)
+    def createTable(table: String, cols: Seq[ColumnDef]): Unit =
+      inner.createTable(table, cols)
+    def append(table: String, df: DataFrame): Unit = inner.append(table, df)
+    override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean =
+      inner.appendRouted(df, tables)
+    override def batchCommitted(batchId: Long): Boolean =
+      inner.batchCommitted(batchId)
+    override def beginBatch(batchId: Long): Unit = inner.beginBatch(batchId)
+    override def commitBatch(batchId: Long): Unit = inner.commitBatch(batchId)
+  }
+
+  /** Two micro-batches of [[Messages]] mixed messages each, through one
+    * router, one query per batch: the first creates the 10 tables, the
+    * second, counted, only appends to them. */
+  def runSteadyBatch(spark: SparkSession, forwardOnly: Boolean): Result = {
+    val cid = s"graph-steady-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    val wh = Files.createTempDirectory("graph-wh").toString
+    val rej = Files.createTempDirectory("graph-rej").toString
+    val ckpt = Files.createTempDirectory("graph-ckpt").toString
+    val catalog = new ManifestCatalog(spark, wh)
+    val router = new TableRouter(new SchemaRegistry,
+      if (forwardOnly) new Forwarding(catalog) else catalog)
+    val metrics = QueryMetrics.install(spark.sparkContext)
+    def batch(from: Int): (StreamingQuery, QueryMetrics.Snapshot) = {
+      val source = IngestPipeline.mqttStream(spark, cid, Seq("#"))
+      (from until from + Messages).foreach { i =>
+        val (t, p) = message(i); InMemoryBroker.publish(t, p)
+      }
+      metrics.reset()
+      val q = IngestPipeline.start(source, router, ckpt,
+        rejectedDir = Some(rej))
+      try { q.processAllAvailable(); (q, metrics.snapshot()) }
+      finally q.stop()
+    }
+    val (q, counts) = try { batch(0); batch(Messages) }
+      finally metrics.close()
     val tables = catalog.listTables()
     Result(
       batches = q.recentProgress.count(_.numInputRows > 0),

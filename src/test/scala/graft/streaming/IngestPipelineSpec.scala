@@ -308,6 +308,112 @@ class IngestPipelineSpec extends AnyFunSuite {
     } finally if (q.isActive) q.stop()
   }
 
+  test("strict-compat mode: a poison batch commits nothing, creates no table") {
+    val cid = s"strict0-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val catalog = TableCatalog.default(spark,
+      Files.createTempDirectory("wh").toString)
+    InMemoryBroker.publish("/c/d/out/sensors/ok", """{"value":1.0}""")
+    InMemoryBroker.publish("/c/d/out/sensors/ok", """{"value":true}""")
+    val q = IngestPipeline.start(
+      IngestPipeline.mqttStream(spark, cid, Seq("#")),
+      new TableRouter(new SchemaRegistry, catalog),
+      Files.createTempDirectory("ckpt").toString, strictPoisonStop = true)
+    try {
+      val failed = try { q.processAllAvailable(); false }
+      catch { case _: Throwable => true }
+      assert(failed, "query should die on poison in strict mode")
+      assert(!catalog.batchCommitted(0L))
+      assert(catalog.listTables().isEmpty)
+    } finally if (q.isActive) q.stop()
+  }
+
+  test("hostile table names through the pipeline touch no path") {
+    val cid = s"hostile-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val parent = Files.createTempDirectory("hostile").toFile
+    val wh = new java.io.File(parent, "wh")
+    val catalog = TableCatalog.default(spark, wh.toString)
+    val router = new TableRouter(new SchemaRegistry, catalog)
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    val rej = Files.createTempDirectory("rej").toString
+    def batch(values: Double*): Unit = {
+      values.zipWithIndex.foreach { case (v, i) =>
+        val name = Seq("ok", "..", "_hidden")(i % 3)
+        InMemoryBroker.publish(s"/c/d/out/sensors/$name", s"""{"value":$v}""")
+      }
+      val q = IngestPipeline.start(
+        IngestPipeline.mqttStream(spark, cid, Seq("#")), router, ckpt,
+        rejectedDir = Some(rej))
+      try q.processAllAvailable() finally q.stop()
+    }
+    batch(1.0, 2.0, 3.0)
+    // `ok` exists now: this batch takes the one-job path
+    batch(4.0, 5.0, 6.0)
+    assert(parent.list().toSeq == Seq("wh"))
+    assert(wh.list().toSet == Set("_manifest", "ok"))
+    assert(catalog.listTables() == Seq("ok"))
+    assert(catalog.read("ok").collect().map(_.getAs[Double]("value"))
+      .sorted.toSeq == Seq(1.0, 4.0))
+  }
+
+  test("the cluster stage folds each valid String row once over two batches") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    import org.apache.spark.sql.types._
+    val cid = s"clusters-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    InMemoryBroker.setSubscriptions(cid, Seq("#"))
+    val catalog = TableCatalog.default(spark,
+      Files.createTempDirectory("wh").toString)
+    val router = new TableRouter(new SchemaRegistry, catalog)
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    val stateDir = Files.createTempDirectory("clusters").toString
+    val idx = new IncrementalClusters.GrowingIndex(IncrementalDedup.buildIndex(
+      spark.createDataFrame(java.util.List.of[Row](), StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType))))))
+    val state = new IncrementalClusters.State
+    IncrementalClusters.initState(stateDir, state)
+    val stage = IngestPipeline.ClustersStage(idx, state, stateDir)
+    val fox = "the quick brown fox jumps over the lazy dog by the river bank"
+    val batches = Seq(
+      Seq("/c/a/out/sensors/note" -> s"""{"value":"$fox"}""",
+        "/c/b/out/sensors/note" ->
+          """{"value":"a wholly different sentence about rain in spain"}""",
+        "/c/a/out/sensors/t" -> """{"value":1.5}""",
+        "bad-topic" -> s"""{"value":"$fox"}"""),
+      Seq("/c/z/out/sensors/note" -> s"""{"value":"$fox"}""",
+        "/c/a/out/sensors/t" -> """{"value":2.5}"""))
+    batches.foreach { msgs =>
+      msgs.foreach { case (t, p) => InMemoryBroker.publish(t, p) }
+      val q = IngestPipeline.start(
+        IngestPipeline.mqttStream(spark, cid, Seq("#")), router, ckpt,
+        clusters = Some(stage))
+      try q.processAllAvailable() finally q.stop()
+    }
+    val docIds = {
+      import spark.implicits._
+      batches.flatten.filter(m => m._1.startsWith("/") &&
+          m._2.contains("\"value\":\""))
+        .toDF("topic", "payload")
+        .select(xxhash64(col("topic"), col("payload")))
+        .collect().map(_.getLong(0)).toSeq
+    }
+    try {
+      assert(docIds.size == 3)
+      val seen = idx.composite.sets.select("old_doc").collect()
+        .map(_.getLong(0)).toSeq
+      assert(seen.sorted == docIds.sorted, "each String row exactly once")
+      val c = state.get
+      assert(c.lastBatch == 1L)
+      // the fox of batch 1 joins the fox of batch 0's cluster
+      assert(c.label(docIds(0)) == c.label(docIds(2)))
+      assert(c.label(docIds(1)) != c.label(docIds(0)))
+    } finally idx.release()
+  }
+
   test("QoS-1 redelivery collapsed by watermark dedup") {
     val cid = s"dedup-${System.nanoTime()}"
     InMemoryBroker.reset(cid)
