@@ -95,7 +95,11 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     *
     * With `batchId >= 0` (streaming), replayed batches the catalog has
     * already committed are skipped — effectively-once appends across
-    * query restarts for catalogs that record commits. */
+    * query restarts for catalogs that record commits. With `batchId < 0`
+    * no batch is opened, so the batch is not one atomic commit: rows of
+    * registered tables land with the pass's routed write, rows of new
+    * tables with a second one, and a failure after the first leaves its
+    * rows visible. */
   def routeBatch(batch: DataFrame, batchId: Long = -1L): RouteStats =
     routeBatch(batch, batchId, None)(_ => ())
 
@@ -104,7 +108,8 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     * the catalog has committed already is skipped whole.
     *
     * After [[TableCatalog.beginBatch]] the batch pass runs as the frame of
-    * ONE [[TableCatalog.appendRouted]] call: its tasks count the batch,
+    * ONE [[TableCatalog.appendRouted]] call (when any table is registered;
+    * otherwise it runs on its own): its tasks count the batch,
     * write its invalid rows into `rejectedDir`, and route every valid row
     * whose table is registered with that value type. A catalog without a
     * routed write (JDBC) leaves that frame unread; the pass then runs on
@@ -138,7 +143,10 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
             .filter(vt => registry.checkValid(cols, colsFor(vt)).isEmpty))
         }.filter(_._2.nonEmpty).toMap
       val pass = TableRouter.pass(batch, rejectedDir, takes)
-      val routed = catalog.appendRouted(pass.frame, takes.keys.toSeq.sorted)
+      // with no table registered the pass routes nothing: it runs on its
+      // own, so no catalog is handed a table-less write it could skip
+      val routed = takes.nonEmpty &&
+        catalog.appendRouted(pass.frame, takes.keys.toSeq.sorted)
       val counts = if (routed) pass.counts() else pass.run()
       check(counts)
       // rows of the batch, for the slices the pass left

@@ -95,51 +95,45 @@ object IngestPipeline {
         // exist is ONE shuffle-free job: the router's batch pass counts
         // it, writes its rejected rows and hands the routed rows to the
         // catalog's write, which reads them once — so the parse is not
-        // persisted, except behind the stateful dedup, whose state-store
-        // update each read of the batch would run again. Rows of new
-        // tables cost one more job.
+        // persisted. Rows of new tables cost one more job.
         val slots = batch.sparkSession.sparkContext.defaultParallelism
         val parsed = Ingest.parse(batch.select("topic", "payload")
           .coalesce(slots))
-        val cached = deduped ne source
-        if (cached) parsed.persist()
-        try {
-          // Rejected rows are written by the pass, BEFORE the data
-          // commit. If they were written after, a crash between
-          // commitBatch and the rejected write would lose those rows
-          // forever (the replay guard would skip them). This order gives
-          // the audit trail at-least-once (duplicates possible on replay
-          // of an uncommitted batch) and the data path effectively-once —
-          // the right asymmetry for an audit log. Strict mode writes no
-          // rejected rows: it fails the batch on the first one, before
-          // any DDL and before the commit.
-          router.routeBatch(parsed, batchId,
-            rejectedDir.filter(_ => !strictPoisonStop)) { counts =>
-            if (strictPoisonStop && counts.invalid > 0) {
-              // strict-compat: reference halts on the first bad message
-              val bad = Ingest.rejectedOfParsed(parsed).limit(1).collect().head
-              throw new PoisonMessageException(
-                s"poison message on topic '${bad.getAs[String]("topic")}'" +
-                  s": ${bad.getAs[String]("reason")}")
-            }
+        // Rejected rows are written by the pass, BEFORE the data
+        // commit. If they were written after, a crash between
+        // commitBatch and the rejected write would lose those rows
+        // forever (the replay guard would skip them). This order gives
+        // the audit trail at-least-once (duplicates possible on replay
+        // of an uncommitted batch) and the data path effectively-once —
+        // the right asymmetry for an audit log. Strict mode writes no
+        // rejected rows: it fails the batch on the first one, before
+        // any DDL and before the commit.
+        router.routeBatch(parsed, batchId,
+          rejectedDir.filter(_ => !strictPoisonStop)) { counts =>
+          if (strictPoisonStop && counts.invalid > 0) {
+            // strict-compat: reference halts on the first bad message
+            val bad = Ingest.rejectedOfParsed(parsed).limit(1).collect().head
+            throw new PoisonMessageException(
+              s"poison message on topic '${bad.getAs[String]("topic")}'" +
+                s": ${bad.getAs[String]("reason")}")
           }
-          // standing cluster fold AFTER the data commit: a crash in
-          // between replays the batch — the router skips (isCommitted)
-          // and the fold runs (its own lastBatch guard), so neither
-          // side double-applies. doc_id = xxhash64(topic, payload) is
-          // replay-stable: a QoS-1 redelivery maps to the same id and
-          // the fold's self-pair guards drop it. It re-reads the batch
-          // from its source partitions: no broker fetch.
-          clusters.foreach { cs =>
-            val docs = parsed
-              .filter(col("valid") && col("value_type") === "String")
-              .select(xxhash64(col("topic"), col("payload")).as("doc_id"),
-                col("value_s").as("text"))
-            IncrementalClusters.foldBatch(docs, batchId, cs.idx,
-              cs.checkpointDir, cs.state, cs.onUpdate, cs.maxResident)
-          }
-          ()
-        } finally if (cached) { parsed.unpersist(); () }
+        }
+        // standing cluster fold AFTER the data commit: a crash in
+        // between replays the batch — the router skips (isCommitted)
+        // and the fold runs (its own lastBatch guard), so neither
+        // side double-applies. doc_id = xxhash64(topic, payload) is
+        // replay-stable: a QoS-1 redelivery maps to the same id and
+        // the fold's self-pair guards drop it. It re-reads the batch
+        // from its source partitions: no broker fetch.
+        clusters.foreach { cs =>
+          val docs = parsed
+            .filter(col("valid") && col("value_type") === "String")
+            .select(xxhash64(col("topic"), col("payload")).as("doc_id"),
+              col("value_s").as("text"))
+          IncrementalClusters.foldBatch(docs, batchId, cs.idx,
+            cs.checkpointDir, cs.state, cs.onUpdate, cs.maxResident)
+        }
+        ()
       }
       .start()
   }

@@ -183,6 +183,9 @@ class IngestSpec extends AnyFunSuite {
         s("topic")) ++ parsed))
     assert(Ingest.rejectedOfParsed(Ingest.parse(in)).schema ==
       StructType(Seq(s("topic"), s("payload"), s("reason", false))))
+    // the batch pass writes rejected files under the constant schema
+    assert(Ingest.rejectedOfParsed(Ingest.parse(in)).schema ==
+      Ingest.RejectedSchema)
   }
 
   test("timestamp key in payload is discarded (reference drops event time)") {

@@ -2,8 +2,9 @@ package graft.sinks
 
 import graft.TestSpark
 import graft.ingest.Ingest
-import graft.registry.SchemaRegistry
+import graft.registry.{ColumnDef, SchemaRegistry}
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -130,6 +131,33 @@ class TableRouterSpec extends AnyFunSuite {
     catalog.vacuum(retentionMs = 0L)
     val listed = catalog.snapshotAt(catalog.latestVersion())("mm").toSet
     assert(new java.io.File(root, "mm").list().toSet == listed)
+  }
+
+  test("a catalog that skips a table-less routed write still routes") {
+    val root = Files.createTempDirectory("graft-wh").toString
+    val inner = new ManifestCatalog(spark, root)
+    // returns true for an empty table list without reading the frame
+    val catalog = new TableCatalog {
+      def listTables(): Seq[String] = inner.listTables()
+      def describe(table: String): Seq[ColumnDef] = inner.describe(table)
+      def createTable(table: String, cols: Seq[ColumnDef]): Unit =
+        inner.createTable(table, cols)
+      def append(table: String, df: DataFrame): Unit = inner.append(table, df)
+      override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean =
+        tables.isEmpty || inner.appendRouted(df, tables)
+      override def batchCommitted(batchId: Long): Boolean =
+        inner.batchCommitted(batchId)
+      override def beginBatch(batchId: Long): Unit = inner.beginBatch(batchId)
+      override def commitBatch(batchId: Long): Unit =
+        inner.commitBatch(batchId)
+    }
+    val router = new TableRouter(new SchemaRegistry, catalog)
+    // no table is registered before the first batch
+    val stats = router.routeBatch(batchOf(
+      ("/c/d/out/sensors/t1", """{"value":1.0}""")), batchId = 0L)
+    assert(stats.appended == Map("t1" -> 1L))
+    assert(inner.batchCommitted(0L))
+    assert(inner.read("t1").count() == 1L)
   }
 
   test("hostile or exotic table names rejected, never touch the catalog") {
