@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 
 import graft.registry.ColumnDef
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, ManifestFileIndex, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Commit-log (manifest) table format. It closes the two crash windows
   * a plain parquet-directory layout (one directory per table, files
@@ -38,8 +38,13 @@ import org.apache.spark.sql.types.StructType
   * footer scans), and therefore support ADD-COLUMN evolution without
   * rewriting old files (they surface NULL for later columns; time
   * travel reads each version under the schema recorded AT that
-  * version). `appendRouted` (the dynamic router path) keeps
-  * schema-inference reads.
+  * version). [[createTable]] records a routed table's schema, so routed
+  * tables read pinned too; only a table written before DDL recorded
+  * schemas reads in the schema its footers infer.
+  *
+  * Reads plan from the log alone: the files a version lists become a
+  * [[org.apache.spark.sql.ManifestFileIndex]], one driver-side stat per
+  * file, with no directory listing, glob or listing job.
   *
   * Every part file is written by [[PartWriter]] straight into its table
   * directory under a name no other write uses, and is invisible until a
@@ -279,8 +284,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     *
     * `readVersion` is the OTHER half of the conflict story: a snapshot
     * transaction (compaction, MERGE, DELETE — anything that read the
-    * table, computed a rewrite, and now commits `removed`/`replace`)
-    * records the manifest version it READ at. Versions that landed
+    * table, computed a rewrite, and now commits `removed`/`replace`),
+    * and a [[createTable]], which read that the table did not exist,
+    * record the manifest version they READ at. Versions that landed
     * AFTER that read are conflicts to validate even when this writer's
     * counter is fresh and the link publish wins first try — a losing
     * link race is merely one way to discover intervening commits, not
@@ -454,6 +460,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     scala.collection.mutable.Map.empty[String, Seq[String]]
   private val pendingSchemas =
     scala.collection.mutable.Map.empty[String, String]
+  // the oldest version a DDL of the open batch read: the batch commit
+  // validates what landed after it (see commitVersion's readVersion)
+  private var pendingReadVersion: Option[Long] = None
   private var deferring = false
 
   override def beginBatch(batchId: Long): Unit = synchronized {
@@ -461,12 +470,14 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     // part files are unreachable orphans until vacuum()
     pendingAdds.clear()
     pendingSchemas.clear()
+    pendingReadVersion = None
     deferring = true
   }
 
   /** Record adds into the open batch; false → caller commits directly. */
   private def recordPending(added: Map[String, Seq[String]],
-      schemas: Map[String, String]): Boolean =
+      schemas: Map[String, String],
+      readVersion: Option[Long] = None): Boolean =
     synchronized {
       if (!deferring) false
       else {
@@ -474,6 +485,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
           pendingAdds(t) = pendingAdds.getOrElse(t, Nil) ++ fs
         }
         schemas.foreach { case (t, s) => pendingSchemas(t) = s }
+        pendingReadVersion = (pendingReadVersion ++ readVersion).minOption
         true
       }
     }
@@ -488,8 +500,36 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       ColumnDef(f.name, graft.ingest.TypeMapping.toClickHouse(f.dataType)))
   }
 
+  /** CREATE TABLE IF NOT EXISTS: records the table, with no files, and
+    * its schema, `cols` mapped through
+    * [[graft.ingest.TypeMapping.toSparkRead]], so reads of it are pinned
+    * from the first commit on. Inside a batch the DDL commits with the
+    * batch. A table the log already lists is left as it is, and one it
+    * records under another schema fails the DDL. A concurrent create of
+    * the same table with divergent types conflicts at commit (the DDL's
+    * read version goes to [[commitVersion]]): the loser's batch fails
+    * instead of mixing types in one table. */
   override def createTable(table: String, cols: Seq[ColumnDef]): Unit = {
-    val _ = (table, cols) // tables materialize at first committed append
+    val schema = StructType(cols.map(c => StructField(c.name,
+      graft.ingest.TypeMapping.toSparkRead(c.chType).getOrElse(
+        throw new IllegalArgumentException(
+          s"table $table: no Spark type for column ${c.name} ${c.chType}")))))
+    val readV = latestVersion() // see merge: captured before the snapshot
+    val snap = snapshotFull()
+    def columns(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
+    recordedSchema(snap, table) match {
+      case Some(have) =>
+        if (columns(have) != columns(schema))
+          throw new IllegalArgumentException(s"table $table exists as " +
+            s"${have.toDDL}, not ${schema.toDDL}")
+      case None if snap.files.contains(table) => // predates recorded DDL
+      case None =>
+        val added = Map(table -> Seq.empty[String])
+        val schemas = Map(table -> encodeSchema(schema))
+        if (!recordPending(added, schemas, Some(readV)))
+          commitVersion(None, added, schemas = schemas,
+            readVersion = Some(readV))
+    }
   }
 
   /** Read ONLY the files the manifest lists — uncommitted (orphaned)
@@ -501,8 +541,20 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val snap = snapshotFull()
     val files = snap.files.getOrElse(table,
       throw new IllegalArgumentException(s"no such table: $table"))
-    readWithSchema(table, files, snap.schemas.get(table))
+    readWithSchema(table, files, recordedSchema(snap, table))
   }
+
+  private def recordedSchema(snap: Snap, table: String): Option[StructType] =
+    snap.schemas.get(table).map(decodeSchema)
+
+  /** The schema a read of `table`'s `files` uses when it reads only some
+    * of them: the recorded one or, for a table written before schemas
+    * were recorded, the one the footers of all `files` infer. */
+  private def readSchema(snap: Snap, table: String,
+      files: Seq[String]): Option[StructType] =
+    recordedSchema(snap, table).orElse(
+      if (files.nonEmpty) Some(readWithSchema(table, files, None).schema)
+      else None)
 
   private def decodeSchema(b64: String): StructType =
     org.apache.spark.sql.types.DataType.fromJson(new String(
@@ -512,14 +564,11 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   private def encodeSchema(s: StructType): String =
     java.util.Base64.getEncoder.encodeToString(s.json.getBytes(UTF_8))
 
+  /** `files` of `table`, in `schema`, or, for a table written before
+    * schemas were recorded, in the schema its footers infer. */
   private def readWithSchema(table: String, files: Seq[String],
-      schemaB64: Option[String]): DataFrame = {
-    val reader = schemaB64 match {
-      case Some(b) => spark.read.schema(decodeSchema(b))
-      case None => spark.read
-    }
-    reader.parquet(files.map(f => s"$root/$table/$f"): _*)
-  }
+      schema: Option[StructType]): DataFrame =
+    ManifestFileIndex.read(spark, files.map(f => s"$root/$table/$f"), schema)
 
   /** Highest committed manifest version, or -1 for an empty log. */
   def latestVersion(): Long =
@@ -566,7 +615,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val snap = snapFullAt(version)
     val files = snap.files.getOrElse(table,
       throw new IllegalArgumentException(s"no such table at v$version: $table"))
-    readWithSchema(table, files, snap.schemas.get(table))
+    readWithSchema(table, files, recordedSchema(snap, table))
   }
 
   override def append(table: String, df: DataFrame): Unit =
@@ -688,8 +737,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       min(col(c)).cast("string").as(s"__mn_$c"),
       max(col(c)).cast("string").as(s"__mx_$c"))) ++
       bloomCols.map(c => bloom(col(c).cast("string")).as(s"__bf_$c"))
-    spark.read.schema(schema)
-      .parquet(moved.map(f => s"$root/$table/$f"): _*)
+    readWithSchema(table, moved, Some(schema))
       .groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // bounded: one row per freshly written part file
@@ -759,16 +807,20 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * @return (kept files, all files) */
   def bloomPrunedFiles(table: String, column: String,
       value: String): (Seq[String], Seq[String]) = {
-    val snap = snapshotFull()
+    val (kept, files, _) = bloomPruned(snapshotFull(), table, column, value)
+    (kept, files)
+  }
+
+  /** [[bloomPrunedFiles]] over one folded log, with the schema the
+    * table reads in. */
+  private def bloomPruned(snap: Snap, table: String, column: String,
+      value: String): (Seq[String], Seq[String], Option[StructType]) = {
     val files = snap.files.getOrElse(table,
       throw new IllegalArgumentException(s"no such table: $table"))
-    // column type: the recorded schema, or the parquet footers when the
-    // table predates schema recording. An unknown column keeps all
-    // files — the downstream filter raises the analysis error.
-    val dt = snap.schemas.get(table).map(decodeSchema)
-      .orElse(if (files.nonEmpty)
-        Some(readWithSchema(table, files, None).schema) else None)
-      .flatMap(_.fields.find(_.name == column).map(_.dataType))
+    // an unknown column keeps all files — the downstream filter raises
+    // the analysis error
+    val schema = readSchema(snap, table, files)
+    val dt = schema.flatMap(_.fields.find(_.name == column).map(_.dataType))
     val probe = dt match {
       case Some(t) => canonicalProbe(t, value)
       case None => Some(value)
@@ -785,24 +837,21 @@ final class ManifestCatalog(spark: SparkSession, root: String,
           }
       }
     }
-    (kept, files)
+    (kept, files, schema)
   }
 
   /** Point-lookup read: prune the file list by per-file blooms (and by
     * min/max where recorded via the normal filter pushdown), then apply
     * `col = value` normally — identical semantics to
-    * `read(table).filter`, minus the skipped I/O. */
+    * `read(table).filter`, minus the skipped I/O. The files and the
+    * schema come from one fold of the log. */
   def readPoint(table: String, column: String, value: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (kept, _) = bloomPrunedFiles(table, column, value)
-    val snap = snapshotFull()
+    val (kept, _, schema) = bloomPruned(snapshotFull(), table, column, value)
     // compare against the bare literal: type coercion promotes the
     // LITERAL to the column type, so the equality still pushes down to
     // the parquet scan (casting the column would block pushdown)
-    if (kept.isEmpty)
-      read(table).filter(col(column) === lit(value)).limit(0)
-    else readWithSchema(table, kept, snap.schemas.get(table))
-      .filter(col(column) === lit(value))
+    readWithSchema(table, kept, schema).filter(col(column) === lit(value))
   }
 
   /** File list after zone-map pruning for `lo <= col <= hi`: a file is
@@ -844,8 +893,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     import org.apache.spark.sql.functions.{col, lit}
     require(preds.nonEmpty)
     val snap = snapshotFull()
-    val kept = preds.foldLeft(snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))) {
+    val files = snap.files.getOrElse(table,
+      throw new IllegalArgumentException(s"no such table: $table"))
+    val kept = preds.foldLeft(files) {
       case (files, (c, lo, hi)) => files.filter { f =>
         snap.stats.get(s"$table/$f")
           .flatMap(b => decodeColStats(b).get(c)) match {
@@ -860,10 +910,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val filterExpr = preds.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    if (kept.isEmpty)
-      // empty relation under the recorded schema (filter keeps semantics)
-      read(table).filter(filterExpr).limit(0)
-    else readWithSchema(table, kept, snap.schemas.get(table))
+    readWithSchema(table, kept, readSchema(snap, table, files))
       .filter(filterExpr)
   }
 
@@ -944,14 +991,15 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * with the batch id in ONE atomic rename — outside a batch this is
     * just the bare marker version. */
   override def commitBatch(batchId: Long): Unit = {
-    val (adds, schs) = synchronized {
-      val a = (pendingAdds.toMap, pendingSchemas.toMap)
+    val (adds, schs, readV) = synchronized {
+      val a = (pendingAdds.toMap, pendingSchemas.toMap, pendingReadVersion)
       pendingAdds.clear()
       pendingSchemas.clear()
+      pendingReadVersion = None
       deferring = false
       a
     }
-    commitVersion(Some(batchId), adds, schemas = schs)
+    commitVersion(Some(batchId), adds, schemas = schs, readVersion = readV)
   }
 
   /** Exactly-once batch append: all tables' rows AND the batch id become
@@ -988,8 +1036,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val snap = snapshotFull()
     val files = snap.files.getOrElse(table,
       throw new IllegalArgumentException(s"no such table: $table"))
-    val schemaB64 = snap.schemas.get(table)
-    val live = readWithSchema(table, files, schemaB64)
+    val schema = readSchema(snap, table, files)
+    val live = readWithSchema(table, files, schema)
     val cols = live.schema.fieldNames.toSeq
     val src = source.select(cols.map(org.apache.spark.sql.functions.col): _*)
     val keyFrame = src
@@ -1003,7 +1051,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       .select("_file").distinct().collect().map(_.getString(0)).toSeq
     val rewritten =
       if (touched.isEmpty) src
-      else readWithSchema(table, touched, schemaB64)
+      else readWithSchema(table, touched, schema)
         .join(keyFrame, keys, "left_anti")
         .unionByName(src)
     val moved = PartWriter.write(rewritten, s"$root/$table")
@@ -1023,13 +1071,13 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val snap = snapshotFull()
     val files = snap.files.getOrElse(table,
       throw new IllegalArgumentException(s"no such table: $table"))
-    val schemaB64 = snap.schemas.get(table)
-    val live = readWithSchema(table, files, schemaB64)
+    val schema = readSchema(snap, table, files)
+    val live = readWithSchema(table, files, schema)
     val touched = live.filter(predicate)
       .select(col("_metadata.file_name").as("_file"))
       .distinct().collect().map(_.getString(0)).toSeq
     if (touched.nonEmpty) {
-      val keep = readWithSchema(table, touched, schemaB64)
+      val keep = readWithSchema(table, touched, schema)
         .filter(not(coalesce(predicate, lit(false))))
       val moved = PartWriter.write(keep, s"$root/$table")
       commitVersion(None, add = Map(table -> moved),
@@ -1051,24 +1099,21 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val fromSnap = snapFullAt(fromV)
     val before = fromSnap.files.getOrElse(table, Seq.empty[String])
     val after = toSnap.files.getOrElse(table, Seq.empty[String])
-    // both sides read under the `toV` schema so the diff's columns line
-    // up across an add-column evolution (old files surface NULLs)
-    val schemaB64 = toSnap.schemas.get(table)
-      .orElse(fromSnap.schemas.get(table))
     val removedF = before.filterNot(after.toSet)
     val addedF = after.filterNot(before.toSet)
-    def readFiles(fs: Seq[String], schemaFrom: Seq[String]): DataFrame =
-      if (fs.nonEmpty) readWithSchema(table, fs, schemaB64)
-      else if (schemaFrom.nonEmpty)
-        readWithSchema(table, schemaFrom, schemaB64).limit(0)
-      else throw new IllegalArgumentException(
-        s"no such table in either version: $table")
-    if (removedF.isEmpty && addedF.isEmpty)
-      return readFiles(Nil, before ++ after)
+    // both sides read under the `toV` schema so the diff's columns line
+    // up across an add-column evolution (old files surface NULLs)
+    val changed = addedF ++ removedF
+    val schema = recordedSchema(toSnap, table)
+      .orElse(readSchema(fromSnap, table,
+        if (changed.nonEmpty) changed else before ++ after))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no such table in either version: $table"))
+    if (changed.isEmpty)
+      return readWithSchema(table, Nil, Some(schema))
         .withColumn("_op", lit("")).limit(0)
-    val schemaDonor = if (addedF.nonEmpty) addedF else removedF
-    val newSide = readFiles(addedF, schemaDonor)
-    val oldSide = readFiles(removedF, schemaDonor)
+    val newSide = readWithSchema(table, addedF, Some(schema))
+    val oldSide = readWithSchema(table, removedF, Some(schema))
     newSide.exceptAll(oldSide).withColumn("_op", lit("insert"))
       .unionByName(oldSide.exceptAll(newSide).withColumn("_op", lit("delete")))
       .select(col("_op") +: newSide.columns.toSeq.map(col): _*)
@@ -1089,7 +1134,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val snap = snapshotFull()
     val consumed = snap.files.getOrElse(table,
       throw new IllegalArgumentException(s"no such table: $table"))
-    val compacted = readWithSchema(table, consumed, snap.schemas.get(table))
+    val compacted =
+      readWithSchema(table, consumed, recordedSchema(snap, table))
       .coalesce(math.max(1, targetFiles))
     val moved = PartWriter.write(compacted, s"$root/$table")
     // any column that carried range stats or a bloom on a consumed file

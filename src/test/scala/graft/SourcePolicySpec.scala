@@ -8,7 +8,8 @@ import scala.util.matching.Regex
 /** Session policy, job accounting, artifact release and the sinks' file
   * writes each live in one module: no other source file builds a session,
   * implements the accounting callbacks or releases a query module's memo
-  * by hand, and no sink writes a DataFrame. The patterns are split so
+  * by hand, no sink writes a DataFrame, and no sink reads parquet but
+  * through the manifest's file index. The patterns are split so
   * this file does not match them itself. */
 class SourcePolicySpec extends AnyFunSuite {
   private val root: Path =
@@ -45,6 +46,13 @@ class SourcePolicySpec extends AnyFunSuite {
 
   test("the sinks write parquet only through PartWriter") {
     assert(filesMatching(("\\.write" + "\\.|Save" + "Mode").r,
+      Seq("src/main/scala/graft/sinks")).isEmpty)
+  }
+
+  test("the sinks read parquet only through ManifestFileIndex") {
+    // a DataFrameReader chain (`spark.read.parquet`, `.read.schema`, …);
+    // `catalog.read(table)` calls are no reader
+    assert(filesMatching(("\\.read" + "\\b(?!\\s*\\()").r,
       Seq("src/main/scala/graft/sinks")).isEmpty)
   }
 
