@@ -30,15 +30,14 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Log format (Delta-style delta log): `_manifest/v<20-digit>.json`,
   * each version holding only the delta — `add` (files appended per
-  * table), `removed` (files a compaction consumed), `replace` (legacy
-  * full-list swap), and an optional `batchId` — plus a `schemas`
-  * section recording the table's schema (base64 StructType JSON)
-  * whenever an append changes it. Readers fold the log into per-table
-  * file lists + latest schemas, pin reads to the recorded schema (no
-  * footer scans), and therefore support ADD-COLUMN evolution without
-  * rewriting old files (they surface NULL for later columns; time
-  * travel reads each version under the schema recorded AT that
-  * version). [[createTable]] records a routed table's schema, so routed
+  * table), `removed` (files a compaction consumed) and an optional
+  * `batchId` — plus a `schemas` section recording the table's schema
+  * (base64 StructType JSON) whenever an append changes it. Readers fold
+  * the log into per-table file lists + latest schemas, pin reads to the
+  * recorded schema (no footer scans), and therefore support ADD-COLUMN
+  * evolution without rewriting old files (they surface NULL for later
+  * columns; time travel reads each version under the schema recorded AT
+  * that version). [[createTable]] records a routed table's schema, so routed
   * tables read pinned too; only a table written before DDL recorded
   * schemas reads in the schema its footers infer.
   *
@@ -67,8 +66,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * [[ManifestCatalog.MaxRetainedBatchIds]] committed batch ids. Readers
   * start the fold from the latest checkpoint and read only the ≤interval
   * delta versions after it, so snapshot cost is O(interval), not
-  * O(stream lifetime); commits are O(1) (the next version number is
-  * tracked in memory — valid under single-writer). [[vacuum]] reclaims
+  * O(stream lifetime); a commit lists `_manifest/` once to take the next
+  * version number (see [[commitVersion]]). [[vacuum]] reclaims
   * delta files at-or-before the latest checkpoint and superseded
   * checkpoints. A checkpoint is derived data: if its write fails or it
   * is deleted, readers fall back to folding the full delta log.
@@ -86,47 +85,31 @@ final class ManifestCatalog(spark: SparkSession, root: String,
 
   // ------------------------------------------------------------ log I/O
 
-  private final case class Version(n: Long, batchId: Option[Long],
-      add: Map[String, Seq[String]], replace: Map[String, Seq[String]],
-      removed: Map[String, Seq[String]],
-      schemas: Map[String, String],
-      stats: Map[String, String] = Map.empty)
+  import ManifestCatalog.{EmptySnap, Log, LogName, Snap, Version}
 
-  private final case class Checkpoint(n: Long,
-      tables: Map[String, Seq[String]], batchIds: Seq[Long],
-      schemas: Map[String, String],
-      stats: Map[String, String] = Map.empty)
-
-  /** A folded view of the log: per-table file lists + the latest
-    * recorded schema (base64 StructType JSON) per table + per-file
-    * column stats (`"table/file"` → base64 stats block) for data
-    * skipping. */
-  private final case class Snap(files: Map[String, Seq[String]],
-      schemas: Map[String, String],
-      stats: Map[String, String] = Map.empty)
-
-  private def versionFiles(): Seq[File] =
-    Option(manifestDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("v") && f.getName.endsWith(".json"))
-      .sortBy(_.getName).toSeq
-
-  private def checkpointFiles(): Seq[File] =
-    Option(manifestDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("c") && f.getName.endsWith(".json"))
-      .sortBy(_.getName).toSeq
+  /** The one listing of the log directory; every version number comes
+    * from a file name. */
+  private def listLog(): Log = {
+    val named = Option(manifestDir.listFiles()).getOrElse(Array.empty).toSeq
+      .flatMap(f => f.getName match {
+        case LogName(kind, n) => Some((kind, n.toLong, f))
+        case _ => None
+      }).sortBy(_._2)
+    Log(named.collect { case ("c", n, f) => n -> f },
+      named.collect { case ("v", n, f) => n -> f })
+  }
 
   // minimal JSON — the shapes are fixed and writer-controlled, so a
   // hand-rolled codec avoids a library dependency (none are available)
-  private def render(v: Version): String = {
-    def files(m: Map[String, Seq[String]]): String =
-      m.toSeq.sortBy(_._1).map { case (t, fs) =>
-        "\"" + t + "\":[" + fs.map("\"" + _ + "\"").mkString(",") + "]"
-      }.mkString("{", ",", "}")
+  private def filesJson(m: Map[String, Seq[String]]): String =
+    m.toSeq.sortBy(_._1).map { case (t, fs) =>
+      "\"" + t + "\":[" + fs.map("\"" + _ + "\"").mkString(",") + "]"
+    }.mkString("{", ",", "}")
+
+  private def render(v: Version): String =
     s"""{"version":${v.n},"batchId":${v.batchId.getOrElse(-1L)},""" +
-      s""""add":${files(v.add)},"replace":${files(v.replace)},""" +
-      s""""removed":${files(v.removed)},"schemas":${strs(v.schemas)},""" +
-      s""""stats":${strs(v.stats)}}"""
-  }
+      s""""add":${filesJson(v.add)},"removed":${filesJson(v.removed)},""" +
+      s""""schemas":${strs(v.schemas)},"stats":${strs(v.stats)}}"""
 
   // schema payloads are base64 (StructType JSON contains the very
   // quotes/braces the hand-rolled regex codec cannot tolerate)
@@ -156,18 +139,30 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
       .map(_.group(1).toLong).filter(_ >= 0)
 
-  private def parse(n: Long, s: String): Version =
+  /** A delta version. Logs written before `removed` existed could hold a
+    * full-list `replace` section; no writer emits it, so a delta holding
+    * a non-empty one fails here instead of being folded as something
+    * else. */
+  private def parse(n: Long, s: String): Version = {
+    if (filesSection(s, "replace").nonEmpty)
+      throw new IllegalStateException(s"manifest version $n holds a " +
+        "\"replace\" section, which this reader does not apply")
     Version(n, deltaBatchId(s), filesSection(s, "add"),
-      filesSection(s, "replace"), filesSection(s, "removed"),
-      strsSection(s, "schemas"), strsSection(s, "stats"))
+      filesSection(s, "removed"), strsSection(s, "schemas"),
+      strsSection(s, "stats"))
+  }
 
-  private def renderCheckpoint(c: Checkpoint): String = {
-    val tables = c.tables.toSeq.sortBy(_._1).map { case (t, fs) =>
-      "\"" + t + "\":[" + fs.map("\"" + _ + "\"").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    s"""{"checkpoint":${c.n},"tables":$tables,""" +
-      s""""batchIds":[${c.batchIds.mkString(",")}],""" +
-      s""""schemas":${strs(c.schemas)},"stats":${strs(c.stats)}}"""
+  /** A checkpoint body: the fold's file lists, its newest
+    * [[ManifestCatalog.MaxRetainedBatchIds]] batch ids, its schemas and
+    * the stats of files still live at it (so the materialized fold never
+    * accumulates entries for vacuumed files). */
+  private def renderCheckpoint(s: Snap): String = {
+    val live = s.files.flatMap { case (t, fs) => fs.map(f => s"$t/$f") }.toSet
+    val bids = s.batchIds.takeRight(ManifestCatalog.MaxRetainedBatchIds)
+    s"""{"checkpoint":${s.version},"tables":${filesJson(s.files)},""" +
+      s""""batchIds":[${bids.mkString(",")}],""" +
+      s""""schemas":${strs(s.schemas)},""" +
+      s""""stats":${strs(s.stats.filter(e => live(e._1)))}}"""
   }
 
   private def checkpointBatchIds(s: String): Seq[Long] =
@@ -175,95 +170,86 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       .map(_.group(1)).getOrElse("").split(",").toSeq
       .filter(_.nonEmpty).map(_.trim.toLong)
 
-  private def parseCheckpoint(n: Long, s: String): Checkpoint =
+  private def parseCheckpoint(n: Long, s: String): Snap =
     // "tables" must not greedily swallow the later "schemas" section —
     // filesSection's non-greedy regex stops at the first `}`, which is
     // the end of the tables map because file lists contain no braces
-    Checkpoint(n, filesSection(s, "tables"), checkpointBatchIds(s),
-      strsSection(s, "schemas"), strsSection(s, "stats"))
+    Snap(n, filesSection(s, "tables"), strsSection(s, "schemas"),
+      strsSection(s, "stats"), checkpointBatchIds(s).toVector)
 
   private def read(f: File): String =
     new String(Files.readAllBytes(f.toPath), UTF_8)
 
-  /** (version, body) of the newest checkpoint file. */
-  private def latestCheckpointText(): Option[(Long, String)] =
-    checkpointFiles().lastOption.map { f =>
-      f.getName.stripPrefix("c").stripSuffix(".json").toLong -> read(f)
-    }
-
-  private def latestCheckpoint(): Option[Checkpoint] =
-    latestCheckpointText().map { case (n, s) => parseCheckpoint(n, s) }
-
-  /** (version, body) of the delta files strictly after `after`. */
-  private def deltaTexts(after: Long): Seq[(Long, String)] = versionFiles()
-    .map(f => f.getName.stripPrefix("v").stripSuffix(".json").toLong -> f)
-    .filter(_._1 > after)
-    .map { case (n, f) => n -> read(f) }
-
-  /** Delta versions strictly after `after` (all of them for -1). */
-  private def readDeltas(after: Long): Seq[Version] =
-    deltaTexts(after).map { case (n, s) => parse(n, s) }
-
-  private def foldInto(base: Snap, deltas: Seq[Version]): Snap =
-    deltas.foldLeft(base) { (acc, v) =>
-      // order matters: replace (full-list, legacy) → removed (precise —
-      // compaction consumes exactly the files it read, so adds committed
-      // DURING the compaction window survive the fold) → add
-      val replaced = acc.files ++ v.replace
-      val removed = v.removed.foldLeft(replaced) { case (a, (t, fs)) =>
-        a.get(t) match {
-          case Some(cur) => a.updated(t, cur.filterNot(fs.toSet))
-          case None => a
-        }
+  /** The log folded up to version `upTo`, or up to its head when None:
+    * the newest checkpoint at or below that version, then the deltas
+    * after it in order, so a fold reads O(checkpointInterval) files,
+    * not O(stream lifetime). Versions are consecutive, so the chain ends
+    * at its first gap: the head of a listing that raced a commit is the
+    * last version before the gap, and a fold to a given version that
+    * comes up short means [[vacuum]] reclaimed part of its chain, which
+    * fails loudly rather than returning an incomplete file list. */
+  private def fold(upTo: Option[Long] = None, log: Log = listLog()): Snap = {
+    val top = upTo.getOrElse(log.latest)
+    if (top > log.latest)
+      throw new IllegalArgumentException(s"unknown version: $top")
+    val base = log.checkpoints.filter(_._1 <= top).lastOption
+      .fold(EmptySnap) { case (n, f) => parseCheckpoint(n, read(f)) }
+    val chain = log.deltasAfter(base.version).filter(_._1 <= top)
+      .zipWithIndex.takeWhile { case ((n, _), i) => n == base.version + 1 + i }
+      .map(_._1)
+    if (upTo.isDefined && chain.size != top - base.version)
+      throw new IllegalStateException(
+        s"version $top is no longer reachable: expected " +
+          s"${top - base.version} deltas after checkpoint ${base.version}, " +
+          s"found ${chain.size} (reclaimed by vacuum)")
+    chain.foldLeft(base) { case (acc, (n, f)) =>
+      val v = parse(n, read(f))
+      // removed before add: compaction removes exactly the files it
+      // read, so adds committed DURING the compaction window survive
+      val kept = v.removed.foldLeft(acc.files) { case (a, (t, fs)) =>
+        a.get(t).fold(a)(cur => a.updated(t, cur.filterNot(fs.toSet)))
       }
-      val added = v.add.foldLeft(removed) { case (a, (t, fs)) =>
+      val files = v.add.foldLeft(kept) { case (a, (t, fs)) =>
         a.updated(t, a.getOrElse(t, Nil) ++ fs)
       }
-      // stats follow their files: entries for removed/replaced files are
-      // dropped (a compacted file has no stats until a stats job re-runs
-      // — readers keep it conservatively, see statsPrunedFiles)
-      val deadKeys =
-        v.removed.flatMap { case (t, fs) => fs.map(f => s"$t/$f") }.toSet ++
-          v.replace.keySet.flatMap { t =>
-            acc.files.getOrElse(t, Nil).map(f => s"$t/$f")
-          }
-      val stats = (acc.stats -- deadKeys) ++ v.stats
-      Snap(added, acc.schemas ++ v.schemas, stats) // latest schema wins
+      // stats follow their files: entries for removed files are dropped
+      // (a compacted file has no stats until a stats job re-runs —
+      // readers keep it conservatively, see overlapping)
+      val dead = v.removed.flatMap { case (t, fs) => fs.map(f => s"$t/$f") }
+      Snap(n, files, acc.schemas ++ v.schemas, // latest schema wins
+        (acc.stats -- dead) ++ v.stats, acc.batchIds ++ v.batchId)
     }
-
-  /** Fold checkpoint + post-checkpoint deltas into the live per-table
-    * file lists + schemas — O(checkpointInterval) files, not O(stream
-    * lifetime). */
-  private def snapshotFull(): Snap = {
-    val ckpt = latestCheckpoint()
-    foldInto(
-      ckpt.map(c => Snap(c.tables, c.schemas, c.stats)).getOrElse(Snap(Map.empty,
-        Map.empty)),
-      readDeltas(ckpt.map(_.n).getOrElse(-1L)))
   }
 
-  private def snapshot(): Map[String, Seq[String]] = snapshotFull().files
+  /** The files the manifest lists for `table` in `snap`. */
+  private def tableFiles(snap: Snap, table: String): Seq[String] =
+    snap.files.getOrElse(table, throw new IllegalArgumentException(
+      s"no such table at v${snap.version}: $table"))
 
   /** (latest checkpoint version, delta files a fold reads) — exposed so
     * ManifestCheckpointSpec can assert the O(interval) bound. */
   private[sinks] def logStats(): (Option[Long], Int) = {
-    val ckpt = latestCheckpoint().map(_.n)
-    (ckpt, readDeltas(ckpt.getOrElse(-1L)).size)
+    val log = listLog()
+    val ckpt = log.checkpoints.lastOption.map(_._1)
+    (ckpt, log.deltasAfter(ckpt.getOrElse(-1L)).size)
   }
 
-  // Next version number, tracked in memory after the first disk read —
-  // O(1) commits while this writer keeps winning. -2 = not yet read;
-  // reset to -2 after losing a version race to force a disk refresh.
-  private var nextVersion: Long = -2L
+  // The newest version this writer committed, or the one before a number
+  // it lost a race for. Versions after it landed unseen, so a commit
+  // validates them first. None until this writer's first commit.
+  private var seen: Option[Long] = None
 
   /** Atomic commit with optimistic concurrency. The body is staged to a
     * temp file, then PUBLISHED by hard-linking it to the next version
     * number: `Files.createLink` fails atomically when the target exists
     * — across processes, not just threads (a POSIX rename, by contrast,
     * silently REPLACES an existing target, so `Files.move` cannot detect
-    * a second writer). Losing the race refreshes the version counter
-    * from disk, validates the commit against what landed in between
-    * ([[validateLostRace]]), and retries at the next number:
+    * a second writer). Each attempt takes its number from a fresh
+    * listing of the log, one past the highest version or checkpoint it
+    * holds, so a number [[vacuum]] already reclaimed is never reused.
+    * When other writers committed since this writer's last commit, or it
+    * lost the race, the commit is first validated against what landed in
+    * between ([[validateConflicts]]):
     *
     *  - blind appends (add-only) are order-independent → always retry;
     *  - a commit whose `removed` files are no longer live (another
@@ -275,8 +261,12 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     *  - a concurrent DIFFERENT schema recorded for the same table
     *    conflicts (last-wins folding could silently drop a column).
     *
-    * A single writer never pays for any of this: the in-memory counter
-    * stays warm and a commit is one link + one unlink. Every
+    * A single writer pays one listing, one link and one unlink per
+    * commit. A won link is final: a checkpoint another writer writes past
+    * it afterwards has folded it in. One window stays open: were another
+    * writer to commit this number, checkpoint past it and [[vacuum]] it
+    * between this writer's listing and its link, the link would reuse
+    * the reclaimed number. Every
     * `checkpointInterval`-th version also materializes a checkpoint
     * (checkpoints are derived data — two writers racing on the same
     * checkpoint number produce identical content, so the plain rename
@@ -284,11 +274,11 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     *
     * `readVersion` is the OTHER half of the conflict story: a snapshot
     * transaction (compaction, MERGE, DELETE — anything that read the
-    * table, computed a rewrite, and now commits `removed`/`replace`),
+    * table, computed a rewrite, and now commits `removed`),
     * and a [[createTable]], which read that the table did not exist,
     * record the manifest version they READ at. Versions that landed
-    * AFTER that read are conflicts to validate even when this writer's
-    * counter is fresh and the link publish wins first try — a losing
+    * AFTER that read are conflicts to validate even when this writer
+    * has seen them and the link publish wins first try — a losing
     * link race is merely one way to discover intervening commits, not
     * the definition of them (two compactions serialized by a long
     * rewrite job would otherwise BOTH land, duplicating every row).
@@ -296,7 +286,6 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * by construction. */
   private[sinks] def commitVersion(batchId: Option[Long],
       add: Map[String, Seq[String]],
-      replace: Map[String, Seq[String]] = Map.empty,
       removed: Map[String, Seq[String]] = Map.empty,
       schemas: Map[String, String] = Map.empty,
       stats: Map[String, String] = Map.empty,
@@ -304,37 +293,29 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     manifestDir.mkdirs()
     var attempt = 0
     while (attempt < ManifestCatalog.MaxCommitAttempts) {
-      if (nextVersion < 0)
-        nextVersion = versionFiles().lastOption
-          .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong + 1)
-          .orElse(latestCheckpoint().map(_.n + 1))
-          .getOrElse(0L)
-      val next = nextVersion
-      // the transaction's base: everything after it is unseen. Non-
-      // snapshot commits base at next-1 (nothing older concerns them).
-      val base = readVersion.getOrElse(next - 1)
-      // pre-publish validation: versions in (base, next) landed after
-      // this transaction's read — winning the link race does NOT make
-      // them compatible. Re-runs on every retry so each attempt
-      // validates against whatever has landed by then.
-      if (base < next - 1 &&
-          validateConflicts(batchId, replace, removed, schemas, after = base))
+      val log = listLog()
+      val next = log.latest + 1
+      // the transaction's base: versions in (after, next) landed after
+      // its read, and winning the link race does NOT make them
+      // compatible. Re-runs on every retry so each attempt validates
+      // against whatever has landed by then.
+      val after = readVersion.orElse(seen).getOrElse(next - 1)
+      if (after < next - 1 &&
+          validateConflicts(batchId, removed, schemas, after, log))
         return // batch id already committed by another writer
-      val body = render(Version(next, batchId, add, replace, removed, schemas,
-        stats))
+      val body = render(Version(next, batchId, add, removed, schemas, stats))
       val tmp = Files.createTempFile(manifestDir.toPath, ".tmp-v", ".json")
       Files.write(tmp, body.getBytes(UTF_8))
       val won = publish(manifestDir.toPath.resolve(f"v$next%020d.json"), tmp,
         body)
       Files.deleteIfExists(tmp)
       if (won) {
-        nextVersion = next + 1
+        seen = Some(next)
+        afterPublishForTest()
         if ((next + 1) % checkpointInterval == 0) writeCheckpoint(next)
         return
       }
-      nextVersion = -2L // another writer took this number: refresh from disk
-      if (validateConflicts(batchId, replace, removed, schemas, after = base))
-        return // already effectively applied (batch replayed by the winner)
+      seen = Some(next - 1) // the winner's commit is to validate
       attempt += 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -346,6 +327,10 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * a filesystem without hard-link support (FAT, some network/object-
     * store mounts). */
   private[sinks] var hardLinksDisabledForTest = false
+
+  /** Test seam: runs after a won link, before the commit returns, so a
+    * spec can land another writer's commits in that window. */
+  private[sinks] var afterPublishForTest: () => Unit = () => ()
 
   /** Publish `tmp` as `target`, returning false iff the target already
     * exists (a lost version race). Primary path: hard link — atomic
@@ -386,13 +371,12 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * stay orphaned and invisible, reclaimed by [[vacuum]]). Throws
     * `ConcurrentModificationException` on a true write-write conflict. */
   private def validateConflicts(batchId: Option[Long],
-      replace: Map[String, Seq[String]],
       removed: Map[String, Seq[String]],
       schemas: Map[String, String],
-      after: Long): Boolean = {
-    if (batchId.exists(batchCommitted)) return true
+      after: Long, log: Log): Boolean = {
+    if (batchId.exists(committedIn(log, _))) return true
     if (removed.nonEmpty) {
-      val live = snapshot()
+      val live = fold(None, log).files
       removed.foreach { case (t, fs) =>
         val have = live.getOrElse(t, Nil).toSet
         val gone = fs.filterNot(have)
@@ -403,17 +387,13 @@ final class ManifestCatalog(spark: SparkSession, root: String,
               "another writer")
       }
     }
-    val intervening = readDeltas(after)
-    if (replace.nonEmpty && intervening.exists(v =>
-        (v.add.keySet ++ v.replace.keySet ++ v.removed.keySet)
-          .exists(replace.keySet)))
-      throw new java.util.ConcurrentModificationException(
-        "concurrent change to a table this commit replaces outright")
     // identical schemas may race (two writers creating the same table);
     // DIVERGENT ones may not — last-wins would drop one writer's column
-    if (schemas.nonEmpty && intervening.exists(_.schemas.exists {
-        case (t, s) => schemas.get(t).exists(_ != s)
-      }))
+    if (schemas.nonEmpty && log.deltasAfter(after).exists { case (n, f) =>
+        parse(n, read(f)).schemas.exists {
+          case (t, s) => schemas.get(t).exists(_ != s)
+        }
+      })
       throw new java.util.ConcurrentModificationException(
         "concurrent divergent schema change to the same table")
     false
@@ -424,21 +404,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * readers fall back to the delta fold. */
   private def writeCheckpoint(n: Long): Unit =
     try {
-      val prev = latestCheckpoint()
-      val deltas = readDeltas(prev.map(_.n).getOrElse(-1L)).filter(_.n <= n)
-      val snap = foldInto(
-        prev.map(c => Snap(c.tables, c.schemas, c.stats))
-          .getOrElse(Snap(Map.empty, Map.empty)), deltas)
-      val bids = (prev.map(_.batchIds).getOrElse(Nil) ++
-        deltas.flatMap(_.batchId))
-        .takeRight(ManifestCatalog.MaxRetainedBatchIds)
-      // stats are pruned to files still live at the checkpoint, so the
-      // materialized fold never accumulates entries for vacuumed files
-      val liveKeys = snap.files.flatMap { case (t, fs) =>
-        fs.map(f => s"$t/$f")
-      }.toSet
-      val body = renderCheckpoint(Checkpoint(n, snap.files, bids,
-        snap.schemas, snap.stats.filter(e => liveKeys.contains(e._1))))
+      val body = renderCheckpoint(fold(Some(n)))
       val tmp = Files.createTempFile(manifestDir.toPath, ".tmp-c", ".json")
       Files.write(tmp, body.getBytes(UTF_8))
       Files.move(tmp, manifestDir.toPath.resolve(f"c$n%020d.json"),
@@ -492,7 +458,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
 
   // -------------------------------------------------------- TableCatalog
 
-  override def listTables(): Seq[String] = snapshot().keys.toSeq.sorted
+  override def listTables(): Seq[String] = fold().files.keys.toSeq.sorted
 
   override def describe(table: String): Seq[ColumnDef] = {
     val schema: StructType = read(table).schema
@@ -514,8 +480,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       graft.ingest.TypeMapping.toSparkRead(c.chType).getOrElse(
         throw new IllegalArgumentException(
           s"table $table: no Spark type for column ${c.name} ${c.chType}")))))
-    val readV = latestVersion() // see merge: captured before the snapshot
-    val snap = snapshotFull()
+    val snap = fold()
     def columns(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
     recordedSchema(snap, table) match {
       case Some(have) =>
@@ -526,9 +491,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       case None =>
         val added = Map(table -> Seq.empty[String])
         val schemas = Map(table -> encodeSchema(schema))
-        if (!recordPending(added, schemas, Some(readV)))
+        if (!recordPending(added, schemas, Some(snap.version)))
           commitVersion(None, added, schemas = schemas,
-            readVersion = Some(readV))
+            readVersion = Some(snap.version))
     }
   }
 
@@ -537,12 +502,10 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * log records a schema, the read is PINNED to it (no footer scans,
     * no mergeSchema): files written before a column was added surface
     * NULL for it — add-column schema evolution without rewriting data. */
-  def read(table: String): DataFrame = {
-    val snap = snapshotFull()
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
-    readWithSchema(table, files, recordedSchema(snap, table))
-  }
+  def read(table: String): DataFrame = readSnap(fold(), table)
+
+  private def readSnap(snap: Snap, table: String): DataFrame =
+    readWithSchema(table, tableFiles(snap, table), recordedSchema(snap, table))
 
   private def recordedSchema(snap: Snap, table: String): Option[StructType] =
     snap.schemas.get(table).map(decodeSchema)
@@ -571,39 +534,13 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     ManifestFileIndex.read(spark, files.map(f => s"$root/$table/$f"), schema)
 
   /** Highest committed manifest version, or -1 for an empty log. */
-  def latestVersion(): Long =
-    versionFiles().lastOption
-      .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong)
-      .orElse(latestCheckpoint().map(_.n))
-      .getOrElse(-1L)
+  def latestVersion(): Long = listLog().latest
 
-  /** Snapshot pinned at `version` (time travel): fold from the newest
-    * retained checkpoint ≤ version plus the deltas in (ckpt, version].
-    * Versions are consecutive, so a fold that comes up short means
-    * [[vacuum]] reclaimed part of the chain — that fails LOUDLY here
-    * rather than returning a silently incomplete file list. */
+  /** Snapshot pinned at `version` (time travel): see [[fold]], which
+    * fails LOUDLY once [[vacuum]] reclaimed part of the version's
+    * chain. */
   def snapshotAt(version: Long): Map[String, Seq[String]] =
-    snapFullAt(version).files
-
-  private def snapFullAt(version: Long): Snap = {
-    if (version > latestVersion())
-      throw new IllegalArgumentException(s"unknown version: $version")
-    val base = checkpointFiles()
-      .map(f => f.getName.stripPrefix("c").stripSuffix(".json").toLong -> f)
-      .filter(_._1 <= version).lastOption
-      .map { case (n, f) =>
-        parseCheckpoint(n, new String(Files.readAllBytes(f.toPath), UTF_8))
-      }
-    val after = base.map(_.n).getOrElse(-1L)
-    val deltas = readDeltas(after).filter(_.n <= version)
-    if (deltas.size != version - after)
-      throw new IllegalStateException(
-        s"version $version is no longer reachable: expected " +
-          s"${version - after} deltas after checkpoint $after, found " +
-          s"${deltas.size} (reclaimed by vacuum)")
-    foldInto(base.map(c => Snap(c.tables, c.schemas, c.stats))
-      .getOrElse(Snap(Map.empty, Map.empty)), deltas)
-  }
+    fold(Some(version)).files
 
   /** Time-travel read: the table as of manifest `version`, under the
     * schema RECORDED at that version (a later add-column does not leak
@@ -611,12 +548,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * files are retained — [[vacuum]] trims the travel window to what the
     * latest checkpoint + live snapshot still reference (the same
     * contract a Delta VACUUM has). */
-  def readAt(table: String, version: Long): DataFrame = {
-    val snap = snapFullAt(version)
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table at v$version: $table"))
-    readWithSchema(table, files, recordedSchema(snap, table))
-  }
+  def readAt(table: String, version: Long): DataFrame =
+    readSnap(fold(Some(version)), table)
 
   override def append(table: String, df: DataFrame): Unit =
     appendAll(Map(table -> df), batchId = None)
@@ -709,7 +642,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       statsCols: Seq[String], bloomCols: Seq[String] = Nil): Unit = {
     require(statsCols.nonEmpty || bloomCols.nonEmpty,
       "at least one of statsCols/bloomCols must be non-empty")
-    val stored = snapshotFull().schemas
+    val stored = fold().schemas
     val (aligned, recorded) =
       evolveFor(stored.get(table).map(decodeSchema), df)
     val moved = PartWriter.write(aligned, s"$root/$table")
@@ -761,7 +694,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   /** Folded per-file stats for a table (spec/introspection surface). */
   private[sinks] def fileStats(
       table: String): Map[String, Map[String, (String, String)]] = {
-    val snap = snapshotFull()
+    val snap = fold()
     snap.files.getOrElse(table, Nil).flatMap { f =>
       snap.stats.get(s"$table/$f").map(b => f -> decodeColStats(b))
     }.toMap
@@ -807,7 +740,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * @return (kept files, all files) */
   def bloomPrunedFiles(table: String, column: String,
       value: String): (Seq[String], Seq[String]) = {
-    val (kept, files, _) = bloomPruned(snapshotFull(), table, column, value)
+    val (kept, files, _) = bloomPruned(fold(), table, column, value)
     (kept, files)
   }
 
@@ -815,8 +748,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * table reads in. */
   private def bloomPruned(snap: Snap, table: String, column: String,
       value: String): (Seq[String], Seq[String], Option[StructType]) = {
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
+    val files = tableFiles(snap, table)
     // an unknown column keeps all files — the downstream filter raises
     // the analysis error
     val schema = readSchema(snap, table, files)
@@ -847,24 +779,30 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * schema come from one fold of the log. */
   def readPoint(table: String, column: String, value: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (kept, _, schema) = bloomPruned(snapshotFull(), table, column, value)
+    val (kept, _, schema) = bloomPruned(fold(), table, column, value)
     // compare against the bare literal: type coercion promotes the
     // LITERAL to the column type, so the equality still pushes down to
     // the parquet scan (casting the column would block pushdown)
     readWithSchema(table, kept, schema).filter(col(column) === lit(value))
   }
 
-  /** File list after zone-map pruning for `lo <= col <= hi`: a file is
-    * skipped only when its recorded stats PROVE no overlap; files
-    * without stats (streaming appends, fresh compactions) are always
-    * kept — skipping is an optimization, never a correctness input.
+  /** File list after zone-map pruning for `lo <= col <= hi`.
     * @return (kept files, all files) */
   def statsPrunedFiles(table: String, column: String,
       lo: BigDecimal, hi: BigDecimal): (Seq[String], Seq[String]) = {
-    val snap = snapshotFull()
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
-    val kept = files.filter { f =>
+    val snap = fold()
+    val files = tableFiles(snap, table)
+    (overlapping(snap, table, files, column, lo, hi), files)
+  }
+
+  /** `files` of `table` whose recorded `column` range can overlap
+    * [lo, hi]: a file is skipped only when its recorded stats PROVE no
+    * overlap; files without stats (streaming appends, fresh compactions)
+    * are always kept — skipping is an optimization, never a correctness
+    * input. */
+  private def overlapping(snap: Snap, table: String, files: Seq[String],
+      column: String, lo: BigDecimal, hi: BigDecimal): Seq[String] =
+    files.filter { f =>
       snap.stats.get(s"$table/$f")
         .flatMap(b => decodeColStats(b).get(column)) match {
         case Some((mn, mx)) =>
@@ -873,8 +811,6 @@ final class ManifestCatalog(spark: SparkSession, root: String,
         case None => true
       }
     }
-    (kept, files)
-  }
 
   /** Data-skipping range read: prune the file list by recorded stats,
     * then apply the predicate normally (the filter, not the pruning,
@@ -892,20 +828,10 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       preds: Seq[(String, Long, Long)]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(preds.nonEmpty)
-    val snap = snapshotFull()
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
-    val kept = preds.foldLeft(files) {
-      case (files, (c, lo, hi)) => files.filter { f =>
-        snap.stats.get(s"$table/$f")
-          .flatMap(b => decodeColStats(b).get(c)) match {
-          case Some((mn, mx)) =>
-            try BigDecimal(mx) >= BigDecimal(lo) &&
-              BigDecimal(mn) <= BigDecimal(hi)
-            catch { case _: NumberFormatException => true }
-          case None => true
-        }
-      }
+    val snap = fold()
+    val files = tableFiles(snap, table)
+    val kept = preds.foldLeft(files) { case (fs, (c, lo, hi)) =>
+      overlapping(snap, table, fs, c, BigDecimal(lo), BigDecimal(hi))
     }
     val filterExpr = preds.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
@@ -948,7 +874,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * changes (so "rows visible" and "schema evolved" cannot diverge). */
   private def appendAll(tables: Map[String, DataFrame],
       batchId: Option[Long]): Unit = {
-    val stored = snapshotFull().schemas
+    val stored = fold().schemas
     val prepared = tables.map { case (t, df) =>
       val (aligned, recorded) = evolveFor(stored.get(t).map(decodeSchema), df)
       (t, aligned, recorded)
@@ -980,11 +906,14 @@ final class ManifestCatalog(spark: SparkSession, root: String,
 
   /** Runs every batch, so it reads only the batch-id sections: the
     * checkpoint's file lists, schemas and stats grow with the table. */
-  override def batchCommitted(batchId: Long): Boolean = {
-    val ckpt = latestCheckpointText()
-    ckpt.exists(c => checkpointBatchIds(c._2).contains(batchId)) ||
-      deltaTexts(ckpt.map(_._1).getOrElse(-1L))
-        .exists(d => deltaBatchId(d._2).contains(batchId))
+  override def batchCommitted(batchId: Long): Boolean =
+    committedIn(listLog(), batchId)
+
+  private def committedIn(log: Log, batchId: Long): Boolean = {
+    val ckpt = log.checkpoints.lastOption
+    ckpt.exists(c => checkpointBatchIds(read(c._2)).contains(batchId)) ||
+      log.deltasAfter(ckpt.fold(-1L)(_._1))
+        .exists(d => deltaBatchId(read(d._2)).contains(batchId))
   }
 
   /** Publish the open batch (rows staged since [[beginBatch]]) together
@@ -1029,13 +958,10 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     */
   def merge(table: String, source: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    // read version captured BEFORE the snapshot: any version landing
-    // in between is (conservatively) treated as unseen and validated
-    // at commit — see commitVersion's readVersion contract
-    val readV = latestVersion()
-    val snap = snapshotFull()
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
+    // the commit validates every version after the one this snapshot
+    // folded — see commitVersion's readVersion contract
+    val snap = fold()
+    val files = tableFiles(snap, table)
     val schema = readSchema(snap, table, files)
     val live = readWithSchema(table, files, schema)
     val cols = live.schema.fieldNames.toSeq
@@ -1056,7 +982,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
         .unionByName(src)
     val moved = PartWriter.write(rewritten, s"$root/$table")
     commitVersion(None, add = Map(table -> moved),
-      removed = Map(table -> touched), readVersion = Some(readV))
+      removed = Map(table -> touched), readVersion = Some(snap.version))
   }
 
   /** Copy-on-write DELETE: remove rows where `predicate` is TRUE (rows
@@ -1067,10 +993,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   def delete(table: String,
       predicate: org.apache.spark.sql.Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val readV = latestVersion() // see merge: captured before the snapshot
-    val snap = snapshotFull()
-    val files = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
+    val snap = fold() // see merge: the commit validates what came after
+    val files = tableFiles(snap, table)
     val schema = readSchema(snap, table, files)
     val live = readWithSchema(table, files, schema)
     val touched = live.filter(predicate)
@@ -1081,7 +1005,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
         .filter(not(coalesce(predicate, lit(false))))
       val moved = PartWriter.write(keep, s"$root/$table")
       commitVersion(None, add = Map(table -> moved),
-        removed = Map(table -> touched), readVersion = Some(readV))
+        removed = Map(table -> touched), readVersion = Some(snap.version))
     }
   }
 
@@ -1095,8 +1019,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * disagree on, not to table size. */
   def changes(table: String, fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val toSnap = snapFullAt(toV)
-    val fromSnap = snapFullAt(fromV)
+    val log = listLog()
+    val toSnap = fold(Some(toV), log)
+    val fromSnap = fold(Some(fromV), log)
     val before = fromSnap.files.getOrElse(table, Seq.empty[String])
     val after = toSnap.files.getOrElse(table, Seq.empty[String])
     val removedF = before.filterNot(after.toSet)
@@ -1130,10 +1055,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * crash anywhere leaves either the old or the new manifest — never a
     * missing table. */
   def compact(table: String, targetFiles: Int = 1): Unit = {
-    val readV = latestVersion() // see merge: captured before the snapshot
-    val snap = snapshotFull()
-    val consumed = snap.files.getOrElse(table,
-      throw new IllegalArgumentException(s"no such table: $table"))
+    val snap = fold() // see merge: the commit validates what came after
+    val consumed = tableFiles(snap, table)
     val compacted =
       readWithSchema(table, consumed, recordedSchema(snap, table))
       .coalesce(math.max(1, targetFiles))
@@ -1150,7 +1073,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       bloomKeys.map(_.stripPrefix(BloomKeyPrefix)).toSeq.sorted)
     commitVersion(None, add = Map(table -> moved),
       removed = Map(table -> consumed), stats = stats,
-      readVersion = Some(readV))
+      readVersion = Some(snap.version))
   }
 
   /** Remove data files no manifest version can reach (compacted-away, or
@@ -1172,18 +1095,15 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * lists become eligible once older than the window. */
   def vacuum(retentionMs: Long = ManifestCatalog.DefaultVacuumRetentionMs)
       : Int = {
-    val live = snapshot()
+    val log = listLog()
+    val live = fold(None, log).files
     val cutoff = System.currentTimeMillis() - retentionMs
     var removed = 0
     // log reclamation: deltas ≤ checkpoint are folded in; older
     // checkpoints are superseded by the latest
-    latestCheckpoint().foreach { ckpt =>
-      versionFiles()
-        .filter(_.getName.stripPrefix("v").stripSuffix(".json")
-          .toLong <= ckpt.n)
-        .foreach { f => if (f.delete()) removed += 1 }
-      checkpointFiles().dropRight(1)
-        .foreach { f => if (f.delete()) removed += 1 }
+    log.checkpoints.lastOption.foreach { case (ckpt, _) =>
+      (log.deltas.filter(_._1 <= ckpt) ++ log.checkpoints.dropRight(1))
+        .foreach { case (_, f) => if (f.delete()) removed += 1 }
     }
     // scan every table directory on disk, not just committed tables — a
     // crashed first-append leaves orphans under a table no manifest knows
@@ -1200,10 +1120,43 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     removed
   }
 
-  def fileCount(table: String): Int = snapshot().getOrElse(table, Nil).size
+  def fileCount(table: String): Int = fold().files.getOrElse(table, Nil).size
 }
 
 object ManifestCatalog {
+  private final case class Version(n: Long, batchId: Option[Long],
+      add: Map[String, Seq[String]],
+      removed: Map[String, Seq[String]],
+      schemas: Map[String, String],
+      stats: Map[String, String] = Map.empty)
+
+  /** The log folded up to `version`: per-table file lists, the latest
+    * recorded schema (base64 StructType JSON) per table, per-file column
+    * stats (`"table/file"` → base64 stats block) for data skipping, and
+    * the committed batch ids. A checkpoint is this fold written out. */
+  private final case class Snap(version: Long,
+      files: Map[String, Seq[String]],
+      schemas: Map[String, String],
+      stats: Map[String, String],
+      batchIds: Seq[Long])
+
+  private val EmptySnap =
+    Snap(-1L, Map.empty, Map.empty, Map.empty, Vector.empty)
+
+  /** One listing of `_manifest/`: checkpoint and delta files by version
+    * number, ascending. */
+  private final case class Log(checkpoints: Seq[(Long, File)],
+      deltas: Seq[(Long, File)]) {
+    /** Highest version the log holds, or -1 for an empty log. */
+    def latest: Long =
+      (deltas.lastOption ++ checkpoints.lastOption).map(_._1).maxOption
+        .getOrElse(-1L)
+
+    def deltasAfter(n: Long): Seq[(Long, File)] = deltas.filter(_._1 > n)
+  }
+
+  private val LogName = """([cv])(\d+)\.json""".r
+
   /** Committed batch ids a checkpoint carries forward for idempotent
     * replay detection. `foreachBatch` replays at most the last batch, so
     * any value ≥ 2 satisfies the protocol; 1000 leaves three orders of

@@ -52,7 +52,6 @@ final case class RouteStats(
   * (/root/reference/message/message_test.go:177-198).
   */
 final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
-    appendParallelism: Int = 4,
     schemaRejectSink: Option[DataFrame => Unit] = None) {
   import TableRouter.tableNameOk
 
@@ -80,7 +79,7 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
   // and must not churn a fresh thread pool on the hot path
   private lazy val appendPool =
     java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, appendParallelism),
+      TableRouter.AppendThreads,
       (r: Runnable) => {
         val t = new Thread(r, "router-append"); t.setDaemon(true); t
       })
@@ -258,6 +257,9 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
 }
 
 object TableRouter {
+  /** Threads of a router's pool for a batch's side writes. */
+  private val AppendThreads = 4
+
   /** `(tableName, value_type, rows)`, sorted: one batch's routing input. */
   type Histogram = Seq[(String, String, Long)]
 

@@ -126,7 +126,6 @@ final case class MqttOffset(seqs: Seq[Long]) extends Offset {
 }
 
 object MqttOffset {
-  def single(seq: Long): MqttOffset = MqttOffset(Seq(seq))
   def parse(json: String): MqttOffset =
     MqttOffset(json.trim.split(",").toSeq
       .map(_.trim).filter(_.nonEmpty).map(_.toLong))

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-writer optimistic concurrency on the manifest log. Two
   * `ManifestCatalog` instances on the same root stand in for two writer
-  * PROCESSES: each keeps its own in-memory version counter, so their
-  * commits genuinely race on the version file — and the hard-link
+  * PROCESSES: each takes its next version number from its own listing
+  * of the log, so their commits genuinely race on the version file — and the hard-link
   * publish is the only thing preventing a silent clobber (a POSIX
   * rename REPLACES an existing target; `Files.move` cannot detect the
   * collision).
@@ -110,6 +110,28 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     assert(deltas <= 4, s"fold must read <= interval deltas, read $deltas")
   }
 
+  test("a won commit stays won when another writer checkpoints past it") {
+    // w1 wins v1; before its commit returns, w2 commits v2 and v3 and
+    // writes checkpoint c3, which folds w1's v1 in. w1 must not take that
+    // checkpoint for a sign that its number was reclaimed and commit its
+    // files a second time.
+    val root = freshRoot()
+    val w1 = new ManifestCatalog(spark, root, checkpointInterval = 4)
+    val w2 = new ManifestCatalog(spark, root, checkpointInterval = 4)
+    w1.append("t", rows(0, 10)) // v0
+    w1.afterPublishForTest = () => {
+      w1.afterPublishForTest = () => ()
+      w2.append("t", rows(100, 10)) // v2
+      w2.append("t", rows(200, 10)) // v3 and checkpoint c3
+    }
+    w1.append("t", rows(10, 10)) // v1
+    val reader = new ManifestCatalog(spark, root, checkpointInterval = 4)
+    assert(reader.logStats()._1 == Some(3L))
+    assert(reader.read("t").count() == 40)
+    assert(reader.read("t").select("k").distinct().count() == 40)
+    assert(reader.latestVersion() == 3L)
+  }
+
   test("losing a removal race aborts instead of resurrecting files") {
     val root = freshRoot()
     val w1 = new ManifestCatalog(spark, root)
@@ -165,7 +187,7 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     // A commits its own rewrite of the SAME files from a fresh counter:
     // the publish would win v3 outright — the read version is the only
     // thing that can catch the conflict
-    val a = new ManifestCatalog(spark, root) // nextVersion = unread
+    val a = new ManifestCatalog(spark, root) // lists the log afresh
     val e = intercept[java.util.ConcurrentModificationException] {
       a.commitVersion(None,
         add = Map("t" -> Seq("duplicate-rows.parquet")),

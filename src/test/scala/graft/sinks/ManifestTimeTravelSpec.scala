@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,5 +57,53 @@ class ManifestTimeTravelSpec extends AnyFunSuite {
     // below the checkpoint the delta chain is gone — loud failure, not a
     // silently incomplete fold
     intercept[IllegalStateException](cat.snapshotAt(0))
+  }
+
+  test("a delta holding a replace section fails the fold, naming its version") {
+    val root = Files.createTempDirectory("tt").toString
+    val cat = new ManifestCatalog(spark, root)
+    cat.append("t", Seq(("a", 1.0)).toDF("client", "value"))   // v0
+    // the full-list swap no writer emits any more, written by hand
+    Files.write(Paths.get(root, "_manifest", "v00000000000000000001.json"),
+      ("""{"version":1,"batchId":-1,"add":{},""" +
+        """"replace":{"t":["gone.parquet"]},"removed":{},"schemas":{},""" +
+        """"stats":{}}""").getBytes(UTF_8))
+    Seq(intercept[IllegalStateException](cat.read("t")),
+      intercept[IllegalStateException](cat.snapshotAt(1))).foreach(e =>
+      assert(e.getMessage.contains("version 1 "), e.getMessage))
+    assert(cat.snapshotAt(0)("t").size == 1) // the version below still folds
+  }
+
+  test("two writers across two checkpoints and a vacuum: the head travels") {
+    // what an exactly-once check does: snapshotAt(latestVersion()) must
+    // be the live head, whichever writer committed last
+    val root = Files.createTempDirectory("tt").toString
+    val a = new ManifestCatalog(spark, root, checkpointInterval = 3)
+    val b = new ManifestCatalog(spark, root, checkpointInterval = 3)
+    def headIsLive(): Unit = Seq(a, b).foreach { c =>
+      val head = c.snapshotAt(c.latestVersion())
+      assert(head.keys.toSeq.sorted == c.listTables())
+      head.foreach { case (t, fs) => assert(fs.size == c.fileCount(t), t) }
+    }
+    (0 until 8).foreach { i =>
+      val (w, t) = (if (i % 2 == 0) a else b, if (i % 3 == 0) "u" else "t")
+      w.append(t, Seq((s"r$i", i.toDouble)).toDF("client", "value"))
+      headIsLive()
+      if (i == 5) {
+        assert(a.logStats()._1.contains(5L)) // checkpoints at v2 and v5
+        // reclaims v0..v5, so `a`'s counter, last advanced by its v4,
+        // names a version that is gone: its next append must not land
+        // there, below the checkpoint, where no fold reads it
+        assert(a.vacuum(retentionMs = 0L) > 0)
+        headIsLive()
+      }
+    }
+    b.compact("t") // v8, the third checkpoint
+    headIsLive()
+    assert(a.latestVersion() == 8L && a.logStats() == (Some(8L), 0))
+    assert(a.read("t").count() == 5 && b.read("u").count() == 3)
+    // below the retained checkpoint the chain is gone
+    intercept[IllegalStateException](a.snapshotAt(0))
+    intercept[IllegalStateException](b.snapshotAt(4))
   }
 }

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Cross-stage composition soak (r10 VERDICT #6): ALL FIVE standing
   * folds — near-dup probe, heavy hitters, KMV distinct, hashed drift,
   * near-dup cluster maintenance — wired onto ONE MQTT document topic
-  * the way `MqttDemo`/`StreamBench` wire ingest, each stage an
+  * the way `MqttDemo` and `perfbench/run.py --workload ingest_backlog`
+  * wire ingest, each stage an
   * independent subscriber with its own clientId and checkpoint dir
   * (the production shape: one broker fan-out, per-stage offsets and
   * durable summaries). The run is killed mid-stream, traffic continues
