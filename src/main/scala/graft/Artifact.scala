@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{FileSystemException, Files, Path, Paths,
+  StandardCopyOption}
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -65,8 +68,8 @@ object Artifact {
     def warm(s: SparkSession, d: String): Unit
   }
 
-  /** A step with no memo: an on-disk builder that keeps its own
-    * idempotence (marker files), or a plain warm pass. */
+  /** A step with no memo: an on-disk builder (its idempotence is
+    * [[publish]]'s), or a plain warm pass. */
   def step(stepName: String)(run: (SparkSession, String) => Any): Step =
     new Step {
       val name = stepName
@@ -91,4 +94,55 @@ object Artifact {
       uses: Seq[Artifact[_]] = Nil)(
       build: (SparkSession, String) => DataFrame): Artifact[DataFrame] =
     apply(name, eager, uses)(build)(Seq(_))
+
+  // ------------------------------------------------------------ on disk
+
+  /** The directory of corpus `corpus`'s on-disk artifact `suffix`, under
+    * [[Tuning.artifactRoot]]. The suffix names the artifact and every
+    * build constant, so a changed constant never reuses a stale build. */
+  def dir(corpus: String, suffix: String): String = {
+    val key = corpus.replaceAll("[^A-Za-z0-9._-]", "_")
+    s"${Tuning.artifactRoot}/$key-$suffix"
+  }
+
+  /** The completion marker, written last into a build's directory. Its
+    * `_` prefix keeps Spark's readers from taking it for data. */
+  private val Marker = "_READY"
+
+  /** Build the local directory `target` once; returns `target`.
+    *
+    * `build` writes into a fresh hidden staging directory next to the
+    * target, the marker goes in last, and the staging directory is
+    * renamed onto the target (`rename(2)` succeeds onto an absent or
+    * empty directory and fails onto a non-empty one). So a target holds
+    * either nothing or a whole build with its marker: a build that
+    * throws or is killed leaves only its staging directory, which no
+    * call reads. A concurrent builder that loses the rename drops its
+    * own build and serves the winner's. A non-empty target without the
+    * marker (not built here) fails loudly, naming it; it is never
+    * deleted. */
+  def publish(target: String)(build: String => Unit): String = {
+    val t = Paths.get(target).toAbsolutePath
+    if (!published(t)) {
+      Files.createDirectories(t.getParent)
+      val stage = Files.createDirectory(t.resolveSibling(
+        s".${t.getFileName}.stage-${UUID.randomUUID}"))
+      try {
+        build(stage.toString)
+        Files.write(stage.resolve(Marker), Array.emptyByteArray)
+        try Files.move(stage, t, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: FileSystemException if published(t) => () }
+      } finally Tuning.deleteRecursively(stage.toFile)
+    }
+    target
+  }
+
+  private def published(t: Path): Boolean =
+    Files.isRegularFile(t.resolve(Marker)) || {
+      val kids = Option(t.toFile.list()).getOrElse(Array.empty[String])
+      if (kids.nonEmpty) throw new IllegalStateException(
+        s"artifact directory $t is not empty but has no $Marker: an " +
+          "interrupted or foreign build; remove it to rebuild")
+      false
+    }
 }

@@ -14,8 +14,8 @@ object Bench {
     * definition shared with every driver that warms them (the benchmark
     * harness too), so no driver can silently drift from the bench's
     * actual warmup set when a round adds an artifact. In-memory
-    * artifacts are listed as themselves; on-disk builders (which keep
-    * their own marker-file idempotence) as named steps. */
+    * artifacts are listed as themselves; on-disk builders (built once
+    * by [[Artifact.publish]]) as named steps. */
   private[graft] val warmup: Seq[Artifact.Step] = {
     import graft.queries._
     Seq(
@@ -182,7 +182,7 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           true
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             failed += name
             System.err.println(
               s"BENCH FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
@@ -342,7 +342,7 @@ object Bench {
         // defense in depth: a throwing override/prelude builder must
         // degrade to verbatim timing, never skip the whole pair
         val overrides = (try SparkEntry.oracleBenchOverride
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"overrides disabled: $e")
             Map.empty[String, String] })
           .filter { case (n, _) => oracled.contains(n) }
@@ -350,7 +350,7 @@ object Bench {
         java.nio.file.Files.write(tmp,
           (s"""{"queries":${sqlMap(oracled)},"overrides":${sqlMap(overrides)},""" +
             s""""prelude":${(try SparkEntry.oracleBenchPrelude
-              catch { case e: Throwable =>
+              catch { case NonFatal(e) =>
                 System.err.println(s"prelude disabled: $e")
                 Seq.empty[String] })
               .map("\"" + jsonEsc(_) + "\"").mkString("[", ",", "]")}}""")
@@ -443,7 +443,7 @@ object Bench {
             r3(oracleS)},"ratio":$ratio,"adj_ratio":$adjRatio,"steal_pct_engine":$stealPct,"steal_pct_oracle":$oSteal$oFailedJson}"""
         Some((short, full))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"oracle pair skipped: $e")
           lastPairError = s"${e.getClass.getName}: ${e.getMessage}"
           None
@@ -519,7 +519,7 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outPath.stripSuffix(".json") + "_profile.json"),
         (profJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable => System.err.println(s"bench out write failed: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"bench out write failed: $e") }
     println(streamLine)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated parquet fixture tables
@@ -74,7 +75,7 @@ object Tables {
     * ~0.6 s single-task decode per lineitem scan at sf0.1; the copy
     * reads in ~32 parallel ~30 ms tasks and scatter no-ops). This
     * rewrites such a table ONCE per process into a
-    * defaultParallelism-way copy under [[Tuning.artifactRoot]] —
+    * defaultParallelism-way copy in an [[Artifact.dir]] —
     * content row-identical, keyed by (size, mtime, parallelism) for
     * in-process idempotence; the root is per-process, so every driver
     * invocation pays the rebuild itself (timed in Bench's warmup) and
@@ -95,86 +96,68 @@ object Tables {
     // flight, same copies). Attribution stays intact: the whole step is
     // one timed warmup entry. 4 in flight is plenty — enough to overlap
     // decode tails, not so many the write stages fight for cores.
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // Each body catches its OWN failure (Throwable, not just NonFatal:
-    // a fatal error escaping a Future body never completes the promise
-    // and the Await below would hang forever) and the function awaits
-    // EVERY future before returning — a rewrite must never outlive this
-    // call, or a late splitLayout.put/invalidate would flip a table's
-    // scan source between bench passes. One table failing leaves the
-    // others built (its queries just keep the scatter fallback);
-    // FATAL errors (OOM, LinkageError) ride the future as a value and
-    // are rethrown after the await — the JVM is broken, continuing to
-    // bench in it would measure garbage (r15 ADVICE).
-    val done = All.map { t => Future[Throwable] { try {
-      val src = s"$sfDir/$t.parquet"
-      val f = new java.io.File(src)
-      // only flat single files big enough for decode wall time to
-      // matter; directory-shaped inputs are already multi-split
-      if (f.isFile && f.length() >= (1L << 20) &&
-          !splitLayout.containsKey(src)) {
-        val target = spark.sparkContext.defaultParallelism
-        // the honest parallelism signal is the ROW-GROUP count (byte-
-        // range splits over a single row group all no-op except one —
-        // the scan stays single-threaded however many splits the
-        // planner cuts)
-        val nGroups = {
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(src),
-              spark.sessionState.newHadoopConf()))
-          try in.getRowGroups.size finally in.close()
-        }
-        if (nGroups * 2 < target) {
-          // nanosAsLong only matters when a rewrite actually READS a
-          // nanos-typed source (events); setting it session-wide for
-          // callers whose tables all take the no-op branch was an
-          // unasked-for read-semantics change (r15 ADVICE)
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          val df = spark.read.parquet(src)
-          val dest = new java.io.File(new java.io.File(
-            graft.Tuning.artifactRoot, "split-layout"),
-            // target rides the key: a 4-thread test session must not
-            // publish a 4-way copy that a later 32-thread bench session
-            // silently reuses (scatter's self-disabling check sees
-            // byte-range splits, not row groups, so it would no-op)
-            s"$t-${f.length()}-${f.lastModified()}-p$target")
-          if (!new java.io.File(dest, "_SUCCESS").isFile) {
-            // Write to a process-unique staging dir and RENAME into
-            // place: with a shared SPARK_GRAFT_INDEX_DIR two concurrent
-            // drivers could both pass the check above and overwrite the
-            // same dest mid-read (r15 ADVICE). rename(2) is atomic on a
-            // local filesystem; a loser whose rename finds dest already
-            // published just serves the winner's identical copy.
-            val stage = new java.io.File(dest.getParentFile,
-              s".${dest.getName}.stage-${java.lang.ProcessHandle.current().pid()}")
-            df.repartition(target).write.mode("overwrite")
-              .parquet(stage.toString)
-            if (!stage.renameTo(dest) &&
-                !new java.io.File(dest, "_SUCCESS").isFile)
-              throw new java.io.IOException(
-                s"split-layout publish failed: $stage -> $dest")
-            deleteQuietly(stage)
-          }
-          splitLayout.put(src, dest.toString)
-          invalidate(spark, src)
-        }
-      }
-      null
-    } catch {
-      case e: VirtualMachineError => e // rethrown below, after the await
-      case e: Throwable =>
+    // `invokeAll` returns only when EVERY rewrite has ended — a rewrite
+    // must never outlive this call, or a late splitLayout.put/invalidate
+    // would flip a table's scan source between bench passes. A task
+    // catches its own non-fatal failure: that table keeps the scatter
+    // fallback and the others stay built. A FATAL error (OOM,
+    // LinkageError) is kept by its task's future and rethrown here — the
+    // JVM is broken, continuing to bench in it would measure garbage.
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    val tasks = All.map[Callable[Unit]](t => () =>
+      try splitCopy(spark, sfDir, t) catch { case NonFatal(e) =>
         splitSkipped.add(t)
         System.err.println(s"split-layout $t skipped: $e")
-        null
-    }}}
-    try {
-      val fatal = done.map(Await.result(_, Duration.Inf)).find(_ != null)
-      fatal.foreach(throw _)
+      })
+    val pool = Executors.newFixedThreadPool(4)
+    try pool.invokeAll(tasks.asJava).asScala.foreach { f =>
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
     } finally pool.shutdown()
+  }
+
+  /** Publish table `t`'s split copy and serve its scans from it, if `t`
+    * is a flat single file big enough for decode wall time to matter
+    * (directory-shaped inputs are already multi-split) with too few row
+    * groups. */
+  private def splitCopy(spark: SparkSession, sfDir: String,
+      t: String): Unit = {
+    val src = s"$sfDir/$t.parquet"
+    val f = new java.io.File(src)
+    if (f.isFile && f.length() >= (1L << 20) &&
+        !splitLayout.containsKey(src)) {
+      val target = spark.sparkContext.defaultParallelism
+      // the honest parallelism signal is the ROW-GROUP count (byte-
+      // range splits over a single row group all no-op except one —
+      // the scan stays single-threaded however many splits the
+      // planner cuts)
+      val nGroups = {
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(src),
+            spark.sessionState.newHadoopConf()))
+        try in.getRowGroups.size finally in.close()
+      }
+      if (nGroups * 2 < target) {
+        // nanosAsLong only matters when a rewrite actually READS a
+        // nanos-typed source (events); setting it session-wide for
+        // callers whose tables all take the no-op branch was an
+        // unasked-for read-semantics change (r15 ADVICE)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        // target rides the key: a 4-thread test session must not
+        // publish a 4-way copy that a later 32-thread bench session
+        // silently reuses (scatter's self-disabling check sees
+        // byte-range splits, not row groups, so it would no-op). With
+        // a shared SPARK_GRAFT_INDEX_DIR two concurrent drivers each
+        // stage their own copy; one publishes and both serve it.
+        val dest = Artifact.publish(Artifact.dir(sfDir,
+          s"split-$t-${f.length()}-${f.lastModified()}-p$target")) {
+          stage => spark.read.parquet(src).repartition(target).write
+            .mode("overwrite").parquet(stage)
+        }
+        splitLayout.put(src, dest)
+        invalidate(spark, src)
+      }
+    }
   }
 
   /** Tables whose split-layout rewrite was skipped by a non-fatal error
@@ -184,16 +167,7 @@ object Tables {
   private[graft] val splitSkipped =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   def splitLayoutSkipped: Seq[String] = {
-    import scala.collection.JavaConverters._
     splitSkipped.asScala.toSeq.sorted
-  }
-
-  private def deleteQuietly(f: java.io.File): Unit = {
-    try {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(deleteQuietly)
-      f.delete(); ()
-    } catch { case NonFatal(_) => () }
   }
 
   /** Drop every memoized scan for `spark` — the application-end

@@ -38,7 +38,7 @@ object Tuning {
       dir.toString
     })
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRecursively)
     f.delete()

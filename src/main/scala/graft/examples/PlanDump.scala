@@ -1,6 +1,7 @@
 package graft.examples
 
 import org.apache.spark.sql.execution.ExplainMode
+import scala.util.control.NonFatal
 
 /** Dump `.explain("formatted")` for declared queries to files — the
   * plans/rNN before/after evidence the optimization rounds commit.
@@ -37,7 +38,7 @@ object PlanDump {
     // need no pre-warm here: queries build-or-load them on demand and
     // the resulting plan is identical either way.
     try graft.Tables.ensureSplitLayout(spark, sfDir)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[plandump] split layout failed: $e")
     }
     var failed = 0
@@ -54,7 +55,7 @@ object PlanDump {
           txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[plandump] $name ok")
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           failed += 1
           System.err.println(s"[plandump] $name FAILED: $e")
       }

@@ -3,6 +3,7 @@ package graft.examples
 import graft.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Scale-linearity probe: runs the two core workloads (decimal aggregation
   * à la q01, MinHash-LSH candidate generation à la q31) at 1× and 10× the
@@ -1288,7 +1289,7 @@ object ScaleStress {
     // not fail the run (or skip release/stop) after all probes completed
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"scale out write failed ($out): $e — JSON is on stdout")
     }
     graft.GraftSession.release(spark)

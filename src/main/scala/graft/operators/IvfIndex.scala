@@ -101,24 +101,19 @@ object IvfIndex {
     })
   }
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/corpus/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Build-or-load: the offline-job entry point. Builds + persists on
-    * first call for a given `dir`, loads thereafter — callers' query
-    * paths never retrain. */
+    * first call for a given `dir` ([[graft.Artifact.publish]]: a build
+    * cut off between its two writes is never served), loads thereafter
+    * — callers' query paths never retrain. */
   def ensure(embeddings: DataFrame, nCells: Int, dir: String,
       seed: Long = 42L): (DataFrame, DataFrame) = {
-    val spark = embeddings.sparkSession
-    if (!exists(spark, dir)) {
+    graft.Artifact.publish(dir) { stage =>
       val (assigned, centroids) = build(embeddings, nCells, seed)
-      persist(assigned, centroids, dir)
+      persist(assigned, centroids, stage)
     }
     // serve the memoized view: a fresh load() fires two schema-read
     // jobs per call — pure floor when callers ensure() per query
-    loadLocal(spark, dir)
+    loadLocal(embeddings.sparkSession, dir)
   }
 
   /** Top-k cosine neighbors for each probe, scanning only nProbe cells.

@@ -133,27 +133,22 @@ object PqIndex {
     })
   }
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/codes/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Build-or-load: the offline-job entry point ([[IvfIndex.ensure]]
     * shape). Trains codebooks + encodes + persists on first call for a
-    * given `dir`, loads thereafter — callers' query paths never retrain.
+    * given `dir` (published whole, [[graft.Artifact.publish]]), loads
+    * thereafter — callers' query paths never retrain.
     * Training is bit-reproducible, so a loaded index is identical to a
     * fresh one. */
   def ensure(embeddings: DataFrame, nCells: Int, m: Int, subDim: Int,
       kSub: Int, iters: Int, dir: String): (DataFrame, Codebooks) = {
-    val spark = embeddings.sparkSession
-    if (!exists(spark, dir)) {
+    graft.Artifact.publish(dir) { stage =>
       val cb = train(embeddings, nCells, m, subDim, kSub, iters)
-      persist(cb, encode(embeddings, cb), dir)
+      persist(cb, encode(embeddings, cb), stage)
     }
     // serve the memoized view: a fresh load() constructs 1+1+M
     // spark.read.parquet frames, each firing a schema-read job — pure
     // per-call floor when callers ensure() before every probe query
-    loadLocal(spark, dir, m, subDim, nCells)
+    loadLocal(embeddings.sparkSession, dir, m, subDim, nCells)
   }
 
   /** Probe a PREBUILT (persisted, cell-partitioned) index. The union of

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Artifact, Tables}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Deduplication operators over `documents` (north-star surface, SURVEY.md
   * §2.2): exact, MinHash+LSH near-dup candidates, exact n-gram Jaccard on
@@ -2436,7 +2437,7 @@ object Dedup {
     // FAIL SOFT on marker drift (the Training.oraclePrelude rule): the
     // pair then times the verbatim oracles; a throw here would cost
     // the round its whole denominator
-    case e: Throwable =>
+    case NonFatal(e) =>
       System.err.println(s"Dedup.oracleOverride disabled: $e")
       Map.empty
   }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.functions._
 
 /** Data-layout operators — the table-maintenance side of the engine
@@ -75,17 +75,17 @@ object Layout {
   // SQL (q85 salted-join precedent — layout must never change answers).
   private val Buckets = 8
 
-  /** Deterministic per-sf bucketed-layout location + table names. */
-  def bucketedNames(sfDir: String): (String, String, String) = {
-    val base = graft.Tuning.artifactRoot
+  /** Per-sf bucketed table names, identifier-safe. */
+  def bucketedNames(sfDir: String): (String, String) = {
     val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    (s"$base/$key-bkt", s"orders_bkt$key", s"customer_bkt$key")
+    (s"orders_bkt$key", s"customer_bkt$key")
   }
 
   /** Offline layout build (idempotent; Bench setup calls this). */
   def ensureBucketed(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = {
-    val (dir, ordersT, custT) = bucketedNames(d)
+    val dir = Artifact.dir(d, "bkt")
+    val (ordersT, custT) = bucketedNames(d)
     graft.operators.BucketedLayout.ensure(s, ordersT, s"$dir/orders",
       "custkey", Buckets) {
       Tables.raw(s, d, "orders").select(
@@ -128,13 +128,6 @@ object Layout {
   // asserts the pruning subquery landed in PartitionFilters. The
   // oracle is the PLAIN join on the unpartitioned table — layout must
   // never change answers (q101/q85 precedent).
-  /** Deterministic per-sf DPP layout location (fact + dim dirs). */
-  def dppNames(sfDir: String): (String, String) = {
-    val base = graft.Tuning.artifactRoot
-    val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    (s"$base/$key-dpp/orders", s"$base/$key-dpp/prio")
-  }
-
   private val DppDim = Seq(
     ("1-URGENT", "rush"), ("2-HIGH", "rush"), ("3-MEDIUM", "normal"),
     ("4-NOT SPECIFIED", "normal"), ("5-LOW", "normal"))
@@ -142,25 +135,21 @@ object Layout {
   /** Offline layout build (idempotent; Bench setup calls this): orders
     * partitioned by priority + a file-based priority dimension (a file
     * scan on the dim side is what the DPP rule reuses as the pruning
-    * subquery). */
+    * subquery). Returns the (fact, dim) directories. */
   def ensureDpp(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = {
-    val (factDir, dimDir) = dppNames(d)
-    val marker = new java.io.File(
-      new java.io.File(factDir).getParentFile, "_READY")
-    if (!marker.exists()) {
+    val dir = Artifact.publish(Artifact.dir(d, "dpp")) { stage =>
       Tables.raw(s, d, "orders").select(
         col("o_orderkey").as("k"),
         (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
           .as("pc"),
         col("o_orderpriority").as("prio"))
-        .write.mode("overwrite").partitionBy("prio").parquet(factDir)
+        .write.mode("overwrite").partitionBy("prio").parquet(s"$stage/orders")
       import s.implicits._
       DppDim.toDF("prio", "cls").repartition(1)
-        .write.mode("overwrite").parquet(dimDir)
-      java.nio.file.Files.write(marker.toPath, "ok".getBytes("UTF-8"))
+        .write.mode("overwrite").parquet(s"$stage/prio")
     }
-    (factDir, dimDir)
+    (s"$dir/orders", s"$dir/prio")
   }
 
   private val q127 = QueryDef.of(

@@ -200,20 +200,15 @@ object Similarity {
   // pruned scan shape; the driver's rows-only check applies here.
   private val IvfCells = 16
 
-  /** Deterministic per-sf index location (offline-build artifact). */
-  def ivfIndexDir(sfDir: String): String = {
-    val base = graft.Tuning.artifactRoot
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$base/$key-c$IvfCells"
-  }
-
-  /** Offline index build entry point (idempotent). Bench/pipelines call
-    * this in their setup phase so query time is probe cost only. */
+  /** Offline index build entry point (idempotent); returns the index
+    * directory. Bench/pipelines call this in their setup phase so query
+    * time is probe cost only. */
   def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val corpus = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-    graft.operators.IvfIndex.ensure(corpus, IvfCells, ivfIndexDir(d))
-    ivfIndexDir(d)
+    val dir = Artifact.dir(d, s"c$IvfCells")
+    graft.operators.IvfIndex.ensure(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      IvfCells, dir)
+    dir
   }
 
   // The trained (Spark-ML) k-means itself is not SQL-replayable — its
@@ -545,15 +540,6 @@ object Similarity {
     (parts.result().mkString(",\n"), cents)
   }
 
-  /** Deterministic-trainer index location (offline artifact; same
-    * naming contract as [[pqIndexDir]] — constants in the name so a
-    * constant change can never reuse a stale index). */
-  def detIndexDir(sfDir: String): String = {
-    val base = graft.Tuning.artifactRoot
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$base/$key-det$KCells-i$KIters"
-  }
-
   /** Offline build of the deterministic-k-means assignment index:
     * trains once per sf dir and persists (vec_id, cell)
     * `partitionBy(cell)` — the same IVF layout `IvfIndex.persist`
@@ -561,17 +547,12 @@ object Similarity {
     * and cell-pruned probes. Because the trainer is bit-reproducible,
     * the prebuilt read is bit-identical to an in-query train (the
     * DuckDB oracle keeps replaying the training chain either way). */
-  def ensureDetIndex(s: SparkSession, d: String): String = {
-    val dir = detIndexDir(d)
-    val marker = new java.io.File(dir, "_READY")
-    if (!marker.exists()) {
-      graft.operators.IvfIndex.trainDeterministic(
+  def ensureDetIndex(s: SparkSession, d: String): String =
+    Artifact.publish(Artifact.dir(d, s"det$KCells-i$KIters")) {
+      stage => graft.operators.IvfIndex.trainDeterministic(
         Tables.embeddings(s, d), KCells, KIters)
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      java.nio.file.Files.write(marker.toPath, "ok".getBytes("UTF-8"))
+        .write.mode("overwrite").partitionBy("cell").parquet(stage)
     }
-    dir
-  }
 
   private val q42bTrain = sqlKmTrain("", "qz", 64, KCells, KIters)
   private val q42b = QueryDef.of(
@@ -888,15 +869,6 @@ object Similarity {
   private val PqNProbe = 2
   private val PqK = 5
 
-  /** Deterministic per-sf PQ index location (offline-build artifact).
-    * The name encodes every training constant so a constant change can
-    * never silently reuse a stale index. */
-  def pqIndexDir(sfDir: String): String = {
-    val base = graft.Tuning.artifactRoot
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$base/$key-pq$KCells-m$PqM-sd$PqSubDim-k$PqKSub-i$KIters"
-  }
-
   /** Offline PQ index build entry point (idempotent; the
     * [[ensureIvfIndex]] lifecycle). Bench/pipelines call this in their
     * setup phase so q44's query time is probe cost only — training the
@@ -904,10 +876,11 @@ object Similarity {
     * anti-pattern. Training is bit-reproducible, so the prebuilt index
     * equals an in-query build exactly. */
   def ensurePqIndex(s: SparkSession, d: String): String = {
+    val dir = Artifact.dir(d, s"pq$KCells-m$PqM-sd$PqSubDim-k$PqKSub-i$KIters")
     graft.operators.PqIndex.ensure(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      KCells, PqM, PqSubDim, PqKSub, KIters, pqIndexDir(d))
-    pqIndexDir(d)
+      KCells, PqM, PqSubDim, PqKSub, KIters, dir)
+    dir
   }
 
   private val q44 = {

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Artifact, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Distributed model TRAINING — the piece of a training-data pipeline
   * that sits after curation: fit a small quality/domain probe on the
@@ -696,7 +697,7 @@ object Training {
          |${sqlIter(3, "w2")}
          |SELECT * FROM w3""".stripMargin)
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       System.err.println(s"Training.oraclePrelude disabled: $e")
       Seq.empty
   }
@@ -715,7 +716,7 @@ object Training {
       "q190_calibration_bins" -> evalOverride(q190),
       "q194_threshold_selection" -> evalOverride(q194))
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       System.err.println(s"Training.oracleOverride disabled: $e")
       Map.empty
   }

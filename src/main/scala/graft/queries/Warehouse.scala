@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.io.File
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -57,35 +55,29 @@ object Warehouse {
        |  SELECT k + 1000000000 AS k, ck, 'N' AS st, pc + 1 AS pc
        |  FROM ($baseSql) WHERE k % 100 = 7""".stripMargin
 
-  /** Deterministic per-sf warehouse location (offline-build artifact). */
-  def cowDir(sfDir: String): String = {
-    val base = graft.Tuning.artifactRoot
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$base/$key-cow"
-  }
+  /** The catalog of the offline-built table `suffix` of corpus `d`:
+    * `build` fills a catalog over the staging directory, and a fresh
+    * catalog opens the published one ([[Artifact.publish]]), so a
+    * build cut off after a commit is never served or appended again. */
+  private def builtCatalog(s: SparkSession, d: String, suffix: String)(
+      build: ManifestCatalog => Unit): ManifestCatalog =
+    new ManifestCatalog(s, Artifact.publish(Artifact.dir(d, suffix)) {
+      stage => build(new ManifestCatalog(s, stage))
+    })
 
   /** Build-or-load: write the base table (4 part files so copy-on-write
-    * minimality is actually exercised), merge the source, and record the
-    * (pre, post) manifest versions. Idempotent per sf dir — Bench calls
-    * this in setup, so query time is read cost only.
+    * minimality is actually exercised) and merge the source. Idempotent
+    * per sf dir — Bench calls this in setup, so query time is read cost
+    * only. The merge commits exactly one version, the table's last, so
+    * the pre-merge version is the one before it.
     * @return (catalog, preMergeVersion, postMergeVersion) */
   def ensureMerged(s: SparkSession, d: String): (ManifestCatalog, Long, Long) = {
-    val dir = cowDir(d)
-    val marker = new File(dir, "_VERSIONS")
-    val cat = new ManifestCatalog(s, dir)
-    if (marker.exists()) {
-      val Array(pre, post) = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath)).trim.split(" ")
-      (cat, pre.toLong, post.toLong)
-    } else {
-      cat.append("orders_cow", baseFrame(s, d).repartition(4))
-      val pre = cat.latestVersion()
-      cat.merge("orders_cow", sourceFrame(s, d), Seq("k"))
-      val post = cat.latestVersion()
-      java.nio.file.Files.write(marker.toPath,
-        s"$pre $post".getBytes("UTF-8"))
-      (cat, pre, post)
+    val cat = builtCatalog(s, d, "cow") { c =>
+      c.append("orders_cow", baseFrame(s, d).repartition(4))
+      c.merge("orders_cow", sourceFrame(s, d), Seq("k"))
     }
+    val post = cat.latestVersion()
+    (cat, post - 1, post)
   }
 
   // ------------------------------------------------------------- q98
@@ -161,18 +153,10 @@ object Warehouse {
     * `pc` into 8 files with per-file min/max recorded in the manifest
     * ([[ManifestCatalog.appendWithStats]]) — the write-side half of data
     * skipping. Idempotent per sf dir; Bench runs it as setup. */
-  def ensureStatsTable(s: SparkSession, d: String): ManifestCatalog = {
-    val dir = cowDir(d) + "-zs"
-    val marker = new File(dir, "_READY")
-    val cat = new ManifestCatalog(s, dir)
-    if (!marker.exists()) {
-      cat.appendWithStats("orders_zoned",
-        baseFrame(s, d).repartitionByRange(8, col("pc"), col("k")),
-        Seq("pc"))
-      java.nio.file.Files.write(marker.toPath, "ok".getBytes("UTF-8"))
-    }
-    cat
-  }
+  def ensureStatsTable(s: SparkSession, d: String): ManifestCatalog =
+    builtCatalog(s, d, "cow-zs")(_.appendWithStats("orders_zoned",
+      baseFrame(s, d).repartitionByRange(8, col("pc"), col("k")),
+      Seq("pc")))
 
   // ------------------------------------------------------------- q114
   // Data-skipping range read: the price slice scans ONLY the files whose
@@ -202,19 +186,13 @@ object Warehouse {
     * zone maps tight, [[ManifestCatalog.appendWithStats]] publishes
     * them. (pc is quantized to dollars only for the 21-bit z-interleave
     * key; the recorded stats are exact cents.) */
-  def ensureZorderTable(s: SparkSession, d: String): ManifestCatalog = {
-    val dir = cowDir(d) + "-zo"
-    val marker = new File(dir, "_READY")
-    val cat = new ManifestCatalog(s, dir)
-    if (!marker.exists()) {
+  def ensureZorderTable(s: SparkSession, d: String): ManifestCatalog =
+    builtCatalog(s, d, "cow-zo") { cat =>
       val clustered = graft.operators.ZOrderLayout.layout(
         baseFrame(s, d).withColumn("pcd", expr("pc div 100")),
         "ck", "pcd", nFiles = 16).drop("pcd")
       cat.appendWithStats("orders_zo", clustered, Seq("ck", "pc"))
-      java.nio.file.Files.write(marker.toPath, "ok".getBytes("UTF-8"))
     }
-    cat
-  }
 
   // ------------------------------------------------------------- q115
   // Z-order + data skipping, the full loop: a BOX query (range on BOTH
@@ -245,18 +223,10 @@ object Warehouse {
     * worst case for min/max ranges (every file's [min,max] spans the
     * whole key domain) and exactly where blooms earn their 2 KB.
     * Idempotent per sf dir; Bench runs it as setup. */
-  def ensureBloomTable(s: SparkSession, d: String): ManifestCatalog = {
-    val dir = cowDir(d) + "-bl"
-    val marker = new File(dir, "_READY")
-    val cat = new ManifestCatalog(s, dir)
-    if (!marker.exists()) {
-      cat.appendWithStats("orders_hashed",
-        baseFrame(s, d).repartition(8, col("k")),
-        statsCols = Seq("pc"), bloomCols = Seq("k"))
-      java.nio.file.Files.write(marker.toPath, "ok".getBytes("UTF-8"))
-    }
-    cat
-  }
+  def ensureBloomTable(s: SparkSession, d: String): ManifestCatalog =
+    builtCatalog(s, d, "cow-bl")(_.appendWithStats("orders_hashed",
+      baseFrame(s, d).repartition(8, col("k")),
+      statsCols = Seq("pc"), bloomCols = Seq("k")))
 
   // ------------------------------------------------------------- q124
   // Bloom point-lookup read: 5 key probes against the hash-scattered

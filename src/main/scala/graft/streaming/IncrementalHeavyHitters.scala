@@ -63,9 +63,10 @@ object IncrementalHeavyHitters {
   private def stateFile(checkpointDir: String): Path =
     Paths.get(checkpointDir, "graft-hh-state", "summary")
 
-  /** Atomic persist: write to a temp sibling, fsync, ATOMIC_MOVE over
-    * the live file. A crash at any point leaves either the old snapshot
-    * or the new one — never a torn read. O(K) bytes. */
+  /** Atomic persist: write to a temp sibling, then ATOMIC_MOVE it over
+    * the live file. A process crash at any point leaves either the old
+    * snapshot or the new one — never a torn read. Nothing is fsynced, so
+    * a power loss is not covered. O(K) bytes. */
   private[streaming] def persist(file: Path, s: Summary): Unit = {
     Files.createDirectories(file.getParent)
     val tmp = file.resolveSibling(s"summary.tmp")

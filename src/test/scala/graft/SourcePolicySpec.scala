@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** Session policy, job accounting, artifact release and the sinks' file
-  * writes each live in one module: no other source file builds a session,
-  * implements the accounting callbacks or releases a query module's memo
-  * by hand, no sink writes a DataFrame, and no sink reads parquet but
-  * through the manifest's file index. The patterns are split so
+/** Session policy, job accounting, artifact release, on-disk artifact
+  * publishing and the sinks' file writes each live in one module: no
+  * other source file builds a session, implements the accounting
+  * callbacks, releases a query module's memo by hand or keeps a
+  * completion marker, no sink writes a DataFrame, and no sink reads
+  * parquet but through the manifest's file index. The patterns are split so
   * this file does not match them itself. */
 class SourcePolicySpec extends AnyFunSuite {
   private val root: Path =
@@ -57,7 +58,24 @@ class SourcePolicySpec extends AnyFunSuite {
   }
 
   test("only the image decoder catches fatal errors") {
-    assert(filesMatching(("case _: " + "Throwable").r, Seq("src/main")) ==
+    assert(filesMatching(("case \\w+: " + "Throwable").r, Seq("src/main")) ==
       Set("src/main/scala/graft/queries/Multimodal.scala"))
+  }
+
+  test("only Artifact writes or probes an artifact completion marker") {
+    // a string literal ending in a marker name; a comment naming one
+    // (PartWriter's `_SUCCESS`) is no probe. BucketedLayout probes the
+    // `_SUCCESS` of its own `saveAsTable` write: the table is registered
+    // at the path it writes, so it cannot stage and rename, and its
+    // overwrite-mode write is safe to repeat.
+    assert(filesMatching(("(_READY|_VERSIONS|_SUCCESS)" + "\"").r,
+      Seq("src/main")) == Set("src/main/scala/graft/Artifact.scala",
+        "src/main/scala/graft/operators/BucketedLayout.scala"))
+  }
+
+  test("only Artifact places an artifact under the artifact root") {
+    assert(filesMatching(("artifact" + "Root").r, Seq("src/main")) ==
+      Set("src/main/scala/graft/Tuning.scala",
+        "src/main/scala/graft/Artifact.scala"))
   }
 }

@@ -61,10 +61,12 @@ class TuningSpec extends AnyFunSuite {
   }
 
   // The r15 lifecycle-compliance contract: every offline-build artifact
-  // (index, warehouse table, layout) roots under Tuning.artifactRoot,
-  // which without the SPARK_GRAFT_INDEX_DIR override is a PER-PROCESS
-  // directory — no run can be served an artifact a previous run built.
-  // A regression here (any dir helper reverting to a fixed /tmp path)
+  // (index, warehouse table, layout, split copy) roots under
+  // Tuning.artifactRoot, which without the SPARK_GRAFT_INDEX_DIR override
+  // is a PER-PROCESS directory — no run can be served an artifact a
+  // previous run built. Every one is placed by Artifact.dir, the only
+  // reader of artifactRoot besides Tuning (SourcePolicySpec pins that).
+  // A regression here (the key function reverting to a fixed /tmp path)
   // silently reintroduces cross-run reuse the bench rules forbid.
   test("artifactRoot is one per-process dir and all artifact dirs root there") {
     val root = Tuning.artifactRoot
@@ -75,13 +77,9 @@ class TuningSpec extends AnyFunSuite {
         "fresh per-process dir, not a fixed shared path")
     }
     val d = "/root/testdata/sf0.001"
-    val dirs = Seq(
-      graft.queries.Similarity.ivfIndexDir(d),
-      graft.queries.Similarity.detIndexDir(d),
-      graft.queries.Similarity.pqIndexDir(d),
-      graft.queries.Warehouse.cowDir(d),
-      graft.queries.Layout.bucketedNames(d)._1,
-      graft.queries.Layout.dppNames(d)._1)
+    val dirs = Seq("c16", "det8-i2", "pq8-m4-sd16-k8-i2", "cow", "cow-zs",
+      "cow-zo", "cow-bl", "dpp", "bkt", "split-lineitem")
+      .map(Artifact.dir(d, _))
     dirs.foreach(p => assert(p.startsWith(root), s"$p must root under $root"))
   }
 }

@@ -82,6 +82,15 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(c1.count() == 8)
   }
 
+  test("ensure() refuses an index whose build stopped between its writes") {
+    // corpus/ written (with Spark's _SUCCESS), centroids/ never
+    val dir = java.nio.file.Files.createTempDirectory("ivf-half").toString
+    val (assigned, _) = IvfIndex.build(corpus, nCells = 8)
+    assigned.write.partitionBy("cell").parquet(s"$dir/corpus")
+    val e = intercept[IllegalStateException](IvfIndex.ensure(corpus, 8, dir))
+    assert(e.getMessage.contains(dir))
+  }
+
   test("deterministic training is partition-invariant and covers the corpus") {
     val base = IvfIndex.trainDeterministic(corpus, nCells = 8, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
