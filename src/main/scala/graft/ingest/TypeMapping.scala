@@ -32,26 +32,6 @@ object TypeMapping {
     * /root/reference/message/message.go:112-118). */
   def supported(dt: DataType): Boolean = toClickHouse.contains(dt)
 
-  /** WRITE-side type name for an appended DataFrame column: the strict
-    * reference bijection above, widened by the read-side families a
-    * bootstrapped EXTERNAL table presents (r14 VERDICT #6 — a frame
-    * read back at [[toSparkRead]] types must be appendable: the
-    * production DB presents DateTime64/Date/Decimal/sized-int tables
-    * on bootstrap and the router appends to them). None = not
-    * JDBC-appendable (arrays, structs, binary). */
-  def toClickHouseWrite(dt: DataType): Option[String] = dt match {
-    case t if toClickHouse.contains(t) => Some(toClickHouse(t))
-    case FloatType    => Some("Float32")
-    case ByteType     => Some("Int8")
-    case ShortType    => Some("Int16")
-    case IntegerType  => Some("Int32")
-    case BooleanType  => Some("Bool")
-    case DateType     => Some("Date")
-    case TimestampType => Some("DateTime64(3)")
-    case d: DecimalType => Some(s"Decimal(${d.precision},${d.scale})")
-    case _ => None
-  }
-
   /** Strip the composable metadata wrappers clickhouse-jdbc reports in
     * TYPE_NAME (`Nullable(Float64)`, `LowCardinality(String)`, nested
     * either way) down to the inner type expression. Shared by the

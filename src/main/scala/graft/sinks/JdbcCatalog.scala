@@ -1,8 +1,8 @@
 package graft.sinks
 
 import graft.registry.ColumnDef
-import java.sql.{Connection, SQLException}
-import org.apache.spark.sql.DataFrame
+import java.sql.{Connection, PreparedStatement, SQLException, Types}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** SQL dialect seam for the JDBC catalog: ClickHouse in production (the
   * reference's target, /root/reference/db/db.go), Derby for hermetic tests
@@ -68,11 +68,18 @@ object DerbyDialect extends SqlDialect {
   *
   *  - metadata-driven bootstrap (fixes the malformed DESCRIBE, db.go:75);
   *  - quoted/validated identifiers (reference is injectable, db.go:233);
-  *  - executor-side batched INSERTs per partition (reference: one
-  *    statement per message, db.go:259-264) — each partition opens one
-  *    connection, addBatch()es its rows, executes once. At cluster scale
-  *    the write parallelism is the partition count, which a
-  *    `coalesce(n)` upstream caps to the DB's ingest-connection budget.
+  *  - one routed write per micro-batch for all its tables, with
+  *    executor-side batched INSERTs (reference: one statement per
+  *    message, db.go:259-264) — each partition opens one connection and
+  *    one prepared statement per table, addBatch()es its rows and
+  *    executes them. At cluster scale the write parallelism is the
+  *    partition count, which a `coalesce(n)` upstream caps to the DB's
+  *    ingest-connection budget.
+  *
+  * INSERTed rows are visible at once ([[atomicRoutedWrite]] is false), so
+  * the router runs its batch pass on its own before the routed write: a
+  * micro-batch is 2 Spark jobs whatever its table count. The batch marker
+  * lands after the write, so a crash between the two replays the batch.
   *
   * `connect` must be a serializable connection factory (URL-driven).
   */
@@ -102,13 +109,18 @@ final class JdbcCatalog(connect: () => Connection, dialect: SqlDialect)
   // cross-statement transactions, so ManifestCatalog remains the airtight
   // default; this closes the COMMON path (clean restart replaying the
   // last batch).
-  private def ensureBatchTable(c: Connection): Unit = {
-    val st = c.createStatement()
-    try st.execute(dialect.createTable(JdbcCatalog.BatchTable,
-      Seq(ColumnDef("batch_id", "Int64"))))
-    catch { case e: SQLException if dialect.alreadyExists(e) => () }
-    finally st.close()
-  }
+  @volatile private var batchTableReady = false
+
+  /** Create the marker table on this catalog's first use of it. */
+  private def ensureBatchTable(c: Connection): Unit =
+    if (!batchTableReady) {
+      val st = c.createStatement()
+      try st.execute(dialect.createTable(JdbcCatalog.BatchTable,
+        Seq(ColumnDef("batch_id", "Int64"))))
+      catch { case e: SQLException if dialect.alreadyExists(e) => () }
+      finally st.close()
+      batchTableReady = true
+    }
 
   override def batchCommitted(batchId: Long): Boolean = withConn { c =>
     ensureBatchTable(c)
@@ -157,62 +169,56 @@ final class JdbcCatalog(connect: () => Connection, dialect: SqlDialect)
       } finally st.close()
     }
 
-  override def append(table: String, df: DataFrame): Unit = {
-    // write-side widening (r14 VERDICT #6): a bootstrapped EXTERNAL
-    // table reads back as DateTime64/Date/Decimal/sized-int Spark types
-    // (TypeMapping.toSparkRead) and the router appends to it — fail
-    // early, by column name, on a genuinely non-appendable type
-    val cols = df.schema.fields.toSeq.map { f =>
-      val ch = graft.ingest.TypeMapping.toClickHouseWrite(f.dataType)
-        .getOrElse(throw new IllegalArgumentException(
-          s"column '${f.name}': ${f.dataType.sql} is not JDBC-appendable"))
-      ColumnDef(f.name, ch)
-    }
-    val sql = s"INSERT INTO ${dialect.quote(table)} (" +
-      cols.map(c => dialect.quote(c.name)).mkString(", ") +
-      s") VALUES (${cols.map(_ => "?").mkString(", ")})"
+  /** One job: each task with rows opens one connection and keeps one
+    * prepared statement per table it sees, flushed every 10k rows. The
+    * INSERT binds by position, as W3 checks a table's columns by position
+    * and never by name, so a bootstrapped table with other column names
+    * takes the rows. */
+  override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
+    val sql = tables.map(t =>
+      t -> s"INSERT INTO ${dialect.quote(t)} VALUES (?, ?, ?)").toMap
+    import JdbcCatalog.Insert
     val conn = connect
-    val sparkTypes = df.schema.fields.toSeq.map(_.dataType)
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+    val Seq(iTable, iClient, iDevice, iType, iD, iS) =
+      TableCatalog.RoutedColumns.map(df.schema.fieldIndex)
+    df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         val c = conn()
+        val open = scala.collection.mutable.HashMap.empty[String, Insert]
         try {
-          val ps = c.prepareStatement(sql)
-          var n = 0
           rows.foreach { r =>
-            sparkTypes.zipWithIndex.foreach { case (t, i) =>
-              import org.apache.spark.sql.types._
-              if (r.isNullAt(i)) ps.setObject(i + 1, null)
-              else t match {
-                case DoubleType => ps.setDouble(i + 1, r.getDouble(i))
-                case FloatType => ps.setFloat(i + 1, r.getFloat(i))
-                case LongType => ps.setLong(i + 1, r.getLong(i))
-                case IntegerType => ps.setInt(i + 1, r.getInt(i))
-                case ShortType => ps.setShort(i + 1, r.getShort(i))
-                case ByteType => ps.setByte(i + 1, r.getByte(i))
-                case BooleanType => ps.setBoolean(i + 1, r.getBoolean(i))
-                case TimestampType =>
-                  ps.setTimestamp(i + 1, r.getTimestamp(i))
-                case DateType => ps.setDate(i + 1, r.getDate(i))
-                case _: DecimalType =>
-                  ps.setBigDecimal(i + 1, r.getDecimal(i))
-                case _ => ps.setString(i + 1, r.getString(i))
-              }
-            }
+            val t = r.getString(iTable)
+            val in = open.getOrElseUpdate(t,
+              new Insert(c.prepareStatement(sql(t))))
+            val ps = in.ps
+            ps.setString(1, r.getString(iClient))
+            ps.setString(2, r.getString(iDevice))
+            if (r.getString(iType) == "String") ps.setString(3, r.getString(iS))
+            else if (r.isNullAt(iD)) ps.setNull(3, Types.DOUBLE)
+            else ps.setDouble(3, r.getDouble(iD))
             ps.addBatch()
-            n += 1
-            if (n % 10000 == 0) ps.executeBatch() // bound batch memory
+            in.rows += 1
+            if (in.rows % 10000 == 0) ps.executeBatch() // bound batch memory
           }
-          ps.executeBatch()
-          ps.close()
-        } finally c.close()
+          open.values.foreach(_.ps.executeBatch())
+        } finally {
+          open.values.foreach(_.ps.close())
+          c.close()
+        }
       }
     }
+    true
   }
+
+  /** No: each task's INSERTs are visible once they run. */
+  override def atomicRoutedWrite: Boolean = false
 }
 
 object JdbcCatalog {
   /** Batch-commit marker table (catalog-internal, hidden from
     * [[JdbcCatalog.listTables]]). */
   val BatchTable = "graft_batches"
+
+  /** A task's open INSERT into one table, and the rows it has batched. */
+  private final class Insert(val ps: PreparedStatement) { var rows = 0L }
 }

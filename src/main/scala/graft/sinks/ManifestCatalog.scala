@@ -551,6 +551,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   def readAt(table: String, version: Long): DataFrame =
     readSnap(fold(Some(version)), table)
 
+  /** Append `df`'s rows to `table` in one write job and one manifest
+    * commit, evolving the table's schema by any added columns. */
   override def append(table: String, df: DataFrame): Unit =
     appendAll(Map(table -> df), batchId = None)
 
@@ -903,6 +905,9 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       commitVersion(None, added)
     true
   }
+
+  /** Yes: a routed write's files stay unlisted until its commit. */
+  override def atomicRoutedWrite: Boolean = true
 
   /** Runs every batch, so it reads only the batch-id sections: the
     * checkpoint's file lists, schemas and stats grow with the table. */

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Physical destination for routed per-sensor tables — the engine's
   * abstraction over the reference's ClickHouse layer
   * (/root/reference/db/db.go). Implementations must be driver-side
-  * idempotent: `createTable` is CREATE-IF-NOT-EXISTS, `append` is a bulk
-  * (micro-batch-sized) write, never the reference's one-INSERT-per-row
+  * idempotent: `createTable` is CREATE-IF-NOT-EXISTS, `appendRouted` is a
+  * bulk (micro-batch-sized) write, never the reference's one-INSERT-per-row
   * (/root/reference/db/db.go:259-264).
   */
 trait TableCatalog {
@@ -20,23 +20,35 @@ trait TableCatalog {
   /** W4 — auto-DDL from an inferred schema
     * (/root/reference/db/db.go:226-243). */
   def createTable(table: String, cols: Seq[ColumnDef]): Unit
-  /** W5 — bulk append one micro-batch's rows for one table. */
-  def append(table: String, df: DataFrame): Unit
-  /** W5, many-table fast path: append a routed frame with columns
+  /** W5 — append a routed frame with columns
     * [[TableCatalog.RoutedColumns]] — `(tableName, client, device,
     * value_type, value_d, value_s)` — spanning `tables` in ONE write job;
     * each table gets `(client, device, value)`, `value` read from
     * `value_d` or `value_s` by the row's value type. At high sensor
     * cardinality this is the difference between one job per batch and
-    * N-tables jobs per batch.
-    *
-    * The frame is read at most once, in that one job: the router's
-    * frame is its batch pass ([[TableRouter]]), whose tasks also count
-    * the batch and write its rejected rows while the write reads them, so
-    * a steady-state batch is this one job. Returns false, without reading
-    * `df`, if this catalog can't: the router then runs the pass on its own
-    * and falls back to per-table [[append]] (JDBC). */
-  def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = false
+    * N-tables jobs per batch. The frame is read once, in that job.
+    * Returns true once the rows are written; the router does not read
+    * the result, which `perfbench`'s timing wrapper forwards. */
+  def appendRouted(df: DataFrame, tables: Seq[String]): Boolean
+
+  /** Do the rows of an [[appendRouted]] stay invisible until that write
+    * succeeds? If so, the router hands the write its batch pass as the
+    * frame ([[TableRouter]]): the pass's tasks also count the batch and
+    * write its rejected rows, so a steady-state batch is one job, and a
+    * failure anywhere in it leaves no routed row visible. If not, the
+    * pass runs on its own first, so a failed rejected-row write fails the
+    * batch before any routed row lands (a replay would duplicate them).
+    * Each catalog states it; the default, true, serves wrappers of
+    * [[ManifestCatalog]] that forward only the calls they time
+    * (`perfbench`'s `TimedCatalog`). */
+  def atomicRoutedWrite: Boolean = true
+
+  /** A one-table append outside the routed protocol: the router never
+    * calls it. [[ManifestCatalog]] implements it; it stays on the trait
+    * because `perfbench`'s `TimedCatalog` overrides it. */
+  def append(table: String, df: DataFrame): Unit =
+    throw new UnsupportedOperationException(
+      s"${getClass.getSimpleName} has no one-table append")
 
   /** Exactly-once support: has this streaming batch already been fully
     * appended? foreachBatch re-runs a batch after a crash/restart; a
@@ -95,18 +107,4 @@ object ClickHouseSql {
     s"CREATE TABLE IF NOT EXISTS ${quoteIdent(table)} ($colSql) " +
       "ENGINE = MergeTree() ORDER BY tuple()"
   }
-
-  /** Reference `writeData` (/root/reference/db/db.go:246-271) — same
-    * parameterized INSERT shape, executed once per micro-batch with JDBC
-    * `addBatch`, not once per row. */
-  def insert(table: String, cols: Seq[ColumnDef]): String = {
-    val names = cols.map(c => quoteIdent(c.name)).mkString(", ")
-    val marks = cols.map(_ => "?").mkString(", ")
-    s"INSERT INTO ${quoteIdent(table)} ($names) VALUES ($marks)"
-  }
-
-  def describeTable(table: String): String =
-    s"DESCRIBE TABLE ${quoteIdent(table)}"
-
-  val showTables: String = "SHOW TABLES"
 }

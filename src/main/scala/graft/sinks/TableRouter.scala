@@ -4,7 +4,7 @@ import graft.ingest.Ingest
 import graft.registry.{ColumnDef, SchemaRegistry}
 import java.util.concurrent.{Callable, ExecutionException, Future}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, InternalFrames}
+import org.apache.spark.sql.{DataFrame, InternalFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
@@ -32,15 +32,17 @@ final case class RouteStats(
   *     (reference would kill the pipeline);
   *   - catalog miss → W4 auto-DDL with the batch-inferred schema, then
   *     registry insert;
-  *   - then W5 bulk append of the typed per-table slice.
+  *   - then W5 bulk append of every table's rows in routed writes.
   *
-  * A batch whose tables are all registered already costs ONE Spark job:
-  * the batch pass ([[TableRouter.countBatch]]'s task body) counts the
-  * batch by `(valid, tableName, value_type)`, writes its invalid rows to
-  * the rejected directory, and hands every row whose table takes its
-  * value type to the catalog's routed write, as the frame that write
-  * reads. Rows of new tables, of mismatched types and of refused names
-  * are decided afterwards, from the counts.
+  * A batch whose tables are all registered already costs ONE Spark job
+  * on a catalog whose routed write is atomic: the batch pass
+  * ([[TableRouter.countBatch]]'s task body) counts the batch by
+  * `(valid, tableName, value_type)`, writes its invalid rows to the
+  * rejected directory, and hands every row whose table takes its value
+  * type to the catalog's routed write, as the frame that write reads.
+  * Rows of new tables, of mismatched types and of refused names are
+  * decided afterwards, from the counts. Any batch costs at most two jobs:
+  * the pass, then one routed write for the tables it left.
   *
   * The only driver-side data are those counts and the part-file names
   * of the routed write — cardinality = number of distinct sensors,
@@ -74,14 +76,13 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
   def isCommitted(batchId: Long): Boolean =
     batchId >= 0 && catalog.batchCommitted(batchId)
 
-  // shared bounded pool for a batch's side writes (the schema-reject
-  // sink, per-table fallback appends) — routeBatch runs per micro-batch
-  // and must not churn a fresh thread pool on the hot path
-  private lazy val appendPool =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      TableRouter.AppendThreads,
+  // runs a batch's schema-reject sink write alongside its last routed
+  // write — routeBatch runs per micro-batch and must not churn a fresh
+  // thread on the hot path
+  private lazy val sinkPool =
+    java.util.concurrent.Executors.newSingleThreadExecutor(
       (r: Runnable) => {
-        val t = new Thread(r, "router-append"); t.setDaemon(true); t
+        val t = new Thread(r, "router-reject-sink"); t.setDaemon(true); t
       })
 
   private def colsFor(chType: String): Seq[ColumnDef] = Seq(
@@ -106,20 +107,21 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     * frame of records (no `valid` column: every row is valid). A batch
     * the catalog has committed already is skipped whole.
     *
-    * After [[TableCatalog.beginBatch]] the batch pass runs as the frame of
-    * ONE [[TableCatalog.appendRouted]] call (when any table is registered;
-    * otherwise it runs on its own): its tasks count the batch,
-    * write its invalid rows into `rejectedDir`, and route every valid row
-    * whose table is registered with that value type. A catalog without a
-    * routed write (JDBC) leaves that frame unread; the pass then runs on
-    * its own ([[TableRouter.countBatch]]) and every table is appended
-    * below. `check` sees the counts before any DDL: a throw fails the
-    * batch before its commit (files the pass wrote stay unlisted, for
+    * After [[TableCatalog.beginBatch]] the batch pass counts the batch and
+    * writes its invalid rows into `rejectedDir`. On a catalog whose routed
+    * write is atomic ([[TableCatalog.atomicRoutedWrite]]), with any table
+    * registered, the pass runs as the frame of ONE
+    * [[TableCatalog.appendRouted]] call and routes every valid row whose
+    * table is registered with that value type. Otherwise it runs on its
+    * own, so its rejected-row write succeeds before any routed row lands.
+    * `check` sees the counts before any DDL: a throw fails the batch
+    * before its commit (files the pass wrote stay unlisted, for
     * [[ManifestCatalog.vacuum]]).
     *
     * The rows the pass did not route are decided from its counts: a new
-    * table gets its DDL and one more `appendRouted` over `batch`;
-    * mismatched slices and refused names go to the schema-reject sink.
+    * table gets its DDL, and every table with rows left gets them in one
+    * more `appendRouted` over `batch`; mismatched slices and refused
+    * names go to the schema-reject sink.
     * All writes finish before `commitBatch`, and any failure skips the
     * commit and is rethrown. `batch` is read again only for those rows,
     * and is not cached here. */
@@ -132,7 +134,7 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     // commitBatch below — rows + batch id become visible atomically
     if (batchId >= 0) catalog.beginBatch(batchId)
     val writes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-    def submit(body: => Unit): Unit = writes += appendPool.submit(
+    def submit(body: => Unit): Unit = writes += sinkPool.submit(
       new Callable[Unit] { def call(): Unit = body })
     val stats = try {
       // the value types each registered table takes, as W3 decides them
@@ -141,12 +143,15 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
           registry.get(t).map(cols => t -> Set("Float64", "String")
             .filter(vt => registry.checkValid(cols, colsFor(vt)).isEmpty))
         }.filter(_._2.nonEmpty).toMap
-      val pass = TableRouter.pass(batch, rejectedDir, takes)
       // with no table registered the pass routes nothing: it runs on its
       // own, so no catalog is handed a table-less write it could skip
-      val routed = takes.nonEmpty &&
-        catalog.appendRouted(pass.frame, takes.keys.toSeq.sorted)
-      val counts = if (routed) pass.counts() else pass.run()
+      val routed = takes.nonEmpty && catalog.atomicRoutedWrite
+      val counts =
+        if (routed) {
+          val pass = TableRouter.pass(batch, rejectedDir, takes)
+          catalog.appendRouted(pass.frame, takes.keys.toSeq.sorted)
+          pass.counts()
+        } else TableRouter.countBatch(batch, rejectedDir)
       check(counts)
       // rows of the batch, for the slices the pass left
       lazy val records =
@@ -157,7 +162,7 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
       val rejected = scala.collection.mutable.Map.empty[String, Long]
       val badNames = scala.collection.mutable.Map.empty[String, Long]
       val appendTasks = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, String)] // (table, vt, valueCol)
+        .empty[(String, String)] // (table, vt)
 
       // Phase 1 (serial, driver): name policy + DDL + schema decisions —
       // cheap, order-sensitive (first sight fixes the schema).
@@ -169,22 +174,17 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
           // db/db.go:187-195). Within one batch arrival order is
           // undefined, so the engine picks deterministically: the most
           // frequent type, ties broken alphabetically.
-          val tableType: String = registry.get(table) match {
-            case Some(cols) => cols.last.chType
-            case None =>
-              val chosen = groups.maxBy(g => (g._3, g._2.head * -1))._2
-              catalog.createTable(table, colsFor(chosen))
-              registry.put(table, colsFor(chosen))
-              chosen
+          if (!registry.contains(table)) {
+            val chosen = groups.maxBy(g => (g._3, g._2.head * -1))._2
+            catalog.createTable(table, colsFor(chosen))
+            registry.put(table, colsFor(chosen))
           }
           groups.foreach { case (_, vt, n) =>
             registry.checkValid(
                 registry.get(table).get, colsFor(vt)) match {
               case None =>
-                val valueCol =
-                  if (tableType == "String") "value_s" else "value_d"
                 if (!(routed && takes.get(table).exists(_(vt))))
-                  appendTasks += ((table, vt, valueCol))
+                  appendTasks += ((table, vt))
                 appended(table) = appended.getOrElse(table, 0L) + n
               case Some(_) =>
                 rejected(table) = rejected.getOrElse(table, 0L) + n
@@ -209,25 +209,17 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
         }
 
       // Phase 2: the slices the pass did not write — ONE routed write for
-      // every new table and both value types (validated tasks always have
-      // vt == table type). Catalogs without a routed write (JDBC) fall
-      // back to one append per table, on the pool.
+      // every such table and both value types (validated tasks always
+      // have vt == table type).
       if (appendTasks.nonEmpty) {
         val cond = appendTasks.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (vt, tasks) =>
             col("value_type") === vt &&
               col("tableName").isInCollection(tasks.map(_._1))
           }.reduce(_ || _)
-        val routedDf = records.filter(cond)
-          .select(TableCatalog.RoutedColumns.map(col): _*)
-        if (!catalog.appendRouted(routedDf, appendTasks.map(_._1).toSeq))
-          appendTasks.foreach { case (table, vt, valueCol) =>
-            submit(catalog.append(table,
-              records.filter(col("tableName") === table &&
-                  col("value_type") === vt)
-                .select(col("client"), col("device"),
-                  col(valueCol).as("value"))))
-          }
+        catalog.appendRouted(
+          records.filter(cond).select(TableCatalog.RoutedColumns.map(col): _*),
+          appendTasks.map(_._1).toSeq)
       }
       RouteStats(appended.toMap, rejected.toMap, badNames.toMap)
     } catch { case NonFatal(e) =>
@@ -257,9 +249,6 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
 }
 
 object TableRouter {
-  /** Threads of a router's pool for a batch's side writes. */
-  private val AppendThreads = 4
-
   /** `(tableName, value_type, rows)`, sorted: one batch's routing input. */
   type Histogram = Seq[(String, String, Long)]
 
@@ -289,11 +278,13 @@ object TableRouter {
   /** The batch pass over one frame, not yet run. `frame` holds the
     * routed rows, [[TableCatalog.RoutedColumns]], and is read at most
     * once: reading it runs the pass. */
-  private final class Pass(val frame: DataFrame, rows: RDD[InternalRow],
-      perTask: CollectionAccumulator[Map[Key, Long]]) {
+  private final class Pass(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType, perTask: CollectionAccumulator[Map[Key, Long]]) {
+    lazy val frame: DataFrame = InternalFrames.of(spark, rows, schema)
+
     /** Run the pass on its own, dropping the routed rows. */
     def run(): BatchCounts = {
-      PartWriter.withSqlConfs(frame.sparkSession)(rows.foreach(_ => ()))
+      PartWriter.withSqlConfs(spark)(rows.foreach(_ => ()))
       counts()
     }
 
@@ -364,9 +355,9 @@ object TableRouter {
         }
       }
     }
-    new Pass(InternalFrames.of(df.sparkSession, rows,
-      StructType(selected.schema.take(TableCatalog.RoutedColumns.size))),
-      rows, perTask)
+    new Pass(df.sparkSession, rows,
+      StructType(selected.schema.take(TableCatalog.RoutedColumns.size)),
+      perTask)
   }
 
   /** Count `df` by `(valid, tableName, value_type)` in ONE Spark job with

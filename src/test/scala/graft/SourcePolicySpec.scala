@@ -9,8 +9,9 @@ import scala.util.matching.Regex
   * publishing and the sinks' file writes each live in one module: no
   * other source file builds a session, implements the accounting
   * callbacks, releases a query module's memo by hand or keeps a
-  * completion marker, no sink writes a DataFrame, and no sink reads
-  * parquet but through the manifest's file index. The patterns are split so
+  * completion marker, no sink writes a DataFrame, no sink reads
+  * parquet but through the manifest's file index, and only the JDBC
+  * catalog writes SQL rows. The patterns are split so
   * this file does not match them itself. */
 class SourcePolicySpec extends AnyFunSuite {
   private val root: Path =
@@ -55,6 +56,11 @@ class SourcePolicySpec extends AnyFunSuite {
     // `catalog.read(table)` calls are no reader
     assert(filesMatching(("\\.read" + "\\b(?!\\s*\\()").r,
       Seq("src/main/scala/graft/sinks")).isEmpty)
+  }
+
+  test("only the JDBC catalog writes SQL INSERT statements") {
+    assert(filesMatching(("INSERT" + " INTO").r, Seq("src/main")) ==
+      Set("src/main/scala/graft/sinks/JdbcCatalog.scala"))
   }
 
   test("only the image decoder catches fatal errors") {

@@ -243,14 +243,23 @@ class ClickHouseRoundTripSpec extends AnyFunSuite {
     assert(catalog.describe("temp_1") == Seq(ColumnDef("value", "Float64")))
   }
 
-  test("append batches typed INSERTs with quoted identifiers") {
+  test("appendRouted binds setDouble/setString per table, quoted") {
     FakeClickHouse.reset()
     import spark.implicits._
-    val df = Seq(("c1", "d1", 27.8), ("c1", "d2", 19.1), ("c2", "d1", 3.0))
-      .toDF("client", "device", "value")
-    catalog.append("temp_out", df)
-    assert(FakeClickHouse.insertSql.peek() ==
-      "INSERT INTO `temp_out` (`client`, `device`, `value`) VALUES (?, ?, ?)")
+    val df = Seq(
+      ("temp_out", "c1", "d1", "Float64", Option(27.8), Option.empty[String]),
+      ("door-1", "c1", "d2", "String", Option.empty[Double], Option("open")),
+      ("temp_out", "c2", "d1", "Float64", Option(3.0), Option.empty[String]))
+      .toDF(TableCatalog.RoutedColumns: _*).coalesce(1)
+    assert(catalog.appendRouted(df, Seq("door-1", "temp_out")))
+    val sql = {
+      val it = FakeClickHouse.insertSql.iterator()
+      val b = ArrayBuffer.empty[String]
+      while (it.hasNext) b += it.next()
+      b.toSet
+    }
+    assert(sql == Set("INSERT INTO `temp_out` VALUES (?, ?, ?)",
+      "INSERT INTO `door-1` VALUES (?, ?, ?)"))
     val rows = {
       val it = FakeClickHouse.inserted.iterator()
       val b = ArrayBuffer.empty[Seq[Any]]
@@ -258,55 +267,17 @@ class ClickHouseRoundTripSpec extends AnyFunSuite {
       b.sortBy(_.toString())
     }
     assert(rows.toSeq == Seq(
-      Seq("c1", "d1", 27.8), Seq("c1", "d2", 19.1), Seq("c2", "d1", 3.0)))
-    // Float64 went through setDouble (a Double, not a string)
+      Seq("c1", "d1", 27.8), Seq("c1", "d2", "open"), Seq("c2", "d1", 3.0)))
+    // Float64 went through setDouble (a Double, not a string), String
+    // through setString
     assert(rows.head(2).isInstanceOf[java.lang.Double])
-  }
-
-  test("append binds DateTime64/Decimal/Date/Int32 via typed setters " +
-      "(bootstrapped external-table write path)") {
-    // r14 VERDICT #6: the production DB presents DateTime64/Decimal
-    // tables on bootstrap (read back as Timestamp/Decimal Spark types,
-    // TypeMapping.toSparkRead) and the router appends to them — the
-    // INSERT parameters must go through setTimestamp/setBigDecimal,
-    // never a stringly setString (ClickHouse JDBC rejects a VARCHAR
-    // bind against DateTime64) and never a getString ClassCastException
-    FakeClickHouse.reset()
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val df = Seq((1, "2021-11-24 20:27:23.123", "12345.6789", "2021-11-24"))
-      .toDF("i", "ts", "dec", "dt")
-      .select(col("i"),
-        col("ts").cast("timestamp").as("ts"),
-        col("dec").cast("decimal(18,4)").as("dec"),
-        col("dt").cast("date").as("dt"))
-    catalog.append("ext_metrics", df)
-    assert(FakeClickHouse.insertSql.peek() ==
-      "INSERT INTO `ext_metrics` (`i`, `ts`, `dec`, `dt`) VALUES (?, ?, ?, ?)")
-    val row = FakeClickHouse.inserted.peek()
-    assert(row(0).isInstanceOf[java.lang.Integer])
-    assert(row(1).isInstanceOf[java.sql.Timestamp])
-    assert(row(2).isInstanceOf[java.math.BigDecimal])
-    assert(row(2).asInstanceOf[java.math.BigDecimal]
-      .compareTo(new java.math.BigDecimal("12345.6789")) == 0)
-    assert(row(3).isInstanceOf[java.sql.Date])
     val used = {
       val it = FakeClickHouse.setters.iterator()
       val b = ArrayBuffer.empty[String]
       while (it.hasNext) b += it.next()
-      b.toSet
+      b.groupMapReduce(identity)(_ => 1)(_ + _)
     }
-    assert(used == Set("setInt", "setTimestamp", "setBigDecimal", "setDate"),
-      s"unexpected setter set: $used")
-  }
-
-  test("append fails early, by column name, on a non-appendable type") {
-    FakeClickHouse.reset()
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val df = Seq((1L, Array(1.0f, 2.0f))).toDF("id", "emb")
-    val e = intercept[IllegalArgumentException](catalog.append("t", df))
-    assert(e.getMessage.contains("'emb'"))
-    assert(FakeClickHouse.insertSql.isEmpty, "no INSERT must be attempted")
+    assert(used == Map("setString" -> 7, "setDouble" -> 2),
+      s"unexpected setters: $used")
   }
 }

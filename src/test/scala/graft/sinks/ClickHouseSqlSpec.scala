@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL text generation for the ClickHouse path: identifier safety (the
   * reference string-concats attacker-controllable topic segments into DDL,
-  * db/db.go:233, :259-262) and statement shapes. */
+  * db/db.go:233, :259-262) and the DDL's shape. */
 class ClickHouseSqlSpec extends AnyFunSuite {
   private val cols = Seq(ColumnDef("client", "String"),
     ColumnDef("device", "String"), ColumnDef("value", "Float64"))
@@ -15,16 +15,6 @@ class ClickHouseSqlSpec extends AnyFunSuite {
     assert(sql == "CREATE TABLE IF NOT EXISTS `temp_out` " +
       "(`client` String, `device` String, `value` Float64) " +
       "ENGINE = MergeTree() ORDER BY tuple()")
-  }
-
-  test("insert: parameterized, batched shape") {
-    assert(ClickHouseSql.insert("t", cols) ==
-      "INSERT INTO `t` (`client`, `device`, `value`) VALUES (?, ?, ?)")
-  }
-
-  test("describe is well-formed (reference bug db.go:75 not replicated)") {
-    assert(ClickHouseSql.describeTable("temp_out") ==
-      "DESCRIBE TABLE `temp_out`")
   }
 
   test("injection attempts via table/column names are refused") {
@@ -37,7 +27,7 @@ class ClickHouseSqlSpec extends AnyFunSuite {
         ClickHouseSql.createTable(name, cols)
       }
       intercept[IllegalArgumentException] {
-        ClickHouseSql.insert("ok", Seq(ColumnDef(name, "String")))
+        ClickHouseSql.createTable("ok", Seq(ColumnDef(name, "String")))
       }
     }
   }

@@ -2,9 +2,44 @@ package graft.sinks
 
 import graft.TestSpark
 import graft.ingest.Ingest
+import graft.obs.QueryMetrics
 import graft.registry.SchemaRegistry
-import java.sql.DriverManager
+import java.lang.reflect.{InvocationTargetException, Method, Proxy}
+import java.sql.{Connection, DriverManager, Statement}
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.concurrent.TrieMap
+
+/** Derby connections that count, per database URL, the statements that
+  * create the batch-marker table. */
+object MarkerCreates {
+  val counts = TrieMap.empty[String, AtomicInteger]
+
+  private def proxy[T](iface: Class[T])(
+      f: (Method, Array[AnyRef]) => AnyRef): T =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(iface),
+      (_: AnyRef, m: Method, a: Array[AnyRef]) => f(m, a)).asInstanceOf[T]
+
+  private def call(real: AnyRef, m: Method, a: Array[AnyRef]): AnyRef =
+    try m.invoke(real, (if (a == null) Array.empty[AnyRef] else a): _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+
+  def connect(url: String): Connection = {
+    val n = counts.getOrElseUpdate(url, new AtomicInteger)
+    val c = DriverManager.getConnection(url)
+    proxy(classOf[Connection]) { (m, a) =>
+      val out = call(c, m, a)
+      if (m.getName != "createStatement") out
+      else proxy(classOf[Statement]) { (sm, sa) =>
+        if (sm.getName.startsWith("execute") && sa != null &&
+            sa(0).toString.startsWith("CREATE TABLE") &&
+            sa(0).toString.contains(JdbcCatalog.BatchTable))
+          n.incrementAndGet()
+        call(out, sm, sa)
+      }
+    }
+  }
+}
 
 /** The router against a REAL SQL database (embedded Derby, the only one
   * shipping with Spark): metadata bootstrap, auto-DDL, executor-side
@@ -156,6 +191,69 @@ class JdbcCatalogSpec extends AnyFunSuite {
       val rs = c.createStatement()
         .executeQuery("""SELECT COUNT(*) FROM "hum"""")
       rs.next(); assert(rs.getInt(1) == 2)
+    } finally c.close()
+  }
+
+  test("a bootstrapped table with other column names takes routed rows") {
+    // W3 compares a table's columns by position only, so the INSERT must
+    // bind by position too
+    val (catalog, url) = freshDb()
+    val c = DriverManager.getConnection(url)
+    try c.createStatement().execute(
+      """CREATE TABLE "ext" ("a" VARCHAR(64), "b" VARCHAR(64), "c" DOUBLE)""")
+    finally c.close()
+    val router = new TableRouter(new SchemaRegistry, catalog)
+    router.bootstrap()
+    val stats = router.routeBatch(batchOf(
+      ("/c1/d1/out/sensors/ext", """{"value":1.5}""")), batchId = 0L)
+    assert(stats.appended == Map("ext" -> 1L))
+    val c2 = DriverManager.getConnection(url)
+    try {
+      val rs = c2.createStatement()
+        .executeQuery("""SELECT "a", "b", "c" FROM "ext"""")
+      assert(rs.next()); assert(rs.getString(1) == "c1")
+      assert(rs.getString(2) == "d1"); assert(rs.getDouble(3) == 1.5)
+      assert(!rs.next())
+    } finally c2.close()
+  }
+
+  test("the marker table is created once per catalog, not per batch") {
+    val (_, url) = freshDb()
+    val catalog = new JdbcCatalog(() => MarkerCreates.connect(url),
+      DerbyDialect)
+    val router = new TableRouter(new SchemaRegistry, catalog)
+    (0L until 3L).foreach { b =>
+      router.routeBatch(batchOf(
+        ("/c/d/out/sensors/mk", s"""{"value":$b.5}""")), batchId = b)
+    }
+    assert(catalog.batchCommitted(2L))
+    assert(MarkerCreates.counts(url).get <= 1,
+      s"marker CREATEs: ${MarkerCreates.counts(url).get}")
+  }
+
+  test("a batch into 20 tables runs 2 jobs, creating them or not") {
+    // the batch pass, then one routed write for every table
+    val (catalog, url) = freshDb()
+    val router = new TableRouter(new SchemaRegistry, catalog)
+    val metrics = QueryMetrics.install(spark.sparkContext)
+    def jobs(batchId: Long): Long = {
+      val batch = batchOf((0 until 200).map(i =>
+        (s"/c/d${i % 7}/out/sensors/t${i % 20}", s"""{"value":$i.5}""")): _*)
+      metrics.reset()
+      val stats = router.routeBatch(batch, batchId)
+      val n = metrics.snapshot().jobs
+      assert(stats.appended == (0 until 20).map(t => s"t$t" -> 10L).toMap)
+      n
+    }
+    try {
+      assert(jobs(0L) == 2, "a batch that creates its tables")
+      assert(jobs(1L) == 2, "a batch into existing tables")
+    } finally metrics.close()
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement()
+        .executeQuery("""SELECT COUNT(*) FROM "t7"""")
+      rs.next(); assert(rs.getInt(1) == 20)
     } finally c.close()
   }
 }

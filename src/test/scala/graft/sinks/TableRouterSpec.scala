@@ -142,9 +142,9 @@ class TableRouterSpec extends AnyFunSuite {
       def describe(table: String): Seq[ColumnDef] = inner.describe(table)
       def createTable(table: String, cols: Seq[ColumnDef]): Unit =
         inner.createTable(table, cols)
-      def append(table: String, df: DataFrame): Unit = inner.append(table, df)
-      override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean =
+      def appendRouted(df: DataFrame, tables: Seq[String]): Boolean =
         tables.isEmpty || inner.appendRouted(df, tables)
+      override def atomicRoutedWrite: Boolean = inner.atomicRoutedWrite
       override def batchCommitted(batchId: Long): Boolean =
         inner.batchCommitted(batchId)
       override def beginBatch(batchId: Long): Unit = inner.beginBatch(batchId)

@@ -223,10 +223,9 @@ class IngestPipelineSpec extends AnyFunSuite {
       def createTable(table: String,
           cols: Seq[graft.registry.ColumnDef]): Unit =
         throw new IllegalStateException("ddl")
-      def append(table: String, df: org.apache.spark.sql.DataFrame): Unit =
-        catalog.append(table, df)
-      override def appendRouted(df: org.apache.spark.sql.DataFrame,
+      def appendRouted(df: org.apache.spark.sql.DataFrame,
           tables: Seq[String]): Boolean = catalog.appendRouted(df, tables)
+      override def atomicRoutedWrite: Boolean = catalog.atomicRoutedWrite
       override def batchCommitted(batchId: Long): Boolean =
         catalog.batchCommitted(batchId)
       override def beginBatch(batchId: Long): Unit =
